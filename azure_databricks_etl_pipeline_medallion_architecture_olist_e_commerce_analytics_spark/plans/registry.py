@@ -12,16 +12,28 @@ implements those semantics on stock PySpark:
 - Dependencies are discovered *by execution*: a body calls
   ``ctx.read("silver.orders")`` which recursively resolves the upstream
   dataset (memoized), so the DAG is walked depth-first in exact topological
-  order with cycle detection — the same name-reference model DLT uses.
+  order with cycle detection — the same name-reference model DLT uses. The
+  resolver records which datasets each body read; that record is the DAG.
 - Two materialization modes:
   * ``views`` (default): every dataset is a lazy DataFrame; nothing touches
     disk. Catalyst sees the WHOLE pipeline as one logical plan per output, so
     cross-layer optimizations (filter pushdown through silver into the bronze
     scan, column pruning across the medallion) happen for free. At 100 TB this
     is the mode you run ad-hoc queries in.
-  * ``tables``: each table/MV dataset is written to the warehouse
-    (parquet ``saveAsTable``; Delta when the jars are present) and downstream
-    reads hit storage — the incremental/production mode.
+  * ``tables`` (:meth:`Pipeline.run`): each table/MV dataset is written to
+    the warehouse (parquet ``saveAsTable``; Delta when the jars are present).
+    Downstream datasets are still computed from the resolved lineage, not
+    from the written files; the tables are the run's outputs.
+
+``Pipeline.run`` works like a DLT update. It resolves every dataset on the
+calling thread, in registration order, and hands each table/MV to a thread
+pool as soon as it is resolved and every table it reads (looking through
+views) has been written. Its fail gate and write then run beside those of
+other datasets, so independent bronze, silver and gold datasets refresh at
+the same time. The pool has ``defaultParallelism`` threads. After the first
+failure no further dataset starts; the ones already running finish, and the
+first exception (e.g. :class:`ExpectationViolation`) is raised. Downstream
+datasets of a failed one are therefore never written.
 
 Streaming tables (``streaming=True``) execute in batch-incremental mode here
 (``availableNow`` parity — identical results); the true-streaming runner lives
@@ -31,10 +43,13 @@ in ``streaming/incremental.py``.
 from __future__ import annotations
 
 import re
+import time
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 from .expectations import (
     DROP,
@@ -91,6 +106,7 @@ class _Resolver:
         self.spark = spark
         self.cache: dict[str, DataFrame] = {}
         self.stack: list[str] = []
+        self.reads: dict[str, set[str]] = {}  # dataset -> datasets its body read
 
     # --- the ctx API exposed to dataset bodies -------------------------
     def read(self, name: str) -> DataFrame:
@@ -118,6 +134,8 @@ class _Resolver:
             raise KeyError(
                 f"unknown dataset {name!r}; registered: {sorted(self.pipeline._defs)}"
             )
+        if self.stack:
+            self.reads.setdefault(self.stack[-1], set()).add(key)
         if key in self.cache:
             return self.cache[key]
         if key in self.stack:
@@ -135,6 +153,16 @@ class _Resolver:
         df = apply_expectations(df, d.expectations)
         self.cache[key] = df
         return df
+
+    def upstream_tables(self, key: str) -> set[str]:
+        """Tables and MVs a resolved dataset reads, seen through views."""
+        out: set[str] = set()
+        for dep in self.reads.get(key, ()):
+            if self.pipeline._defs[dep].kind == "view":
+                out |= self.upstream_tables(dep)
+            else:
+                out.add(dep)
+        return out
 
     def _run_sql(self, d: DatasetDef) -> DataFrame:
         """Execute a SQL dataset body, resolving ``LIVE.x`` / ``schema.x`` refs.
@@ -334,23 +362,30 @@ class Pipeline:
         collect_metrics: bool = True,
         fmt: str = "parquet",
     ) -> dict:
-        """Materialize every table/MV dataset in dependency order.
+        """Materialize every table/MV dataset, upstream tables first.
 
         Tables append-or-overwrite as parquet managed tables under the Spark
         warehouse (Delta when available — see sources/sinks.py); views stay
-        virtual. Returns per-dataset row counts and expectation metrics.
+        virtual. Datasets are resolved here, in registration order, and
+        written on a pool of ``defaultParallelism`` threads as soon as every
+        table they read is written (module docstring: schedule and failure
+        rule). Returns, in registration order, per-dataset row counts,
+        expectation metrics, and ``start_s``/``end_s``: seconds from the start
+        of the run to the start and end of the dataset's fail gate and write.
 
         Full-refresh semantics for MVs mirror the reference's gold layer
         ("Materialized views / Full Refresh", docs/pipeline-flow.png).
         """
         from ..sources.sinks import write_table  # late import to avoid cycle
 
-        resolver = _Resolver(self, spark)
-        report: dict[str, dict] = {}
-        for d in self._defs.values():
-            if d.kind == "view":
-                continue
-            df = resolver.read(d.name)
+        t0 = time.perf_counter()
+        targets = [d for d in self._defs.values() if d.kind != "view"]
+        for schema in dict.fromkeys(d.name.rpartition(".")[0] for d in targets):
+            if schema:  # once per schema, before any write starts
+                spark.sql(f"CREATE DATABASE IF NOT EXISTS `{schema}`")
+
+        def materialize(d: DatasetDef, df: DataFrame) -> dict:
+            start = time.perf_counter() - t0
             # fail gate runs on the UN-observed plan: its isEmpty probe
             # short-circuits, which would freeze an observation at partial
             # counts (see observe_expectations docstring)
@@ -363,17 +398,55 @@ class Pipeline:
             n = write_table(
                 spark, df, d, warehouse=warehouse, fmt=fmt, count=obs is None
             )
-            entry: dict = {}
+            end = time.perf_counter() - t0
+            entry: dict = {"rows": n}
             if obs is not None:
                 m = obs.get
                 entry["rows"] = int(m["__rows"])
                 warn_counts = {k: int(v or 0) for k, v in m.items() if k != "__rows"}
                 if warn_counts:
                     entry["expectations"] = warn_counts
-            else:
-                entry["rows"] = n
-            report[d.name] = entry
-        return report
+            entry.update(start_s=start, end_s=end)
+            return entry
+
+        # pool threads take the caller's job group / description, so a
+        # cancel of the caller's jobs also reaches the writes
+        task = inheritable_thread_target(spark)(materialize)
+        resolver = _Resolver(self, spark)
+        waiting: list[tuple[DatasetDef, DataFrame, set[str]]] = []
+        running: dict = {}  # future -> dataset name
+        written: dict[str, dict] = {}
+        errors: list[BaseException] = []
+
+        def settle(timeout: float | None) -> None:
+            """Collect finished writes, then start every dataset whose
+            upstream tables are all written — unless one has failed."""
+            done, _ = wait(running, timeout=timeout, return_when=FIRST_COMPLETED)
+            for fut in done:
+                name = running.pop(fut)
+                if fut.exception() is not None:
+                    errors.append(fut.exception())
+                else:
+                    written[name] = fut.result()
+            if errors:
+                return
+            for item in [w for w in waiting if w[2].issubset(written)]:
+                waiting.remove(item)
+                d, df, _ = item
+                running[pool.submit(task, d, df)] = d.name
+
+        with ThreadPoolExecutor(spark.sparkContext.defaultParallelism) as pool:
+            for d in targets:
+                df = resolver.read(d.name)
+                waiting.append((d, df, resolver.upstream_tables(d.name)))
+                settle(timeout=0)
+                if errors:
+                    break
+            while running:
+                settle(timeout=None)
+        if errors:
+            raise errors[0]
+        return {d.name: written[d.name] for d in targets}
 
 
 def _table_ident(key: str) -> str:

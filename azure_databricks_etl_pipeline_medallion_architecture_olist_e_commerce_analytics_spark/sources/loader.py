@@ -36,13 +36,27 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _file_stamp(path: str) -> tuple[int, int] | None:
+    """``(st_mtime_ns, st_size)`` of a path, or None if it is missing.
+
+    The nanosecond mtime is exact where the float of ``os.path.getmtime``
+    rounds to about 0.2 µs, and the size catches an overwrite that lands on
+    the same timestamp tick.
+    """
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size)
+
+
 @lru_cache(maxsize=256)
-def _nano_ts_columns_at(path: str, mtime: float) -> tuple[str, ...]:
+def _nano_ts_columns_at(path: str, stamp: tuple | None) -> tuple[str, ...]:
     """Columns stored as parquet TIMESTAMP(NANOS) (footer-only read, cached).
 
     ``path`` is a concrete part FILE (resolution from a table directory
     happens in ``_nano_ts_columns``) and the cache key is that file's own
-    mtime, so a table regenerated at the same path within one session never
+    stamp, so a table regenerated at the same path within one session never
     serves stale footer metadata — including dynamic partition overwrites
     that replace part files inside an existing hive subdirectory without
     bumping the table root's mtime (same staleness class the side-artifact
@@ -62,26 +76,25 @@ def _nano_ts_columns(path: str) -> tuple[str, ...]:
     """Resolve a table path (file or directory) and read its NANOS columns.
 
     For a directory of part files the footer of one part speaks for the
-    table, but the cache must be keyed by the mtime of the part file
+    table, but the cache must be keyed by the stamp of the part file
     actually read — the table root's mtime does not change when a dynamic
     partition overwrite replaces parts inside an existing subdirectory.
     """
-    import glob
-
     if os.path.isdir(path):
-        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-        if not parts:
-            parts = sorted(
-                glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-            )
+        parts = _part_files(path)
         if not parts:
             return ()
         path = parts[0]
-    try:
-        mtime = os.path.getmtime(path)
-    except OSError:
-        mtime = -1.0
-    return _nano_ts_columns_at(path, mtime)
+    return _nano_ts_columns_at(path, _file_stamp(path))
+
+
+def _part_files(path: str) -> list[str]:
+    """Sorted parquet part files of a table directory."""
+    import glob
+
+    return sorted(glob.glob(os.path.join(path, "*.parquet"))) or sorted(
+        glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    )
 
 
 def normalize_ntz(df: DataFrame) -> DataFrame:
@@ -111,31 +124,36 @@ def normalize_ntz(df: DataFrame) -> DataFrame:
 # that cache, so we keep the equivalent here. This memoizes only the LAZY
 # analyzed plan — no rows, no results; every execution still scans the
 # parquet files. Invalidation mirrors ``_nano_ts_columns_at``: the key
-# carries the resolved path's mtime (and, for a directory, the first part
-# file's mtime — root mtime misses dynamic partition overwrites), so a
-# regenerated table is re-resolved. Sessions are compared by identity —
-# a plan is only ever served back to the exact session that built it.
-_RELATION_CACHE: dict[tuple, tuple] = {}
+# carries the resolved path's stamp (and, for a directory, the first part
+# file's stamp — root mtime misses dynamic partition overwrites), so a
+# regenerated table is re-resolved. Sessions compare by identity, so a plan
+# is only ever served back to the exact session that built it. The caches
+# are LRUs: past 256 entries the least recently used one is evicted.
+def _table_stamp(path: str) -> tuple | None:
+    root = _file_stamp(path)
+    if root is None or not os.path.isdir(path):
+        return root
+    parts = _part_files(path)
+    return (root, _file_stamp(parts[0]) if parts else None, len(parts))
 
 
-def _table_cache_key(path: str) -> tuple:
-    import glob
+@lru_cache(maxsize=256)
+def _relation(spark: SparkSession, path: str, stamp: tuple | None) -> DataFrame:
+    df = spark.read.parquet(path)
+    dtypes = dict(df.dtypes)
+    for c in _nano_ts_columns(path):
+        # Only convert when the column actually ARRIVED as long: pyarrow
+        # also reports INT96 (Spark-written legacy) timestamps as ns, but
+        # Spark loads those as TIMESTAMP directly — the div-1000 fixup
+        # applies solely to TIMESTAMP(NANOS) surfaced via nanosAsLong.
+        if dtypes.get(c) == "bigint":
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return normalize_ntz(df)
 
-    try:
-        mtimes = [os.path.getmtime(path)]
-    except OSError:
-        return (path, None)
-    if os.path.isdir(path):
-        parts = sorted(glob.glob(os.path.join(path, "*.parquet"))) or sorted(
-            glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        )
-        if parts:
-            try:
-                mtimes.append(os.path.getmtime(parts[0]))
-            except OSError:
-                mtimes.append(-1.0)
-        mtimes.append(float(len(parts)))
-    return (path, tuple(mtimes))
+
+@lru_cache(maxsize=256)
+def _raw_schema(spark: SparkSession, path: str, stamp: tuple | None):
+    return spark.read.parquet(path).schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -147,42 +165,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     arrives as TIMESTAMP_NTZ and is cast to TIMESTAMP (UTC session, so
     value-identical to the oracle).
 
-    The resolved (lazy) relation is cached per (session, path, mtime) — see
-    ``_RELATION_CACHE`` above; execution always reads the files.
+    The resolved (lazy) relation is cached per (session, path, stamp) — see
+    ``_relation`` above; execution always reads the files.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (id(spark), _table_cache_key(path))
-    hit = _RELATION_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    df = spark.read.parquet(path)
-    dtypes = dict(df.dtypes)
-    for c in _nano_ts_columns(path):
-        # Only convert when the column actually ARRIVED as long: pyarrow
-        # also reports INT96 (Spark-written legacy) timestamps as ns, but
-        # Spark loads those as TIMESTAMP directly — the div-1000 fixup
-        # applies solely to TIMESTAMP(NANOS) surfaced via nanosAsLong.
-        if dtypes.get(c) == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    df = normalize_ntz(df)
-    if len(_RELATION_CACHE) >= 256:  # a bound, not an LRU: keys are few
-        _RELATION_CACHE.clear()
-    _RELATION_CACHE[key] = (spark, df)
-    return df
+    return _relation(spark, path, _table_stamp(path))
 
 
 def raw_parquet_schema(spark: SparkSession, path: str):
     """The UN-normalized schema of a parquet path (what ``spark.read``
-    infers), cached per (session, path, mtime) like the relations above —
+    infers), cached per (session, path, stamp) like the relations above —
     streaming sources need it on every query build and the inference is
     the same ~0.1 s driver-side footer/listing round-trip."""
-    key = ("schema", id(spark), _table_cache_key(path))
-    hit = _RELATION_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    schema = spark.read.parquet(path).schema
-    _RELATION_CACHE[key] = (spark, schema)
-    return schema
+    return _raw_schema(spark, path, _table_stamp(path))
 
 
 def spread_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:

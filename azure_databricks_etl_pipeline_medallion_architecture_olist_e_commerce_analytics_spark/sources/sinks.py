@@ -28,10 +28,6 @@ except ImportError:
     HAVE_DELTA = False
 
 
-def _ensure_database(spark: SparkSession, schema: str) -> None:
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS `{schema}`")
-
-
 def write_table(
     spark: SparkSession,
     df: DataFrame,
@@ -49,6 +45,9 @@ def write_table(
     ``count=False`` skips the post-write count scan and returns -1 — used
     when the caller already gets the row count from an Observation riding
     the write job itself (plans/registry.py).
+
+    The dataset's schema (database) must already exist: ``Pipeline.run``
+    creates each one once, before its concurrent writes start.
     """
     import os
     import shutil
@@ -56,8 +55,6 @@ def write_table(
     schema, _, table = dataset.name.rpartition(".")
     ident = f"`{schema}`.`{table}`" if schema else f"`{table}`"
     plain = f"{schema}.{table}" if schema else table
-    if schema:
-        _ensure_database(spark, schema)
 
     if warehouse:
         # caller-isolated run: the table becomes EXTERNAL at

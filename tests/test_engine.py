@@ -132,6 +132,58 @@ def test_run_fail_expectation_aborts(spark):
         p.run(spark)
 
 
+def test_run_writes_upstream_tables_first_and_stops_after_failure(spark):
+    """run() writes a table only after every table it reads (seen through
+    views), whatever the registration order; when an upstream fails its
+    fail gate, the downstream table is never written."""
+
+    def build(limit):
+        p = Pipeline("dag")
+
+        # registered downstream-first on purpose
+        @p.table(name="gold.dag_total")
+        def total(ctx):
+            return ctx.read("dag_stage").groupBy().sum("v")
+
+        @p.view(name="dag_stage")
+        def stage(ctx):
+            return ctx.read("silver.dag_nums")
+
+        @p.table(name="silver.dag_nums")
+        @p.expect_all_or_fail({"v_small": f"v < {limit}"})
+        def nums(ctx):
+            return ctx.read("bronze.dag_src").withColumnRenamed("id", "v")
+
+        @p.table(name="bronze.dag_src")
+        def src(ctx):
+            return ctx.spark_session.range(10)
+
+        return p
+
+    upstream = {
+        "gold.dag_total": ["silver.dag_nums"],
+        "silver.dag_nums": ["bronze.dag_src"],
+        "bronze.dag_src": [],
+    }
+    drop = [f"DROP TABLE IF EXISTS {name}" for name in upstream]
+    for stmt in drop:
+        spark.sql(stmt)
+    try:
+        with pytest.raises(ExpectationViolation):
+            build(limit=5).run(spark)
+        assert not spark.catalog.tableExists("gold.dag_total")
+
+        report = build(limit=100).run(spark)
+        assert list(report) == list(upstream)  # registration order
+        for name, ups in upstream.items():
+            for up in ups:
+                assert report[name]["start_s"] >= report[up]["end_s"], report
+        assert spark.table("gold.dag_total").collect()[0][0] == 45
+    finally:
+        for stmt in drop:
+            spark.sql(stmt)
+
+
 def test_full_medallion_run_materializes_warehouse(spark):
     """Production (tables) mode over the full flagship pipeline at sf0.001:
     every bronze/silver/gold dataset lands in the warehouse, counts line up
@@ -204,6 +256,10 @@ def test_mv_cluster_by_layout_prunes_nonleading_column(spark, tmp_path):
         # the 1 MB minPartitionSize floor otherwise overrides the advisory
         # target and still merges the tiny corpus into one file
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "16KB",
+        # the clustered write yields one file per shuffle partition; pin the
+        # count so the test does not depend on the cores. At 8 files the
+        # date-key span sits near the 0.8 bound (0.73-0.81); 16 gives ~0.62
+        "spark.sql.shuffle.partitions": "16",
     }
     prior = {k: spark.conf.get(k) for k in confs}
     for k, v in confs.items():

@@ -54,3 +54,25 @@ def test_round1_ntz_casualties_run_on_real_testdata(spark, qname):
 
     df = entry.queries()[qname](spark, SF_SMALL)
     assert df.count() >= 0
+
+
+def test_load_table_sees_same_second_overwrite(spark, tmp_path):
+    """A table rewritten within the same second, closer than a float mtime
+    can tell apart, must be re-resolved rather than served from the
+    relation cache."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "region.parquet"
+    second = 1_700_000_000 * 10**9
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    os.utime(path, ns=(second, second))
+    assert load_table(spark, str(tmp_path), "region").columns == ["a"]
+
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": [4, 5, 6]}), path)
+    os.utime(path, ns=(second + 1, second + 1))
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.columns == ["a", "b"]
+    assert df.count() == 3
