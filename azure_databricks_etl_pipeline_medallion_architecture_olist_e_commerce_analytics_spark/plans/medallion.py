@@ -72,12 +72,11 @@ BRONZE_TABLES = (
 # spread_partitions remains the right tool directly inside CPU-heavy
 # operators (fingerprinting, signature computation, Arrow-batch scoring) —
 # see operators/dedup.py, similarity.py, textops.py.
-_SPREAD_TABLES = frozenset()
 
 
 def build_pipeline(sf_dir: str) -> Pipeline:
     """Construct the full medallion pipeline bound to a testdata directory."""
-    from ..sources.loader import load_table, spread_partitions
+    from ..sources.loader import load_table
 
     p = Pipeline("olist_analog_medallion")
 
@@ -92,10 +91,7 @@ def build_pipeline(sf_dir: str) -> Pipeline:
             streaming=True,
         )
         def _bronze(ctx, _tbl=tbl):
-            df = load_table(ctx.spark_session, sf_dir, _tbl)
-            if _tbl in _SPREAD_TABLES:
-                df = spread_partitions(df)
-            return df
+            return load_table(ctx.spark_session, sf_dir, _tbl)
 
     for t in BRONZE_TABLES:
         _make_bronze(t)

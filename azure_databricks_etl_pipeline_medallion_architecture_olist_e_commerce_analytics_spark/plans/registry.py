@@ -448,9 +448,3 @@ class Pipeline:
             raise errors[0]
         return {d.name: written[d.name] for d in targets}
 
-
-def _table_ident(key: str) -> str:
-    schema, _, table = key.rpartition(".")
-    if not schema:
-        return f"default.`{table}`"
-    return f"`{schema}`.`{table}`"

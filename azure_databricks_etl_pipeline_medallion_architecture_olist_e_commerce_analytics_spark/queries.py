@@ -2610,13 +2610,7 @@ def q_streaming_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = windowed_event_counts(_stream_events(spark, sf_dir))
     # complete mode so windows still open at end-of-input are emitted too
     # (append mode would hold back the final watermark-uncommitted windows).
-    return run_to_memory(
-        agg, "mem_stream_window_agg", output_mode="complete",
-        # complete mode rewrites the full table every data batch — the
-        # zero-row finalization batch re-emits the same rows (see
-        # run_to_memory.skip_finalization)
-        skip_finalization=True,
-    )
+    return run_to_memory(agg, "mem_stream_window_agg", output_mode="complete")
 
 
 def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2687,10 +2681,7 @@ def q_streaming_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune_session(spark)
     agg = sliding_event_counts(_stream_events(spark, sf_dir))
-    return run_to_memory(
-        agg, "mem_stream_sliding_agg", output_mode="complete",
-        skip_finalization=True,  # complete mode: final batch re-emits the same
-    )
+    return run_to_memory(agg, "mem_stream_sliding_agg", output_mode="complete")
 
 
 def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2699,10 +2690,7 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune_session(spark)
     agg = sessionized_event_counts(_stream_events(spark, sf_dir), gap="30 minutes")
-    return run_to_memory(
-        agg, "mem_stream_sessionize", output_mode="complete",
-        skip_finalization=True,  # complete mode: final batch re-emits the same
-    )
+    return run_to_memory(agg, "mem_stream_sessionize", output_mode="complete")
 
 
 def q_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2724,12 +2712,7 @@ def q_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune_session(spark)
     out = running_user_totals(_stream_events(spark, sf_dir))
-    return run_to_memory(
-        out, "mem_stream_running_totals",
-        # NoTimeout state function: the zero-row finalization batch fires
-        # no timers and emits nothing
-        skip_finalization=True,
-    )
+    return run_to_memory(out, "mem_stream_running_totals")
 
 
 def q_running_totals_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2773,13 +2756,7 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = dedup_stream(
         _stream_events(spark, sf_dir), ["user_id", "event_type"], watermark="60 days"
     )
-    out = run_to_memory(
-        deduped.select("user_id", "event_type"), "mem_stream_dedup",
-        # dedup emits each surviving row in the batch it arrives; the
-        # finalization batch only expires state
-        skip_finalization=True,
-    )
-    return out
+    return run_to_memory(deduped.select("user_id", "event_type"), "mem_stream_dedup")
 
 
 def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2832,13 +2809,7 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "gap_us"
         ),
     )
-    return run_to_memory(
-        joined, "mem_stream_stream_join",
-        # inner stream-stream join: matches emit in the batch both rows
-        # arrive; the finalization batch only evicts state (measured ~0.7 s
-        # of pure state-store load/commit) — rows verified identical
-        skip_finalization=True,
-    )
+    return run_to_memory(joined, "mem_stream_stream_join")
 
 
 def q_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3367,9 +3338,7 @@ def q_streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune_session(spark)
     agg = windowed_distinct_users(_stream_events(spark, sf_dir))
-    return run_to_memory(
-        agg, "mem_stream_distinct_users", output_mode="complete"
-    )
+    return run_to_memory(agg, "mem_stream_distinct_users", output_mode="complete")
 
 
 def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

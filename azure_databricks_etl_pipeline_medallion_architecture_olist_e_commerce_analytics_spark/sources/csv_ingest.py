@@ -20,7 +20,8 @@ Open-source mapping (SURVEY.md §1.4, §3.3):
   pinned schema arrive whole in that column, rest NULL.
 - **Incremental discovery**: processed file paths are recorded in
   ``<state_dir>/ledger.json``; each ``ingest`` call reads only unseen files
-  (Auto Loader's checkpoint-backed file tracking).
+  (Auto Loader's checkpoint-backed file tracking). ``append`` records them
+  only after their rows have landed (at-least-once).
 
 Scale notes: the *listing* is driver-side (exactly as Auto Loader's directory
 listing mode is), but the listing is file names only — O(files), not O(rows).
@@ -219,37 +220,65 @@ class CsvIngestor:
             out = projected if out is None else out.unionByName(projected)
         return out
 
-    def ingest(self, spark: SparkSession) -> IngestResult:
-        """Read rows from files not yet in the ledger; advance the ledger."""
-        seen = self._load_ledger()
-        new = [p for p in self._list_files() if p not in seen]
-        if not new:
-            return IngestResult(df=None, new_files=[], total_seen=len(seen))
+    def _read(self, spark: SparkSession, new: list[str]) -> DataFrame:
+        """Rows of the ``new`` files under the pinned (maybe evolved) schema."""
         had_schema = os.path.exists(self._schema_path)
         schema = self._pinned_schema(spark, new)
         if self.schema_evolution == "add_new_columns" and had_schema:
             schema = self._evolve_schema(spark, schema, new)
         if self.schema_evolution == "add_new_columns":
-            df = self._read_aligned(
+            return self._read_aligned(
                 spark,
                 T.StructType([f for f in schema.fields if f.name != RESCUED_COL]),
                 new,
             )
-        else:
-            read_schema = T.StructType(
-                [f for f in schema.fields if f.name != RESCUED_COL]
-                + [T.StructField(RESCUED_COL, T.StringType())]
-            )
-            df = (
-                spark.read.options(**CSV_OPTIONS)
-                .option("mode", "PERMISSIVE")
-                .option("columnNameOfCorruptRecord", RESCUED_COL)
-                .schema(read_schema)
-                .csv(new)
-            )
-        seen.update(new)
-        self._save_ledger(seen)
-        return IngestResult(df=df, new_files=new, total_seen=len(seen))
+        read_schema = T.StructType(
+            [f for f in schema.fields if f.name != RESCUED_COL]
+            + [T.StructField(RESCUED_COL, T.StringType())]
+        )
+        return (
+            spark.read.options(**CSV_OPTIONS)
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", RESCUED_COL)
+            .schema(read_schema)
+            .csv(new)
+        )
+
+    def _pending(self, spark: SparkSession) -> tuple[set[str], IngestResult]:
+        """The ledger, and the rows of files not yet in it (ledger untouched)."""
+        seen = self._load_ledger()
+        new = [p for p in self._list_files() if p not in seen]
+        df = self._read(spark, new) if new else None
+        return seen, IngestResult(df=df, new_files=new, total_seen=len(seen) + len(new))
+
+    def ingest(self, spark: SparkSession) -> IngestResult:
+        """Read rows from files not yet in the ledger; advance the ledger.
+
+        The ledger advances before the caller consumes the rows, so a
+        caller that writes them should use :meth:`append` instead."""
+        seen, result = self._pending(spark)
+        if result.new_files:
+            self._save_ledger(seen | set(result.new_files))
+        return result
+
+    def append(self, spark: SparkSession, target_path: str) -> int:
+        """Append the rows of unseen files to a parquet table, then advance
+        the ledger; returns the number of files ingested.
+
+        The ledger is saved only after the append has landed, so a failed
+        append leaves its files unseen and the next run retries them. A
+        crash between the append and the ledger save re-appends those
+        files: delivery is at-least-once."""
+        seen, result = self._pending(spark)
+        if result.df is None:
+            return 0
+        (
+            result.df.withColumn("_ingested_at", F.current_timestamp())
+            .write.mode("append")
+            .parquet(target_path)
+        )
+        self._save_ledger(seen | set(result.new_files))
+        return len(result.new_files)
 
 
 def ingest_csv_append(
@@ -264,12 +293,4 @@ def ingest_csv_append(
     reference's bronze streaming tables (bronze_ingestion.py:35-49). Returns
     the number of files ingested this run.
     """
-    result = CsvIngestor(source_dir, state_dir).ingest(spark)
-    if result.df is None:
-        return 0
-    (
-        result.df.withColumn("_ingested_at", F.current_timestamp())
-        .write.mode("append")
-        .parquet(target_path)
-    )
-    return len(result.new_files)
+    return CsvIngestor(source_dir, state_dir).append(spark, target_path)

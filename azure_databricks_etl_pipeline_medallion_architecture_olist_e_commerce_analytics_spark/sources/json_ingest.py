@@ -15,18 +15,18 @@ document would pin each file to one task.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .csv_ingest import RESCUED_COL, CsvIngestor, IngestResult
+from .csv_ingest import RESCUED_COL, CsvIngestor
 
 
 class JsonlIngestor(CsvIngestor):
     """Incremental line-delimited-JSON reader for one dataset directory.
 
-    Shares the schema-pin + ledger machinery with :class:`CsvIngestor`;
-    only discovery suffix and the reader differ. Rows that do not parse or
-    do not fit the pinned schema arrive whole in ``_rescued_data``.
+    Shares the schema-pin, ledger and append machinery with
+    :class:`CsvIngestor`; only discovery suffix and the reader differ. Rows
+    that do not parse or do not fit the pinned schema arrive whole in
+    ``_rescued_data``.
     """
 
     EXTENSION = ".jsonl"
@@ -51,26 +51,19 @@ class JsonlIngestor(CsvIngestor):
             f.write(inferred.simpleString())
         return inferred
 
-    def ingest(self, spark: SparkSession) -> IngestResult:
-        seen = self._load_ledger()
-        new = [p for p in self._list_files() if p not in seen]
-        if not new:
-            return IngestResult(df=None, new_files=[], total_seen=len(seen))
+    def _read(self, spark: SparkSession, new: list[str]) -> DataFrame:
         schema = self._pinned_schema(spark, new)
         read_schema = T.StructType(
             [f for f in schema.fields if f.name != RESCUED_COL]
             + [T.StructField(RESCUED_COL, T.StringType())]
         )
-        df = (
+        return (
             spark.read.option("multiLine", "false")
             .option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", RESCUED_COL)
             .schema(read_schema)
             .json(new)
         )
-        seen.update(new)
-        self._save_ledger(seen)
-        return IngestResult(df=df, new_files=new, total_seen=len(seen))
 
 
 def ingest_jsonl_append(
@@ -80,12 +73,4 @@ def ingest_jsonl_append(
     target_path: str,
 ) -> int:
     """One bronze-ingestion run over a JSONL landing directory."""
-    result = JsonlIngestor(source_dir, state_dir).ingest(spark)
-    if result.df is None:
-        return 0
-    (
-        result.df.withColumn("_ingested_at", F.current_timestamp())
-        .write.mode("append")
-        .parquet(target_path)
-    )
-    return len(result.new_files)
+    return JsonlIngestor(source_dir, state_dir).append(spark, target_path)

@@ -1,4 +1,4 @@
-"""Streaming CDC apply: keyed upserts from a change stream into a table.
+"""Versioned parquet snapshots, and streaming CDC apply committed through them.
 
 The reference's silver layer is append-only streaming tables
 (/root/reference/scripts/silver/Silver_orders.py:16-26); real CDC feeds
@@ -21,10 +21,19 @@ parquet:
   old complete snapshot). This is the minimal open-source stand-in for a
   table format's atomic commit log.
 
+The commit protocol is not CDC-specific: :func:`commit_next` runs any
+``step(head, head_meta) -> (df, meta) | None`` against the head snapshot and
+commits its result as ``v=N+1``. ``meta`` is a small JSON ``_COMMIT`` file
+written into the snapshot before the slot claim, so it is atomic with the
+snapshot (``streaming/incremental_mv`` keeps its replay guard there). CDC
+tables and incremental-MV state therefore share one on-disk format, one
+reader (:func:`read_current`, :func:`read_meta`) and one
+:func:`vacuum_versions`.
+
 Concurrent writers (optimistic concurrency control, the Delta commit-log
 protocol re-expressed over directories):
 
-- a writer computes its merge against the snapshot version it read, writes
+- a writer computes its step against the snapshot version it read, writes
   the result to a private ``.staging-*`` directory, then **claims** the
   ``v=N+1`` slot with one atomic ``os.rename(staging, v=N+1)`` — POSIX
   rename onto an existing non-empty directory fails, so exactly one of two
@@ -32,7 +41,7 @@ protocol re-expressed over directories):
   LogStore needs from S3/ABFS; on an object store swap the rename for a
   conditional put),
 - the loser detects the conflict, re-reads the NEW head, **recomputes its
-  merge on top of the winner's snapshot**, and retries at ``v=N+2`` — no
+  step on top of the winner's snapshot**, and retries at ``v=N+2`` — no
   update is ever lost, which is strictly stronger than last-writer-wins
   (the failure mode of the naive overwrite-then-flip protocol is a lost
   batch, not a stale row),
@@ -58,16 +67,20 @@ Scale notes:
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _POINTER = "_VERSION"
+_META = "_COMMIT"
 _STAGING_PREFIX = ".staging-"
+_MAX_ATTEMPTS = 8
 
 
 def _version_path(table_path: str, version: int) -> str:
@@ -83,10 +96,24 @@ def current_version(table_path: str) -> int:
         return int(fh.read().strip())
 
 
+def _read_version(spark: SparkSession, table_path: str, v: int) -> DataFrame | None:
+    return spark.read.parquet(_version_path(table_path, v)) if v else None
+
+
 def read_current(spark: SparkSession, table_path: str) -> DataFrame | None:
     """Read the current committed snapshot, or None for an empty table."""
-    v = current_version(table_path)
-    return spark.read.parquet(_version_path(table_path, v)) if v else None
+    return _read_version(spark, table_path, current_version(table_path))
+
+
+def read_meta(table_path: str, version: int | None = None) -> dict:
+    """The metadata committed with snapshot ``version`` (default: the
+    head); ``{}`` for an empty table or a snapshot committed without any."""
+    v = current_version(table_path) if version is None else version
+    path = os.path.join(_version_path(table_path, v), _META)
+    if not v or not os.path.exists(path):
+        return {}
+    with open(path, encoding="utf-8") as fh:
+        return json.load(fh)
 
 
 def _advance_pointer(table_path: str, version: int) -> None:
@@ -108,10 +135,11 @@ def _advance_pointer(table_path: str, version: int) -> None:
             os.replace(tmp, os.path.join(table_path, _POINTER))
 
 
-def _commit(df: DataFrame, table_path: str, version: int) -> bool:
-    """Stage the snapshot privately, then atomically claim the ``version``
-    slot. Returns False when another writer already owns the slot — the
-    caller must recompute its merge against the new head and retry.
+def _commit(df: DataFrame, table_path: str, version: int, meta: dict | None) -> bool:
+    """Stage the snapshot (and its ``_COMMIT`` metadata) privately, then
+    atomically claim the ``version`` slot. Returns False when another
+    writer already owns the slot — the caller must recompute its step
+    against the new head and retry.
 
     The claim is ``os.rename(staging, v=N)``: atomic on POSIX, and it
     FAILS (ENOTEMPTY/EEXIST) when the target exists as a non-empty
@@ -123,6 +151,9 @@ def _commit(df: DataFrame, table_path: str, version: int) -> bool:
         table_path, f"{_STAGING_PREFIX}v{version}-{os.getpid()}-{uuid.uuid4().hex}"
     )
     df.write.mode("overwrite").parquet(staging)
+    if meta:
+        with open(os.path.join(staging, _META), "w", encoding="utf-8") as fh:
+            json.dump(meta, fh)
     try:
         os.rename(staging, _version_path(table_path, version))
     except OSError:
@@ -141,6 +172,44 @@ def _repair_orphan(table_path: str, version: int) -> None:
     vdir = _version_path(table_path, version)
     if os.path.exists(os.path.join(vdir, "_SUCCESS")):
         _advance_pointer(table_path, version)
+
+
+def commit_next(
+    spark: SparkSession,
+    table_path: str,
+    step: Callable[[DataFrame | None, dict], tuple[DataFrame, dict | None] | None],
+) -> int | None:
+    """Commit ``step``'s result on top of the head snapshot as ``v=N+1``.
+
+    ``step(head, head_meta)`` gets the head snapshot (None for an empty
+    table) and the metadata committed with it, and returns ``(df, meta)``
+    to commit, or None to commit nothing. Returns the committed version,
+    or None when the step declined.
+
+    Concurrent-writer safe: a writer that loses the ``v=N+1`` slot repairs
+    a crashed winner's orphan (module docstring) and re-runs ``step`` on
+    the new head, so the winner's rows are folded into its retry and
+    nothing is lost. After ``_MAX_ATTEMPTS`` lost races in a row it raises
+    rather than drop the commit.
+    """
+    for attempt in range(_MAX_ATTEMPTS):
+        v = current_version(table_path)
+        out = step(_read_version(spark, table_path, v), read_meta(table_path, v))
+        if out is None:
+            return None
+        df, meta = out
+        if _commit(df, table_path, v + 1, meta):
+            return v + 1
+        # lost the v+1 race: if the winner crashed pre-flip, repair the
+        # pointer so the re-read above sees the new head; deterministic
+        # linear backoff (no randomness) keeps retries reproducible
+        _repair_orphan(table_path, v + 1)
+        time.sleep(0.05 * (attempt + 1))
+    raise RuntimeError(
+        f"commit conflict: lost {_MAX_ATTEMPTS} consecutive version races "
+        f"at {table_path!r}; batch NOT applied (rerun the stream — the "
+        "checkpoint will redeliver it)"
+    )
 
 
 def apply_changes_batch(
@@ -164,45 +233,28 @@ def apply_changes_batch(
 
     Idempotent per batch content: re-applying the same batch produces an
     identical next snapshot, which is what makes foreachBatch's
-    at-least-once redelivery safe here.
-
-    Concurrent-writer safe: the merge is recomputed from the head snapshot
-    on every attempt and committed with an atomic slot claim (module
-    docstring), so a writer that loses the race folds the winner's rows
-    into its retry — neither batch is lost. ``max_attempts`` bounds the
-    livelock case (every attempt lost to a faster writer) and raises
-    rather than dropping the batch.
+    at-least-once redelivery safe here. Committed through
+    :func:`commit_next`, so concurrent writers never lose a batch.
     """
     keyed = batch
     for k in keys:
         keyed = keyed.filter(F.col(k).isNotNull())
-    max_attempts = 8
-    for attempt in range(max_attempts):
-        v = current_version(table_path)
-        target = read_current(spark, table_path)
+    w = Window.partitionBy(*keys).orderBy(F.desc(sequence_by))
+
+    def merge(target: DataFrame | None, _meta: dict) -> tuple[DataFrame, None]:
         candidates = (
             keyed.unionByName(target.select(*keyed.columns))
             if target is not None
             else keyed
         )
-        w = Window.partitionBy(*keys).orderBy(F.desc(sequence_by))
         merged = (
             candidates.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        if _commit(merged, table_path, v + 1):
-            return
-        # lost the v+1 race: if the winner crashed pre-flip, repair the
-        # pointer so the re-read below sees the new head; deterministic
-        # linear backoff (no randomness) keeps retries reproducible
-        _repair_orphan(table_path, v + 1)
-        time.sleep(0.05 * (attempt + 1))
-    raise RuntimeError(
-        f"CDC commit conflict: lost {max_attempts} consecutive version races "
-        f"at {table_path!r}; batch NOT applied (rerun the stream — the "
-        "checkpoint will redeliver it)"
-    )
+        return merged, None
+
+    commit_next(spark, table_path, merge)
 
 
 def run_cdc_apply(

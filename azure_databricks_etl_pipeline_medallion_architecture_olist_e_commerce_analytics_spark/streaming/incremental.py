@@ -90,12 +90,32 @@ def run_incremental(
     q.awaitTermination()
 
 
+def _needs_no_data_batches(df: DataFrame, output_mode: str) -> bool:
+    """Whether a stream's output can wait on a no-data microbatch: in
+    append mode a streaming aggregation or an outer join holds rows back
+    until the watermark passes, and a stateful function with a timeout
+    fires its timers in such a batch. Nothing else does."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        name = node.nodeName()
+        if output_mode == "append" and (
+            (name == "Aggregate" and node.isStreaming())
+            or (name == "Join" and "Outer" in node.joinType().toString())
+        ):
+            return True
+        if name.startswith("FlatMapGroups") and node.timeout().toString() != "NoTimeout":
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
 def run_to_memory(
     df: DataFrame,
     name: str,
     output_mode: str = "append",
     state_partitions: int | None = 8,
-    skip_finalization: bool = False,
 ) -> DataFrame:
     """Run a stream to completion into an in-memory table (test/oracle path).
 
@@ -106,27 +126,20 @@ def run_to_memory(
     store count = ``spark.sql.shuffle.partitions`` at FIRST run, pinned by
     the checkpoint thereafter; AQE never touches streaming plans). It is a
     per-stream knob sized to stream volume, not cluster width: every
-    microbatch — including the zero-row finalization batch availableNow
-    runs for watermark advancement — pays one state-store load/commit per
-    partition per stateful operator, so an oversized count turns into pure
-    fixed overhead (32→8 partitions cut the test streams 4-5×), while a
-    100 TB/day stream genuinely needs thousands. The session value is
-    restored afterwards so batch queries keep the cluster-width setting.
+    microbatch pays one state-store load/commit per partition per stateful
+    operator, so an oversized count turns into pure fixed overhead (32→8
+    partitions cut the test streams 4-5×), while a 100 TB/day stream
+    genuinely needs thousands. The session value is restored afterwards so
+    batch queries keep the cluster-width setting.
 
-    ``skip_finalization=True`` disables no-data microbatches for this run
-    (``spark.sql.streaming.noDataMicroBatches.enabled=false``, restored
-    after). The zero-row finalization batch availableNow appends exists to
-    let the watermark advance and flush watermark-GATED output; a stream
-    whose sink rows never wait on the watermark — complete-mode aggregates
-    (every data batch rewrites the full table), watermark dedup and inner
-    stream-stream joins (rows emit in the batch they arrive), NoTimeout
-    applyInPandasWithState (no timers to fire) — emits exactly the same
-    table without it, and the batch's only effect is end-of-stream state
-    eviction the terminating query discards anyway. It costs a full
-    state-store load/commit cycle across every partition (measured ~0.7 s
-    of the 2.4 s stream-join run), so callers in that class opt out.
-    APPEND-mode event-time aggregations (windowed_distinct_users) MUST
-    keep it on — their final windows only emit once the watermark passes.
+    No-data microbatches (the zero-row finalization batch availableNow
+    appends to advance the watermark) stay on only when the output can wait
+    on one (:func:`_needs_no_data_batches`): an append-mode streaming
+    aggregation or outer join, or a stateful function with a timeout.
+    Every other stream emits the same table without that batch, which
+    would only evict state the terminating query discards, at the cost of
+    a full state-store load/commit across every partition (~0.7 s of the
+    2.4 s stream-join run). The session value is restored afterwards.
     """
     spark = df.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -134,8 +147,7 @@ def run_to_memory(
     prev_nodata = spark.conf.get(nodata_key)
     if state_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if skip_finalization:
-        spark.conf.set(nodata_key, "false")
+    spark.conf.set(nodata_key, str(_needs_no_data_batches(df, output_mode)).lower())
     try:
         q = (
             df.writeStream.format("memory")
@@ -148,8 +160,7 @@ def run_to_memory(
     finally:
         if state_partitions:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        if skip_finalization:
-            spark.conf.set(nodata_key, prev_nodata)
+        spark.conf.set(nodata_key, prev_nodata)
     return spark.table(name)
 
 

@@ -13,15 +13,18 @@ Composition of existing engine pieces:
   state — count/decimal-sum/min/max, avg derived at read time. DECIMAL
   accumulation makes the incremental path bit-identical to a full
   recompute under any batch split (the invariant the tests assert).
-- ``streaming/cdc``'s versioned-snapshot layout: state commits land in an
-  immutable ``v=N`` directory with a tiny pointer file flipped last
-  (atomic on POSIX/HDFS), so readers never observe a torn state.
+- ``streaming/cdc``'s versioned-snapshot commit (:func:`cdc.commit_next`):
+  each fold is staged privately, claims ``v=N+1`` atomically and flips the
+  pointer last, so readers never observe a torn state; orphan repair and
+  :func:`cdc.vacuum_versions` come with it.
 
 Exactly-once: merging is NOT content-idempotent (re-folding a delivered
-batch double-counts), so the pointer records the last applied foreachBatch
-batch id in the SAME atomic file as the version — redelivered batch ids
-are skipped, and a crash between state write and pointer flip leaves the
-old pointer naming the old complete state (the batch replays cleanly).
+batch double-counts), so every state snapshot carries the foreachBatch
+batch id it folded (plus a content fingerprint) in its ``_COMMIT``
+metadata, which lands atomically with the snapshot. A batch id at or below
+the head's is skipped; a crash before the slot claim leaves the old head
+(the batch replays cleanly), and a crash after it leaves an orphan the
+redelivery repairs and then skips.
 
 Scale shape per batch: one partial aggregation over the batch (map-side
 combine), one state merge shuffling O(group) rows. The state table is the
@@ -31,48 +34,10 @@ cardinality the refresh cost stays flat while full refresh grows linearly.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.incremental_agg import aggregate_state, finalize, merge_states
-
-_POINTER = "_MV_STATE"
-
-
-def _state_path(mv_path: str, version: int) -> str:
-    return os.path.join(mv_path, f"v={version}")
-
-
-def _read_pointer(mv_path: str) -> tuple[int, int]:
-    """(version, last_applied_batch_id); (0, -1) for an empty MV."""
-    ptr = os.path.join(mv_path, _POINTER)
-    if not os.path.exists(ptr):
-        return 0, -1
-    with open(ptr, encoding="utf-8") as fh:
-        parts = fh.read().split()
-    return int(parts[0]), int(parts[1])
-
-
-def _read_fingerprint(mv_path: str) -> str | None:
-    """Content fingerprint of the last applied batch's aggregate state, or
-    None for pointers written before fingerprints existed (then an
-    equal-id redelivery is assumed benign — the legacy behavior)."""
-    ptr = os.path.join(mv_path, _POINTER)
-    if not os.path.exists(ptr):
-        return None
-    with open(ptr, encoding="utf-8") as fh:
-        parts = fh.read().split()
-    return parts[2] if len(parts) > 2 else None
-
-
-def _flip_pointer(
-    mv_path: str, version: int, batch_id: int, fingerprint: str | None = None
-) -> None:
-    tmp = os.path.join(mv_path, _POINTER + ".tmp")
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(f"{version} {batch_id}" + (f" {fingerprint}" if fingerprint else ""))
-    os.replace(tmp, os.path.join(mv_path, _POINTER))
+from .cdc import commit_next, read_current, read_meta, vacuum_versions
 
 
 def _state_fingerprint(state: DataFrame) -> str:
@@ -96,8 +61,8 @@ def _state_fingerprint(state: DataFrame) -> str:
 
 
 def read_state(spark: SparkSession, mv_path: str) -> DataFrame | None:
-    v, _ = _read_pointer(mv_path)
-    return spark.read.parquet(_state_path(mv_path, v)) if v else None
+    """The standing aggregate state: the MV's head snapshot."""
+    return read_current(spark, mv_path)
 
 
 def read_mv(spark: SparkSession, mv_path: str) -> DataFrame | None:
@@ -115,31 +80,22 @@ def refresh_increment(
     batch_id: int,
 ) -> bool:
     """Fold one batch into the MV state; returns False on a skipped replay."""
-    version, last_batch = _read_pointer(mv_path)
-    if batch_id <= last_batch:
-        return False  # at-least-once redelivery of an already-folded batch
-    bstate = aggregate_state(batch, keys, value).localCheckpoint()
-    cur = read_state(spark, mv_path)
-    merged = merge_states(cur, bstate, keys) if cur is not None else bstate
-    os.makedirs(mv_path, exist_ok=True)
-    merged.write.mode("overwrite").parquet(_state_path(mv_path, version + 1))
-    _flip_pointer(mv_path, version + 1, batch_id, _state_fingerprint(bstate))
-    _vacuum_state(mv_path, keep=2)
+    folded: list = []  # the batch's state, computed once across retries
+
+    def fold(state: DataFrame | None, meta: dict):
+        if batch_id <= meta.get("batch_id", -1):
+            return None  # at-least-once redelivery of an already-folded batch
+        if not folded:
+            bstate = aggregate_state(batch, keys, value).localCheckpoint()
+            folded.append((bstate, _state_fingerprint(bstate)))
+        bstate, fingerprint = folded[0]
+        merged = merge_states(state, bstate, keys) if state is not None else bstate
+        return merged, {"batch_id": batch_id, "fingerprint": fingerprint}
+
+    if commit_next(spark, mv_path, fold) is None:
+        return False
+    vacuum_versions(mv_path, keep=2)
     return True
-
-
-def _vacuum_state(mv_path: str, keep: int = 2) -> None:
-    """Drop state snapshots older than the newest ``keep`` (never the
-    current one) — each fold writes a full new state dir, so without
-    cleanup disk grows with batch count, not state size."""
-    import shutil
-
-    cur, _ = _read_pointer(mv_path)
-    for d in os.listdir(mv_path):
-        if d.startswith("v=") and d.split("=", 1)[1].isdigit():
-            v = int(d.split("=", 1)[1])
-            if v < cur and v <= cur - keep:
-                shutil.rmtree(os.path.join(mv_path, d), ignore_errors=True)
 
 
 def maintain_aggregate_mv(
@@ -152,23 +108,22 @@ def maintain_aggregate_mv(
     """Run an availableNow pass folding a streaming source into the MV.
 
     The replay guard keys on the checkpoint's foreachBatch batch ids — the
-    checkpoint and the MV state pointer share a lifetime. Two skip shapes
-    must be told apart:
+    checkpoint and the MV state share a lifetime. Two skip shapes must be
+    told apart:
 
-    - ``batch_id == stored high-water mark`` with MATCHING content
-      fingerprint: the documented crash-recovery redelivery (crash between
-      the MV pointer flip and the streaming checkpoint commit re-delivers
-      the last batch once). refresh_increment correctly skips it and the
-      MV is intact — NOT an error, even when no newer data arrived and the
-      whole run is applied=0/skipped=1.
-    - ``batch_id <  stored high-water mark``, or ``== mark`` with a
-      DIFFERENT fingerprint: the checkpoint was genuinely reset/relocated
-      while mv_path persists. A reset after exactly one applied batch
-      restarts ids at the stored mark itself (0), so the id alone cannot
-      distinguish it from crash redelivery — but a reset batch 0 re-reads
-      ALL files (old + new) and its content differs, which the stored
-      fingerprint catches. Raised loudly (reset both, or neither). Legacy
-      pointers without a fingerprint keep the old id-only behavior.
+    - ``batch_id == head batch id`` with MATCHING content fingerprint: the
+      documented crash-recovery redelivery (crash between the MV commit and
+      the streaming checkpoint commit re-delivers the last batch once).
+      refresh_increment correctly skips it and the MV is intact — NOT an
+      error, even when no newer data arrived and the whole run is
+      applied=0/skipped=1.
+    - ``batch_id < head batch id``, or ``==`` with a DIFFERENT fingerprint:
+      the checkpoint was genuinely reset/relocated while mv_path persists.
+      A reset after exactly one applied batch restarts ids at the stored
+      id itself (0), so the id alone cannot distinguish it from crash
+      redelivery — but a reset batch 0 re-reads ALL files (old + new) and
+      its content differs, which the stored fingerprint catches. Raised
+      loudly (reset both, or neither).
     """
     spark = source.sparkSession
     stats = {"applied": 0, "reset_skips": []}
@@ -177,18 +132,15 @@ def maintain_aggregate_mv(
         if batch.isEmpty():
             return
         bid = int(batch_id)
-        _, last_batch = _read_pointer(mv_path)
         if refresh_increment(spark, batch, mv_path, keys, value, bid):
             stats["applied"] += 1
-        elif bid < last_batch:
+            return
+        head = read_meta(mv_path)
+        if bid < head["batch_id"] or head["fingerprint"] != _state_fingerprint(
+            aggregate_state(batch, keys, value)
+        ):
             stats["reset_skips"].append(bid)
-        else:  # bid == last_batch: redelivery OR a reset's first batch
-            stored = _read_fingerprint(mv_path)
-            if stored is not None and stored != _state_fingerprint(
-                aggregate_state(batch, keys, value)
-            ):
-                stats["reset_skips"].append(bid)
-            # fingerprint matches (or legacy pointer): benign redelivery
+        # else: same id, same content — benign redelivery
 
     q = (
         source.writeStream.foreachBatch(_fold)
@@ -197,16 +149,16 @@ def maintain_aggregate_mv(
         .start()
     )
     q.awaitTermination()
-    # reset_skips only ever holds genuinely-bad replays (id below the mark,
-    # or at the mark with a different content fingerprint) — benign crash
-    # redelivery never lands here. Raise on ANY of them, even when later
-    # batches applied: a reset checkpoint can split old+new files across
-    # more batches than the stored mark, so batches with id > mark pass the
-    # id guard and re-fold old data (double-counting) while applied > 0.
+    # reset_skips only ever holds genuinely-bad replays (id below the head's
+    # batch id, or at it with a different content fingerprint) — benign
+    # crash redelivery never lands here. Raise on ANY of them, even when
+    # later batches applied: a reset checkpoint can split old+new files
+    # across more batches than the head's batch id, so batches above it pass
+    # the id guard and re-fold old data (double-counting) while applied > 0.
     if stats["reset_skips"]:
         raise RuntimeError(
             f"maintain_aggregate_mv: batch ids {stats['reset_skips']} replayed "
-            f"below the MV pointer's stored batch id (or AT it with different "
+            f"below the MV head's committed batch id (or AT it with different "
             f"content) — the checkpoint at {checkpoint} was reset while "
             f"{mv_path} persists; any batches applied in this run may have "
             f"re-folded old data. The checkpoint and MV state share a "

@@ -124,6 +124,15 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
+_FIRST_SEEN_SCHEMA = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("first_event_id", T.LongType()),
+        T.StructField("first_ts", T.TimestampType()),
+        T.StructField("first_value", T.DoubleType()),
+    ]
+)
 _FIRST_SEEN_STATE = T.StructType(
     [T.StructField("seen_types", T.ArrayType(T.StringType()))]
 )
@@ -164,14 +173,12 @@ def _first_seen_fn(key, pdf_iter: Iterator["pd.DataFrame"], state) -> Iterator["
 
 
 def first_seen_events_apws(events: DataFrame) -> DataFrame:
-    """First event of each (user, event_type), ever — the
-    ``applyInPandasWithState`` twin of :func:`first_seen_events`, running
-    in EVERY container (the legacy grouped-state API has no protobuf
-    dependency). State per user = the array of event types already seen
-    (bounded by the type vocabulary, not the event count). Same batch-twin
-    semantics: ``ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-    ORDER BY ts, event_id) = 1``; the two APIs' results are
-    asserted equal to that twin by the same test."""
+    """First event of each (user, event_type), ever — streaming
+    first-occurrence dedup on ``applyInPandasWithState``. State per user =
+    the array of event types already seen (bounded by the type vocabulary,
+    not the event count). Batch-twin semantics: ``ROW_NUMBER() OVER
+    (PARTITION BY user_id, event_type ORDER BY ts, event_id) = 1``, which
+    the test asserts."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     return (
@@ -187,94 +194,3 @@ def first_seen_events_apws(events: DataFrame) -> DataFrame:
         )
     )
 
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state API)
-# ---------------------------------------------------------------------------
-
-_FIRST_SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("first_event_id", T.LongType()),
-        T.StructField("first_ts", T.TimestampType()),
-        T.StructField("first_value", T.DoubleType()),
-    ]
-)
-
-
-def first_seen_events(events: DataFrame) -> DataFrame:
-    """Emit only the FIRST event of each (user, event_type), ever — streaming
-    first-occurrence dedup on explicit, queryable state.
-
-    Where :func:`running_user_totals` uses the legacy
-    ``applyInPandasWithState``, this is the same engine pattern on Spark 4's
-    ``transformWithStateInPandas``: a ``StatefulProcessor`` holding a
-    ``MapState`` keyed by event_type per user. The state is schema'd and
-    TTL-capable (production would pass ``ttlDurationMs`` to bound it; the
-    test corpus is finite so none is set), lives in the per-partition
-    RocksDB state store, and survives restarts via the checkpoint.
-
-    Batch-twin semantics: ``ROW_NUMBER() OVER (PARTITION BY user_id,
-    event_type ORDER BY ts, event_id) = 1``.
-
-    Environment gate: the TWS Python driver worker imports
-    ``google.protobuf`` (absent from this test image — verified: the worker
-    crashes with ``ImportError`` on any TWS query), and the operator also
-    needs the RocksDB state-store provider conf. The env-gated test in
-    tests/test_streaming.py runs the full oracle comparison wherever
-    protobuf exists; :func:`running_user_totals` (applyInPandasWithState)
-    remains the active stateful path in this image.
-    """
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class FirstSeen(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._seen = handle.getMapState(
-                "seen", "event_type string", "first_ts timestamp"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            import pandas as pd
-
-            (user_id,) = key
-            chunks = [p for p in rows if len(p)]
-            if not chunks:
-                return
-            pdf = (pd.concat(chunks) if len(chunks) > 1 else chunks[0]).sort_values(
-                ["ts", "event_id"], kind="mergesort"
-            )
-            firsts = pdf.drop_duplicates(subset=["event_type"], keep="first")
-            out = []
-            for r in firsts.itertuples(index=False):
-                if not self._seen.containsKey((r.event_type,)):
-                    self._seen.updateValue((r.event_type,), (r.ts,))
-                    out.append(
-                        (user_id, r.event_type, r.event_id, r.ts, r.value)
-                    )
-            if out:
-                yield pd.DataFrame(
-                    out,
-                    columns=[
-                        "user_id",
-                        "event_type",
-                        "first_event_id",
-                        "first_ts",
-                        "first_value",
-                    ],
-                )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "event_id", "ts", "event_type", "value")
-        .filter("event_type IS NOT NULL")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            FirstSeen(),
-            outputStructType=_FIRST_SEEN_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )

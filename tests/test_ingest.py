@@ -2,6 +2,7 @@
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.sources.csv_ingest import (
@@ -76,6 +77,24 @@ def test_append_run_accumulates_parquet(spark, tmp_path):
     assert out.count() == 3
     assert "_ingested_at" in out.columns
     # no-op third run
+    assert ingest_csv_append(spark, str(src), str(state), str(tgt)) == 0
+
+
+def test_failed_append_keeps_files_for_the_next_run(spark, tmp_path):
+    """The ledger advances only once the append has landed: an append that
+    fails (the target is a plain file) leaves its files unseen, and the
+    next run to a good target lands every row."""
+    src, state = tmp_path / "src", tmp_path / "state"
+    src.mkdir()
+    _write(src / "a.csv", "id,v\n1,1\n2,2\n")
+    bad = tmp_path / "not_a_dir"
+    _write(bad, "occupied")
+    with pytest.raises(Exception):
+        ingest_csv_append(spark, str(src), str(state), str(bad))
+
+    tgt = tmp_path / "bronze"
+    assert ingest_csv_append(spark, str(src), str(state), str(tgt)) == 1
+    assert sorted(r.id for r in spark.read.parquet(str(tgt)).collect()) == [1, 2]
     assert ingest_csv_append(spark, str(src), str(state), str(tgt)) == 0
 
 

@@ -18,6 +18,7 @@ from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analy
     run_incremental,
     run_to_memory,
     stream_source,
+    windowed_event_counts,
 )
 
 
@@ -149,6 +150,75 @@ def test_watermark_advances_across_microbatches_and_gates_emission(spark, tmp_pa
     assert t + h(hours=2) not in emitted
 
 
+def test_run_to_memory_keeps_finalization_batch_for_append_aggregation(spark):
+    """run_to_memory turns no-data microbatches off unless the output can
+    wait on one. An append-mode window aggregation emits its windows only
+    once the watermark passes, so its rows must equal a run with no-data
+    batches on (dropping that batch emits nothing at all here)."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.queries import (
+        _stream_events,
+    )
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.incremental import (
+        _needs_no_data_batches,
+        stream_interval_join,
+    )
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.stateful import (
+        running_user_totals,
+    )
+
+    agg = windowed_event_counts(_stream_events(spark, SF_SMALL))
+    got = run_to_memory(agg, "mem_append_window_rule", output_mode="append").collect()
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        q = (
+            windowed_event_counts(_stream_events(spark, SF_SMALL))
+            .writeStream.format("memory")
+            .queryName("mem_append_window_nodata")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        spark.conf.set(key, prev)
+    want = spark.table("mem_append_window_nodata").collect()
+    assert want
+    assert sorted(got) == sorted(want)
+
+    ev = _stream_events(spark, SF_SMALL)
+    assert not _needs_no_data_batches(agg, "complete")
+    assert not _needs_no_data_batches(dedup_stream(ev, ["user_id"]), "append")
+    assert not _needs_no_data_batches(running_user_totals(ev), "append")
+    timed = (
+        ev.withWatermark("ts", "1 hour")
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            lambda key, pdfs, state: iter(()),
+            outputStructType="user_id long",
+            stateStructType="n long",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+    assert _needs_no_data_batches(timed, "update")  # timers fire in no-data batches
+    left = ev.select(F.col("ts").alias("lts"), F.col("user_id").alias("lu"))
+    right = _stream_events(spark, SF_SMALL).select("ts", "user_id")
+    cond = (F.col("lu") == F.col("user_id")) & F.col("lts").between(
+        F.col("ts") - F.expr("INTERVAL 1 HOUR"), F.col("ts")
+    )
+    assert _needs_no_data_batches(
+        stream_interval_join(left, right, cond, "lts", "ts", how="left"), "append"
+    )
+    assert not _needs_no_data_batches(
+        stream_interval_join(left, right, cond, "lts", "ts"), "append"
+    )
+
+
 def test_foreach_batch_expectations_warn_drop_per_microbatch(spark, tmp_path):
     """maxFilesPerTrigger=1 → one microbatch per file; warn metrics recorded
     per batch, drop rows filtered from the sink, nothing computed twice."""
@@ -219,18 +289,8 @@ def test_sliding_windows_overlap(spark, tmp_path):
 
 
 def test_first_seen_events_stateful(spark):
-    """Streaming first-occurrence dedup must equal the batch
-    ROW_NUMBER()=1 twin — asserted in EVERY container through the
-    ``applyInPandasWithState`` implementation (``first_seen_events_apws``),
-    and ADDITIONALLY through Spark 4's ``transformWithStateInPandas``
-    wherever ``google.protobuf`` exists (the TWS Python driver worker
-    imports it; this test image lacks it — SURVEY §2.8 documents the API
-    gap). No skip either way: the operator contract is always executed,
-    and the protobuf-less branch asserts the gap is still real rather
-    than silently ignoring the forward-path API.
-    """
-    import importlib.util
-
+    """Streaming first-occurrence dedup through ``applyInPandasWithState``
+    (``first_seen_events_apws``) must equal the batch ROW_NUMBER()=1 twin."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.queries import (
         _stream_events,
     )
@@ -238,7 +298,6 @@ def test_first_seen_events_stateful(spark):
         run_to_memory,
     )
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.stateful import (
-        first_seen_events,
         first_seen_events_apws,
     )
 
@@ -251,7 +310,6 @@ def test_first_seen_events_stateful(spark):
     }
     assert want
 
-    # the API available everywhere: applyInPandasWithState
     out = run_to_memory(
         first_seen_events_apws(_stream_events(spark, SF_SMALL)),
         "mem_first_seen_apws",
@@ -260,37 +318,6 @@ def test_first_seen_events_stateful(spark):
         (r.user_id, r.event_type): (r.first_event_id, r.first_ts, r.first_value)
         for r in out.collect()
     }
-    assert got == want
-
-    try:
-        has_protobuf = importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no `google` namespace package at all
-        has_protobuf = False
-    if not has_protobuf:
-        # forward-path API unavailable HERE by environment, not by code:
-        # first_seen_events stays importable/callable (plan construction is
-        # pure), only execution needs the protobuf worker import.
-        assert callable(first_seen_events)
-        return
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = run_to_memory(
-            first_seen_events(_stream_events(spark, SF_SMALL)), "mem_first_seen"
-        )
-        got = {
-            (r.user_id, r.event_type): (r.first_event_id, r.first_ts, r.first_value)
-            for r in out.collect()
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     assert got == want
 
 
@@ -346,8 +373,11 @@ def test_incremental_mv_matches_full_recompute_across_batches(spark, tmp_path):
     bit-identical (decimal state), across multiple runs and microbatches."""
     import datetime as dt
 
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.cdc import (
+        current_version,
+        read_meta,
+    )
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.incremental_mv import (
-        _read_pointer,
         maintain_aggregate_mv,
         read_mv,
     )
@@ -381,7 +411,7 @@ def test_incremental_mv_matches_full_recompute_across_batches(spark, tmp_path):
     seen.extend(rows1)
     maintain_aggregate_mv(stream_source(spark, src), mv, ckpt, ["id"], "v")
     check()
-    v1, b1 = _read_pointer(mv)
+    v1, b1 = current_version(mv), read_meta(mv)["batch_id"]
     assert v1 == 1
 
     # two more files in one run → may fold as one or two microbatches
@@ -392,12 +422,12 @@ def test_incremental_mv_matches_full_recompute_across_batches(spark, tmp_path):
     seen.extend(rows2 + rows3)
     maintain_aggregate_mv(stream_source(spark, src), mv, ckpt, ["id"], "v")
     check()
-    v2, b2 = _read_pointer(mv)
+    v2, b2 = current_version(mv), read_meta(mv)["batch_id"]
     assert v2 > v1 and b2 > b1
 
     # idle run: no new files → no new state version
     maintain_aggregate_mv(stream_source(spark, src), mv, ckpt, ["id"], "v")
-    assert _read_pointer(mv)[0] == v2
+    assert current_version(mv) == v2
 
 
 def test_incremental_mv_replay_guard_skips_duplicate_batch(spark, tmp_path):
@@ -405,8 +435,11 @@ def test_incremental_mv_replay_guard_skips_duplicate_batch(spark, tmp_path):
     content-idempotent, so the pointer's batch id is the guard)."""
     import datetime as dt
 
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.cdc import (
+        current_version,
+        read_meta,
+    )
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.incremental_mv import (
-        _read_pointer,
         read_mv,
         refresh_increment,
     )
@@ -419,23 +452,23 @@ def test_incremental_mv_replay_guard_skips_duplicate_batch(spark, tmp_path):
     assert not refresh_increment(spark, batch, mv, ["id"], "v", batch_id=0)
     r = read_mv(spark, mv).collect()[0]
     assert (r.n_rows, r.sum_value_d) == (1, 5.0)
-    assert _read_pointer(mv) == (1, 0)
+    assert (current_version(mv), read_meta(mv)["batch_id"]) == (1, 0)
 
 
 def test_incremental_mv_crash_redelivery_vs_reset_checkpoint(spark, tmp_path):
     """The two applied=0 skip shapes must be told apart: redelivery of
-    exactly the stored high-water batch (crash between pointer flip and
-    checkpoint commit) passes quietly with the MV intact, while a
-    checkpoint reset (ids replaying BELOW the mark) raises."""
+    exactly the head's batch (crash between the MV commit and the
+    checkpoint commit) passes quietly and counts the rows once, while a
+    checkpoint reset (ids replaying BELOW the head's) raises."""
     import datetime as dt
     import shutil
 
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.incremental_mv import (
-        _flip_pointer,
-        _read_pointer,
         maintain_aggregate_mv,
         read_mv,
+        refresh_increment,
     )
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.cdc import read_meta
 
     src = str(tmp_path / "landing")
     mv = str(tmp_path / "mv")
@@ -444,23 +477,96 @@ def test_incremental_mv_crash_redelivery_vs_reset_checkpoint(spark, tmp_path):
 
     _drop(spark, [(1, 2.0, t0), (2, 3.0, t0)], src)
     maintain_aggregate_mv(stream_source(spark, src), mv, ckpt, ["id"], "v")
-    v, b = _read_pointer(mv)
+    b = read_meta(mv)["batch_id"]
 
-    # simulate the crash window: pointer flipped for batch b+1 but the
-    # checkpoint never committed it — the next run redelivers that exact
-    # batch id, refresh_increment skips it, and the run must NOT raise
-    _drop(spark, [(1, 10.0, t0)], src)
-    _flip_pointer(mv, v, b + 1)  # pointer one batch ahead of the checkpoint
+    # the crash window: batch b+1 folded into the MV, but the checkpoint
+    # never committed it — the next run redelivers those same rows under
+    # the same id, refresh_increment skips them, and the run must NOT raise
+    rows = [(1, 10.0, t0)]
+    _drop(spark, rows, src)
+    batch = spark.createDataFrame(rows, "id int, v double, ts timestamp")
+    assert refresh_increment(spark, batch, mv, ["id"], "v", batch_id=b + 1)
     maintain_aggregate_mv(stream_source(spark, src), mv, ckpt, ["id"], "v")
-    assert _read_pointer(mv) == (v, b + 1)  # skipped quietly, MV intact
-    assert read_mv(spark, mv).count() == 2
+    assert read_meta(mv)["batch_id"] == b + 1
+    got = {r.id: (r.n_rows, r.sum_value_d) for r in read_mv(spark, mv).collect()}
+    assert got == {1: (2, 12.0), 2: (1, 3.0)}  # the redelivered rows count once
 
     # genuine reset: checkpoint wiped while mv persists → replayed ids are
-    # below the stored mark → loud failure, not a silently frozen MV
+    # below the head's → loud failure, not a silently frozen MV
     shutil.rmtree(ckpt)
     _drop(spark, [(3, 4.0, t0)], src)
     with pytest.raises(RuntimeError, match="reset"):
         maintain_aggregate_mv(stream_source(spark, src), mv, ckpt, ["id"], "v")
+
+
+def test_incremental_mv_state_is_a_versioned_snapshot_table(spark, tmp_path):
+    """MV state commits through the CDC snapshot protocol: the cdc reader
+    sees the MV's head version and reads the same state as read_state."""
+    import datetime as dt
+
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.cdc import (
+        current_version,
+        read_current,
+    )
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.incremental_mv import (
+        maintain_aggregate_mv,
+        read_state,
+    )
+
+    src = str(tmp_path / "landing")
+    mv = str(tmp_path / "mv")
+    ckpt = str(tmp_path / "ckpt")
+    t0 = dt.datetime(2024, 1, 1)
+    _drop(spark, [(1, 2.0, t0), (2, 3.0, t0)], src)
+    maintain_aggregate_mv(stream_source(spark, src), mv, ckpt, ["id"], "v")
+    _drop(spark, [(1, 5.0, t0)], src)
+    maintain_aggregate_mv(stream_source(spark, src), mv, ckpt, ["id"], "v")
+
+    assert current_version(mv) == 2
+    via_cdc = read_current(spark, mv)
+    assert via_cdc is not None
+    assert sorted(via_cdc.collect()) == sorted(read_state(spark, mv).collect())
+
+
+def test_incremental_mv_orphan_is_repaired_and_batch_counted_once(
+    spark, tmp_path, monkeypatch
+):
+    """A fold that claims v=2 but dies before the pointer flip leaves an
+    orphan snapshot carrying its batch id. Redelivering that batch id
+    repairs the pointer and skips the fold: the batch is counted once."""
+    import datetime as dt
+
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming import cdc
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.incremental_mv import (
+        read_mv,
+        refresh_increment,
+    )
+
+    mv = str(tmp_path / "mv")
+    sch = "id int, v double, ts timestamp"
+    t0 = dt.datetime(2024, 1, 1)
+    assert refresh_increment(
+        spark, spark.createDataFrame([(1, 1.0, t0)], sch), mv, ["id"], "v", batch_id=0
+    )
+    batch = spark.createDataFrame([(1, 5.0, t0)], sch)
+
+    real_advance = cdc._advance_pointer
+
+    def crash(table_path, version):
+        monkeypatch.setattr(cdc, "_advance_pointer", real_advance)
+        raise RuntimeError("writer died before the pointer flip")
+
+    monkeypatch.setattr(cdc, "_advance_pointer", crash)
+    with pytest.raises(RuntimeError, match="pointer flip"):
+        refresh_increment(spark, batch, mv, ["id"], "v", batch_id=1)
+    assert cdc.current_version(mv) == 1
+    assert os.path.exists(os.path.join(mv, "v=2", "_SUCCESS"))
+
+    assert not refresh_increment(spark, batch, mv, ["id"], "v", batch_id=1)
+    assert cdc.current_version(mv) == 2
+    assert cdc.read_meta(mv)["batch_id"] == 1
+    r = read_mv(spark, mv).collect()[0]
+    assert (r.n_rows, r.sum_value_d) == (2, 6.0)
 
 
 def test_incremental_mv_reset_raises_even_when_later_batches_applied(spark, tmp_path):
