@@ -72,12 +72,6 @@ def _spread_bits_x4(c: Column) -> Column:
     return c
 
 
-def morton_key_2d(x_rank: Column, y_rank: Column) -> Column:
-    """Interleave two 16-bit bucket ranks into one 32-bit Morton key
-    (x on even bits, y on odd)."""
-    return _spread_bits(x_rank).bitwiseOR(F.shiftleft(_spread_bits(y_rank), 1))
-
-
 def _bucket_rank(col: Column, lo: Column, hi: Column, bits: int) -> Column:
     """Equal-width rank of ``col`` in [lo, hi] as an integer 0..2^bits-1."""
     n = 1 << bits
@@ -86,29 +80,6 @@ def _bucket_rank(col: Column, lo: Column, hi: Column, bits: int) -> Column:
         F.lit(0.0)
     )
     return F.least(F.floor(frac * n), F.lit(n - 1)).cast("int")
-
-
-def with_morton_key(
-    df: DataFrame, x: str, y: str, key: str = "__zkey", bits: int = 16
-) -> DataFrame:
-    """Attach a 2-D Morton key over columns ``x``/``y``.
-
-    The per-column [min, max] comes from one 1-row aggregate broadcast into
-    the scan; everything else is bitwise codegen.
-    """
-    stats = df.agg(
-        F.min(x).alias("__xlo"),
-        F.max(x).alias("__xhi"),
-        F.min(y).alias("__ylo"),
-        F.max(y).alias("__yhi"),
-    )
-    xr = _bucket_rank(F.col(x), F.col("__xlo"), F.col("__xhi"), bits)
-    yr = _bucket_rank(F.col(y), F.col("__ylo"), F.col("__yhi"), bits)
-    return (
-        df.join(F.broadcast(stats))
-        .withColumn(key, morton_key_2d(xr, yr))
-        .drop("__xlo", "__xhi", "__ylo", "__yhi")
-    )
 
 
 def _numeric_proxy(df: DataFrame, col: str) -> Column:
@@ -234,22 +205,3 @@ def cluster_frame(
         .drop("__zkey")
     )
 
-
-def zorder_write(
-    df: DataFrame, x: str, y: str, path: str, num_files: int = 16, bits: int = 16
-) -> None:
-    """Write ``df`` to parquet clustered in Z-order on (x, y).
-
-    One range shuffle on the Morton key, one local sort per file — the same
-    physical recipe as OPTIMIZE ZORDER BY. Each output file then covers a
-    compact (x, y) hyper-rectangle, so footer min/max stats prune files for
-    predicates on either column.
-    """
-    keyed = with_morton_key(df, x, y, bits=bits)
-    (
-        keyed.repartitionByRange(num_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

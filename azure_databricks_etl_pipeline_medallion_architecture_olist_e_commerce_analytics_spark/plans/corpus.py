@@ -33,7 +33,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from .registry import Pipeline
+from .registry import Pipeline, shared_dataframe
 
 
 def corpus_silver_columns() -> list:
@@ -104,25 +104,11 @@ def build_corpus_pipeline(sf_dir: str) -> Pipeline:
     return p
 
 
-# One resolved-plan cache per (Spark application, testdata dir), same
-# rationale as plans/medallion.py:_RESOLVERS (DLT resolves the pipeline
-# graph once per update; DataFrames are immutable logical plans).
-_RESOLVERS: dict = {}
-
-
 def corpus_dataframe(spark, sf_dir: str, dataset: str):
     """Resolve ``dataset`` against the shared per-session corpus-pipeline
-    resolution (memoized — the mixture MV resolves survivors and silver
-    from the same cache)."""
-    from .registry import _Resolver
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    resolver = _RESOLVERS.get(key)
-    if resolver is None:
-        _RESOLVERS.clear()
-        resolver = _Resolver(build_corpus_pipeline(sf_dir), spark)
-        _RESOLVERS[key] = resolver
-    return resolver.read(dataset)
+    resolution (plans/registry.py ``shared_dataframe`` — the mixture MV
+    resolves survivors and silver from the same cache)."""
+    return shared_dataframe(spark, build_corpus_pipeline, sf_dir, dataset)
 
 
 def corpus_silver_expectations() -> list:

@@ -34,7 +34,7 @@ import os
 from pyspark.sql import functions as F
 
 from ..functions.maps import mapping_column
-from .registry import Pipeline
+from .registry import Pipeline, shared_dataframe
 
 # Literal lookup map, same pattern as the reference's 27-state expansion
 # (silver_customers.py:20-49,64-72): map literal instead of nested WHENs.
@@ -308,33 +308,10 @@ def build_pipeline(sf_dir: str) -> Pipeline:
     return p
 
 
-# One resolved-plan cache per (Spark application, testdata dir). DLT resolves
-# the pipeline graph ONCE per update and serves every dataset from that
-# resolution (SURVEY.md §3.1 step 2); re-running the recursive resolver for
-# each dataset request would instead re-pay Catalyst analysis of the whole
-# medallion (~0.9s for the fact at any SF — pure driver-side cost that grows
-# with plan width, not data). DataFrames are immutable logical plans, so
-# serving a memoized one is semantically identical.
-_RESOLVERS: dict = {}
-
-
 def pipeline_dataframe(spark, sf_dir: str, dataset: str):
-    """Resolve ``dataset`` against the shared per-session pipeline resolution.
-
-    Datasets resolved while building another one (the fact pulls in every
-    silver table and all five dims) are served from the same cache, so e.g.
-    ``gold.dim_customers`` after ``gold.fact_lineitem`` costs zero analysis.
-    """
-    from .registry import _Resolver
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    resolver = _RESOLVERS.get(key)
-    if resolver is None:
-        # Drop resolutions belonging to stopped sessions.
-        _RESOLVERS.clear()
-        resolver = _Resolver(build_pipeline(sf_dir), spark)
-        _RESOLVERS[key] = resolver
-    return resolver.read(dataset)
+    """Resolve ``dataset`` against the shared per-session medallion
+    resolution (plans/registry.py ``shared_dataframe``)."""
+    return shared_dataframe(spark, build_pipeline, sf_dir, dataset)
 
 
 def _register_gold(p: Pipeline) -> None:

@@ -59,7 +59,6 @@ from .expectations import (
     ExpectationViolation,
     apply_expectations,
     enforce_fail,
-    expectation_metrics,
     observe_expectations,
 )
 
@@ -359,7 +358,6 @@ class Pipeline:
         self,
         spark: SparkSession,
         warehouse: str | None = None,
-        collect_metrics: bool = True,
         fmt: str = "parquet",
     ) -> dict:
         """Materialize every table/MV dataset, upstream tables first.
@@ -390,22 +388,16 @@ class Pipeline:
             # short-circuits, which would freeze an observation at partial
             # counts (see observe_expectations docstring)
             enforce_fail(d.name, df, d.expectations)
-            obs = None
-            if collect_metrics:
-                # row count + warn violation counts ride the write job —
-                # one scan materializes the table AND its metrics
-                df, obs = observe_expectations(df, d.expectations)
-            n = write_table(
-                spark, df, d, warehouse=warehouse, fmt=fmt, count=obs is None
-            )
+            # row count + warn violation counts ride the write job —
+            # one scan materializes the table AND its metrics
+            df, obs = observe_expectations(df, d.expectations)
+            write_table(spark, df, d, warehouse=warehouse, fmt=fmt)
             end = time.perf_counter() - t0
-            entry: dict = {"rows": n}
-            if obs is not None:
-                m = obs.get
-                entry["rows"] = int(m["__rows"])
-                warn_counts = {k: int(v or 0) for k, v in m.items() if k != "__rows"}
-                if warn_counts:
-                    entry["expectations"] = warn_counts
+            m = obs.get
+            entry: dict = {"rows": int(m["__rows"])}
+            warn_counts = {k: int(v or 0) for k, v in m.items() if k != "__rows"}
+            if warn_counts:
+                entry["expectations"] = warn_counts
             entry.update(start_s=start, end_s=end)
             return entry
 
@@ -448,3 +440,31 @@ class Pipeline:
             raise errors[0]
         return {d.name: written[d.name] for d in targets}
 
+
+# One shared resolution per pipeline builder. DLT resolves the pipeline graph
+# ONCE per update and serves every dataset from that resolution (SURVEY.md
+# §3.1 step 2); re-running the recursive resolver for each dataset request
+# would instead re-pay Catalyst analysis of the whole pipeline (~0.9s for the
+# medallion fact at any SF — driver-side cost that grows with plan width, not
+# data). DataFrames are immutable logical plans, so serving a memoized one is
+# semantically identical. Keyed by builder, so the medallion and corpus
+# resolutions never evict each other.
+_SHARED: dict[Callable, tuple[tuple, _Resolver]] = {}
+
+
+def shared_dataframe(
+    spark: SparkSession, build: Callable[[str], Pipeline], sf_dir: str, dataset: str
+) -> DataFrame:
+    """Resolve ``dataset`` against the shared resolution of ``build(sf_dir)``.
+
+    Datasets resolved while building another one (the medallion fact pulls
+    in every silver table and all five dims) are served from the same cache,
+    so e.g. ``gold.dim_customers`` after ``gold.fact_lineitem`` costs zero
+    analysis. The builder's resolver is replaced when the Spark application
+    or ``sf_dir`` changes, which also drops resolutions of stopped sessions.
+    """
+    key = (spark.sparkContext.applicationId, sf_dir)
+    held = _SHARED.get(build)
+    if held is None or held[0] != key:
+        held = _SHARED[build] = (key, _Resolver(build(sf_dir), spark))
+    return held[1].read(dataset)

@@ -20,7 +20,8 @@ itself (SURVEY.md §3.2: "parse the small DDL wrapper with a ~100-LoC
 regex/grammar") and registers the result into a :class:`Pipeline` as an ``mv``
 dataset: full-refresh overwrite on run, constraints mapped to the
 expectations layer (EXPECT → warn, ON VIOLATION FAIL UPDATE → fail,
-ON VIOLATION DROP ROW → drop), CLUSTER BY → the sink's clustering fallback,
+ON VIOLATION DROP ROW → drop), CLUSTER BY → the sink's clustering fallback
+(a PARTITIONED BY clause is rejected, not silently dropped),
 and the SELECT body handed to Spark SQL with ``LIVE.`` references resolved by
 the registry (registry.py ``_run_sql``).
 
@@ -47,7 +48,6 @@ _CONSTRAINT_RE = re.compile(
     re.IGNORECASE | re.DOTALL | re.MULTILINE,
 )
 _CLUSTER_RE = re.compile(r"CLUSTER\s+BY\s*\((?P<cols>[^)]*)\)", re.IGNORECASE)
-_PARTITION_RE = re.compile(r"PARTITIONED?\s+BY\s*\((?P<cols>[^)]*)\)", re.IGNORECASE)
 _COMMENT_RE = re.compile(r"COMMENT\s+(\"(?P<c1>[^\"]*)\"|'(?P<c2>[^']*)')", re.IGNORECASE)
 _TBLPROP_RE = re.compile(r"TBLPROPERTIES\s*\((?P<body>.*?)\)", re.IGNORECASE | re.DOTALL)
 _PROP_PAIR_RE = re.compile(r"'(?P<k>[^']+)'\s*=\s*'(?P<v>[^']*)'")
@@ -61,7 +61,6 @@ class MvSpec:
     comment: str = ""
     expectations: list[Expectation] = field(default_factory=list)
     cluster_by: tuple = ()
-    partition_by: tuple = ()
     table_properties: dict = field(default_factory=dict)
 
 
@@ -82,6 +81,13 @@ def parse_mv_ddl(ddl: str) -> MvSpec:
     if not hm:
         raise ValueError("not a CREATE OR REFRESH MATERIALIZED VIEW statement")
     name = hm.group("name")
+    if re.search(r"\bPARTITIONED\s+BY\b", _COMMENT_RE.sub("", header), re.IGNORECASE):
+        # the engine lays MVs out by CLUSTER BY only; a partitioned MV would
+        # otherwise be written unpartitioned without a word
+        raise ValueError(
+            f"{name}: PARTITIONED BY is not supported on a materialized view; "
+            "use CLUSTER BY"
+        )
 
     expectations = []
     for cm in _CONSTRAINT_RE.finditer(header):
@@ -113,7 +119,6 @@ def parse_mv_ddl(ddl: str) -> MvSpec:
         comment=comment,
         expectations=expectations,
         cluster_by=_cols(_CLUSTER_RE),
-        partition_by=_cols(_PARTITION_RE),
         table_properties=props,
     )
 

@@ -30,7 +30,7 @@ from .plans.medallion import SEGMENT_DISPLAY, pipeline_dataframe
 from .sources.loader import load_table, spread_partitions
 from .tpch import TPCH_ORACLES as _TPCH_ORACLES
 from .tpch import TPCH_QUERIES as _TPCH_QUERIES
-from .tuning import tune_session
+from .tuning import catalog_entry
 
 _LANG_SCORE_SQL = ", ".join(
     f"len(list_intersect(toks, {words!r})) AS s_{lang}"
@@ -230,7 +230,6 @@ _FACT_LINEITEM = f"""
 
 def _pipeline_q(dataset: str, drop: tuple[str, ...] = ()) -> Callable:
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        tune_session(spark)
         df = pipeline_dataframe(spark, sf_dir, dataset)
         return df.drop(*drop) if drop else df
 
@@ -249,7 +248,6 @@ def _cast_dim_date_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension (sequence()+explode generator, W2/W3 date_key windows) from
     the registry DAG; oracle casts its BIGINT date_key to INTEGER to match
     Spark's ROW_NUMBER int."""
-    tune_session(spark)
     return pipeline_dataframe(spark, sf_dir, "gold.dim_date")
 
 
@@ -261,7 +259,6 @@ def _corpus_q(dataset: str, drop: tuple[str, ...] = ()) -> Callable:
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .plans.corpus import corpus_dataframe
 
-        tune_session(spark)
         df = corpus_dataframe(spark, sf_dir, dataset)
         return df.drop(*drop) if drop else df
 
@@ -292,7 +289,6 @@ def q_corpus_survivors_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Identical result contract — same oracle as the MV."""
     from .plans.corpus import corpus_dataframe
 
-    tune_session(spark)
     silver = corpus_dataframe(spark, sf_dir, "silver.corpus_docs")
     grouped = silver.groupBy("fingerprint").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_copies"),
@@ -333,7 +329,6 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     group's split forever)."""
     from .plans.corpus import corpus_dataframe
 
-    tune_session(spark)
     silver = corpus_dataframe(spark, sf_dir, "silver.corpus_docs")
     b = F.substring(F.md5(F.col("fingerprint")), 1, 2)
     return silver.select(
@@ -367,7 +362,6 @@ def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.prefix import with_running_total
     from .plans.corpus import corpus_dataframe
 
-    tune_session(spark)
     silver = corpus_dataframe(spark, sf_dir, "silver.corpus_docs").select(
         "doc_id", "quality_score", F.col("bpe_tokens").alias("n_tokens")
     )
@@ -400,7 +394,6 @@ def q_corpus_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     table writes."""
     from .plans.corpus import corpus_dataframe, corpus_silver_expectations
 
-    tune_session(spark)
     silver = corpus_dataframe(spark, sf_dir, "silver.corpus_docs")
     exps = corpus_silver_expectations()
     counted = silver.agg(
@@ -428,7 +421,6 @@ def q_corpus_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_typed_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1/P2/F1: select with cast+rename, column drop."""
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.drop("l_tax")
@@ -444,7 +436,6 @@ def q_typed_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P4-P9: where / between / isin / null / length / date-cast predicates."""
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     return (
@@ -466,7 +457,6 @@ def q_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1-A4: groupBy sum / countDistinct / max / collect_set→sort→join."""
-    tune_session(spark)
     # Single-row-group input ⇒ one scan task; the ObjectHashAggregate
     # (collect_set is object-based, no codegen) would run single-threaded.
     # Aggregate results are partitioning-independent, so spreading is safe.
@@ -494,7 +484,6 @@ def q_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_global_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: ungrouped global aggregate over date expressions."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.agg(
         F.min(F.to_date("o_orderdate")).alias("min_order_date"),
@@ -505,7 +494,6 @@ def q_global_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_window_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1/P5/A5: row_number partitioned dedup, rn=1 filter, any_value."""
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
     return (
@@ -522,7 +510,6 @@ def q_window_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J8: left-semi referential check (the reference's disabled expectation,
     Silver_order_items.py:36)."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     big_items = load_table(spark, sf_dir, "lineitem").filter(F.col("l_extendedprice") > 50000)
     return orders.join(
@@ -537,7 +524,6 @@ def q_scalar_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions.keys import surrogate_key
     from .functions.maps import mapping_column
 
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     return orders.select(
         F.col("o_orderkey"),
@@ -567,7 +553,6 @@ def q_scalar_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_date_expr_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4/J5: equi-join on derived date expression, inner + left."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     per_day = orders.groupBy(F.to_date("o_orderdate").alias("d")).agg(
@@ -592,7 +577,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on the full text."""
     from .operators.dedup import exact_dedup
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return exact_dedup(docs, ["text"], "doc_id")
 
@@ -601,7 +585,6 @@ def q_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-fingerprint dedup (order-insensitive near-dup groups)."""
     from .operators.dedup import fingerprint_dedup
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return fingerprint_dedup(docs)
 
@@ -610,7 +593,6 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (bounded brute-force baseline)."""
     from .operators.dedup import jaccard_pairs
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     return jaccard_pairs(docs, threshold=0.8)
 
@@ -651,7 +633,6 @@ def q_jaccard_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel."""
     from .operators.dedup import jaccard_prefix_join
 
-    tune_session(spark)
     # spread: documents parquet arrives in O(1) partitions at small SF;
     # the per-row shingle construction is the dominant map cost and must
     # parallelize across cores
@@ -666,7 +647,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import jaccard_pairs
     from .operators.graph import dedup_clusters
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     pairs = jaccard_pairs(docs, threshold=0.8)
     return dedup_clusters(docs, pairs)
@@ -681,7 +661,6 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import jaccard_pairs
     from .operators.graph import dedup_clusters
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     comp = dedup_clusters(docs, jaccard_pairs(docs, threshold=0.8))
     joined = comp.select("doc_id", "component_id").join(
@@ -705,7 +684,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-for-byte. Same plan shape as the murmur3 scale path."""
     from .operators.dedup import minhash_lsh_pairs
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(docs, threshold=0.8, hash_family="md5")
 
@@ -716,7 +694,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked end-to-end. Same plan shape as the xxhash64 scale path."""
     from .operators.dedup import simhash_pairs
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return simhash_pairs(docs, max_hamming=8, hash_family="md5")
 
@@ -725,7 +702,6 @@ def q_text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID, quality score, token counts, fingerprint in one pass."""
     from .operators.textops import analyze_documents
 
-    tune_session(spark)
     # spread: the one-pass analysis projection is the dominant per-row
     # cost and the single-row-group scan would run it on one task
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
@@ -741,7 +717,6 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the expression path."""
     from .operators.similarity import brute_force_topk
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     out = brute_force_topk(
         emb, k=3, query_filter=F.col("vec_id") < 100, vectorized_dim=64
@@ -763,7 +738,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.similarity import brute_force_topk
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     out = brute_force_topk(
         emb,
@@ -791,7 +765,6 @@ def q_ann_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition top-k, O(k·q) merge) — same oracle as ann_topk."""
     from .operators.similarity import brute_force_topk_np
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     out = brute_force_topk_np(emb, k=3, query_filter=F.col("vec_id") < 100)
     return out.withColumn("rank", F.col("rank").cast("int"))
@@ -801,7 +774,6 @@ def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate top-k (scale path; no oracle — approximate)."""
     from .operators.similarity import ivf_topk
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     out = ivf_topk(emb, k=3, n_centroids=16, query_filter=F.col("vec_id") < 100)
     return out.withColumn("rank", F.col("rank").cast("int"))
@@ -816,7 +788,6 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (order-independent), WindowGroupLimit top-k. Fully value-oracled."""
     from .operators.similarity import pq_topk
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_topk(emb, k=3, query_filter=F.col("vec_id") < 100)
 
@@ -833,7 +804,6 @@ def q_pq_topk_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(corpus))."""
     from .operators.similarity import pq_topk_trained
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_topk_trained(emb, k=3, rounds=2, query_filter=F.col("vec_id") < 100)
 
@@ -849,7 +819,6 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (DuckDB replays assignment, codes, LUT terms, and ranks)."""
     from .operators.similarity import ivfpq_topk
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return ivfpq_topk(emb, k=3, query_filter=F.col("vec_id") < 100)
 
@@ -867,7 +836,6 @@ def q_ivf_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-cell probe list."""
     from .operators.similarity import ivf_topk
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     out = ivf_topk(
         emb, k=3, n_centroids=16, nprobe=4, query_filter=F.col("vec_id") < 100
@@ -885,7 +853,6 @@ def q_ivfpq_nprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid_id, order-independent micro-integer ADC, WindowGroupLimit."""
     from .operators.similarity import ivfpq_topk
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return ivfpq_topk(emb, k=3, nprobe=4, query_filter=F.col("vec_id") < 100)
 
@@ -912,7 +879,6 @@ def q_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-shuffle literal-codebook corpus encode, WindowGroupLimit top-k."""
     from .operators.similarity import ivfpq_residual_topk
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return ivfpq_residual_topk(
         emb, k=3, nprobe=4, query_filter=F.col("vec_id") < 100
@@ -966,7 +932,6 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivfpq_topk,
     )
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     qf = F.col("vec_id") < 100
     sweep = (1, 2, 4)
@@ -1062,7 +1027,6 @@ def q_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-doc equal-score strata still yield distinct pair members). Strata
     with < 2 docs drop — no pair exists. Zero Python, one shuffle.
     """
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     scored = docs.select(
         "doc_id",
@@ -1126,7 +1090,6 @@ def q_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.bloom import bloom_build_positions, bloom_prune
 
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     supp = load_table(spark, sf_dir, "supplier")
     build = supp.filter(F.col("s_nationkey") == 7).select("s_suppkey")
@@ -1190,7 +1153,6 @@ def q_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import pagerank_integer
 
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         F.expr(
@@ -1249,7 +1211,6 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     to cut exchange bytes ~8×; the value-oracled form keeps the strings
     so DuckDB can replay them (the md5-vs-xxhash trade the minhash family
     documents). Output is O(docs); dup share in exact integer ppm."""
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.split(F.trim("text"), r"\s+").alias("w")
@@ -1304,7 +1265,6 @@ def q_substring_dedup_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling-window hash+explode (zero Python), ONE map-side-combined
     count per distinct hash, equi-join back, per-doc aggregate — only the
     join/shuffle key type narrows to BIGINT."""
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.split(F.trim("text"), r"\s+").alias("w")
@@ -1356,7 +1316,6 @@ def q_substring_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc collect_set of positions drives a JVM-side filter-by-index
     rebuild (no Python anywhere). Deterministic: position membership is
     order-independent, the rebuild preserves original token order."""
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.split(F.trim("text"), r"\s+").alias("w")
@@ -1431,7 +1390,6 @@ def q_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         sql_array_lit,
     )
 
-    tune_session(spark)
     emb = _valid_vectors(load_table(spark, sf_dir, "embeddings"), "embedding", 64)
     qrow = emb.filter(F.col("vec_id") == 0).select("embedding").collect()
     if not qrow:
@@ -1524,7 +1482,6 @@ def q_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — random vectors top out near 0.44 cosine)."""
     from .operators.similarity import embedding_dup_pairs
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_dup_pairs(emb, threshold=0.4, query_filter=F.col("vec_id") < 200)
 
@@ -1535,7 +1492,6 @@ def q_embedding_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the corpus's 0.4-threshold regime (recall ≈ 0.98 at s = 0.4)."""
     from .operators.similarity import srp_lsh_dup_pairs
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return srp_lsh_dup_pairs(
         emb,
@@ -1563,7 +1519,6 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     framing fails the value match. (PIL remains only for lossy formats.)"""
     from .operators.multimodal import attach_image_payload, decode_bmp_meta
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return decode_bmp_meta(attach_image_payload(docs))
 
@@ -1572,7 +1527,6 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling fan-out over binary payloads (mapInPandas)."""
     from .operators.multimodal import attach_binary_payload, sample_frames
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return sample_frames(attach_binary_payload(docs))
 
@@ -1592,7 +1546,6 @@ def q_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     JPEG for images."""
     from .operators.audio import attach_audio_payload, decode_audio_meta
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return decode_audio_meta(attach_audio_payload(docs))
 
@@ -1609,7 +1562,6 @@ def q_audio_window_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-pinned."""
     from .operators.audio import attach_audio_payload, audio_window_energy
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return audio_window_energy(attach_audio_payload(docs), window=128)
 
@@ -1627,7 +1579,6 @@ def q_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     framing, and plane-size arithmetic are all value-pinned."""
     from .operators.video import attach_video_payload, decode_video_meta
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return decode_video_meta(attach_video_payload(docs))
 
@@ -1642,7 +1593,6 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     luma, pinning the stride arithmetic and plane offsets."""
     from .operators.video import attach_video_payload, sample_video_frames
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return sample_video_frames(attach_video_payload(docs), stride=2)
 
@@ -1663,7 +1613,6 @@ def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.video import attach_video_payload, video_scene_cuts
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return video_scene_cuts(attach_video_payload(docs), threshold_milli=24700)
 
@@ -1681,7 +1630,6 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-pinned, not just the individual codecs."""
     from .operators.multimodal import attach_media_payload, decode_media_meta
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return decode_media_meta(attach_media_payload(docs))
 
@@ -1695,7 +1643,6 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         resize_image_meta,
     )
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return resize_image_meta(
         decode_image_meta(attach_binary_payload(docs), use_real_decoder=False),
@@ -1714,7 +1661,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram from character codepoints."""
     from .operators.multimodal import attach_binary_payload, extract_byte_features
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     feats = extract_byte_features(attach_binary_payload(docs), bins=16)
     nb = F.col("n_bytes").cast("double")
@@ -1739,7 +1685,6 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a DuckDB oracle. Same plan shape as the xxhash64 scale path."""
     from .operators.textops import winnow_fingerprints
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return winnow_fingerprints(docs, k=5, w=4, hash_family="md5")
 
@@ -1760,7 +1705,6 @@ def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL counts (missing ≠ clean) and SUM skips them in both engines."""
     from .operators.textops import scan_pii
 
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     did = F.col("doc_id")
     injected = docs.select(
@@ -1817,7 +1761,6 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join (the inverted-index twin of the LSH bucket cap)."""
     from .operators.textops import containment_pairs
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return containment_pairs(
         docs, k=5, w=4, threshold_ppm=600_000, max_df=256, hash_family="md5"
@@ -1831,7 +1774,6 @@ def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a k-row merge on the driver — so the cost is O(n) scan + O(k) result
     regardless of data size; no global sort materializes.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select("o_orderkey", "o_custkey", "o_totalprice")
@@ -1845,7 +1787,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the event (union + last_value window — one shuffle, no pair explosion)."""
     from .operators.asof import as_of_join
 
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     orders = load_table(spark, sf_dir, "orders")
     per_day = orders.groupBy(
@@ -1865,7 +1806,6 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposition (equi-shuffle on (user, hour-bucket), never a nested loop)."""
     from .operators.rangejoin import point_in_interval_join
 
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events")
     points = ev.select(
         "user_id", F.col("event_id").alias("dst_event"), F.col("ts").alias("dst_ts")
@@ -1887,7 +1827,6 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: order counts per year × status as columns (explicit value list
     keeps the plan one-pass — no distinct-values pre-scan)."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     pv = (
         orders.withColumn("order_year", F.year("o_orderdate"))
@@ -1904,7 +1843,6 @@ def q_pivot_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT / UNION: event users with orders vs customers
     without orders, tagged and unioned."""
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -1920,7 +1858,6 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ntile_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NTILE quartiles of order value within status (deterministic order)."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -1935,7 +1872,6 @@ def q_ntile_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_rollup_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP aggregation: per (year, status) with subtotals + grand total."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.withColumn("order_year", F.year("o_orderdate"))
@@ -1955,7 +1891,6 @@ def q_stat_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     per group. All second-moment aggregates are numerically partition-order
     sensitive at the ulp level, so results round to 6dp (the engine's
     cross-engine comparison convention)."""
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1972,7 +1907,6 @@ def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array-function matrix (transform/filter/aggregate/
     sequence/slice/reverse/contains) — all JVM-side lambda expressions,
     whole-stage-codegen friendly; no UDFs."""
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 2000)
     seq = F.sequence(F.lit(1), F.col("l_linenumber").cast("int"))
     return li.select(
@@ -2004,7 +1938,6 @@ def q_window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders by value only — frame membership depends on values, not tie
     order, so it is deterministic by construction.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     dec = F.col("o_totalprice").cast("decimal(18,2)")
@@ -2027,7 +1960,6 @@ def q_window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cube_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE aggregation: all 4 grouping combinations of (year, status)."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.withColumn("order_year", F.year("o_orderdate"))
@@ -2046,7 +1978,6 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS: per-year and per-status marginals in one pass (no
     grand total, no cross cells — the two cube slices a report actually
     wants, at half the aggregate rows)."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     orders.withColumn("order_year", F.year("o_orderdate")).createOrReplaceTempView(
         "__gs_orders"
@@ -2065,7 +1996,6 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join: orders with no line items (referential orphans)."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     return orders.join(
@@ -2075,7 +2005,6 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cross_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross join: the (region × order-status) reporting scaffold."""
-    tune_session(spark)
     region = load_table(spark, sf_dir, "region")
     orders = load_table(spark, sf_dir, "orders")
     statuses = orders.select(F.col("o_orderstatus").alias("status")).distinct()
@@ -2090,7 +2019,6 @@ def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe side. The average is computed identically on both engines
     (exact DECIMAL sum ÷ count, then one double division).
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     avg_df = orders.agg(
         (
@@ -2114,7 +2042,6 @@ def q_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.dedup import tokens_col
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     return docs.select(
         "doc_id", F.posexplode(F.array_sort(tokens_col("text"))).alias("pos", "token")
@@ -2125,7 +2052,6 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String-function matrix beyond the reference's trim/upper/concat:
     regexp_extract, substring, split→join, lpad, reverse, strpos,
     levenshtein (fuzzy-match primitive for entity resolution)."""
-    tune_session(spark)
     part = load_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
@@ -2145,7 +2071,6 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     16× wider so a hot order key cannot straggle one reducer."""
     from .operators.skew import salted_join
 
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("okey"), "l_linenumber", "l_extendedprice"
     )
@@ -2163,7 +2088,6 @@ def q_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-50 bigrams (explode → hash agg → TakeOrdered top-k)."""
     from .operators.textops import top_ngrams
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return top_ngrams(docs, n=2, k=50)
 
@@ -2172,7 +2096,6 @@ def q_tf_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF per (document, term) on a bounded slice (value-level oracle)."""
     from .operators.textops import tf_idf
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") < 200)
     return tf_idf(corpus).filter(F.col("doc_id") < 50)
@@ -2182,7 +2105,6 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pretraining filter chain: quality ≥ 0.5 AND predicted English."""
     from .operators.textops import quality_filter
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return quality_filter(docs, min_score=0.5, lang="en")
 
@@ -2192,7 +2114,6 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     every engine and every run (unlike rand()-based sampling), and the same
     rows for a key across tables, which is what makes joins of samples line
     up at 100 TB."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     bucket = F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1)
     return orders.filter(bucket.isin("0", "1")).select(
@@ -2210,7 +2131,6 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaced, the rest untouched."""
     from .operators.merge import merge_upsert
 
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     source = (
         orders.filter(F.col("o_orderkey") % 10 == 0)
@@ -2226,7 +2146,6 @@ def q_scd2_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     update rows whose tracked attributes match are no-ops."""
     from .operators.merge import scd2_apply
 
-    tune_session(spark)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment"
     )
@@ -2256,7 +2175,6 @@ def q_scd2_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON round-trip: to_json(struct) → get_json_object path extraction +
     from_json typed parse (semi-structured payload handling, all JVM-side)."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     payload = F.to_json(
         F.struct("o_orderkey", "o_orderstatus", "o_orderpriority")
@@ -2285,7 +2203,6 @@ def q_sketch_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     expects ``within_bound = TRUE`` everywhere — a value-level correctness
     gate on the approximation itself, not just a row count.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     exact = F.countDistinct("o_custkey")
     approx = F.approx_count_distinct("o_custkey", rsd=0.02)
@@ -2308,7 +2225,6 @@ def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     not (banker's-rounding knife edges between engines), hence no raw
     values in the contract output.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     val = F.col("o_totalprice").cast("double")
     probes = [0.5, 0.9, 0.99]
@@ -2334,7 +2250,6 @@ def q_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. Gaps compare in integer microseconds (exact in both engines);
     session totals accumulate in DECIMAL so they are order-independent.
     """
-    tune_session(spark)
     return _q_sessionize_frame(load_table(spark, sf_dir, "events"))
 
 
@@ -2371,7 +2286,6 @@ def q_sessionize_batch_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(events), in the sequential per-user step. See
     operators/sessionize.py for the equivalence argument.
     """
-    tune_session(spark)
     from .operators.sessionize import sessionize_split
 
     events = load_table(spark, sf_dir, "events")
@@ -2389,7 +2303,6 @@ def q_gap_fill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled on. Standard feature-engineering primitive for training
     pipelines (regular time grids from irregular event data).
     """
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events")
     daily = events.groupBy(
         "user_id", F.to_date("ts").alias("day")
@@ -2418,7 +2331,6 @@ def q_rank_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic; percent_rank and cume_dist are integer ratios computed in
     double — bit-identical across engines for identical orderings.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -2442,7 +2354,6 @@ def q_not_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     join rather than a plain left-anti — the one anti-join variant the
     catalog didn't yet exercise.
     """
-    tune_session(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("__nin_orders")
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("__nin_lineitem")
     return spark.sql(
@@ -2465,7 +2376,6 @@ def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds a column; by-name union is the schema-evolution-safe way to merge
     heterogeneous sources into one training feed.
     """
-    tune_session(spark)
     purchases = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -2494,7 +2404,6 @@ def q_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver round-trip for the range. Bin edges are computed with identical
     IEEE double arithmetic in both engines.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     stats = orders.agg(
         F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
@@ -2522,7 +2431,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     insert/update/delete row per changed key."""
     from .operators.merge import snapshot_diff
 
-    tune_session(spark)
     customer = load_table(spark, sf_dir, "customer")
     survivors = customer.filter(F.col("c_custkey") % 97 != 0).withColumn(
         "c_acctbal",
@@ -2541,7 +2449,6 @@ def q_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery: per-order last ship date pulled from
     lineitem inside the select list. Catalyst de-correlates it into an
     aggregate + left outer join — the rewrite this entry pins down."""
-    tune_session(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("__cs_orders")
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("__cs_lineitem")
     return spark.sql(
@@ -2559,7 +2466,6 @@ def q_group_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (applyInPandas): min-max normalize event values within each event type."""
     from .operators.grouped import group_minmax_normalize
 
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     ).filter(F.col("event_type").isNotNull() & F.col("value").isNotNull())
@@ -2606,7 +2512,6 @@ def q_streaming_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window agg, run as a real availableNow stream."""
     from .streaming.incremental import run_to_memory, windowed_event_counts
 
-    tune_session(spark)
     agg = windowed_event_counts(_stream_events(spark, sf_dir))
     # complete mode so windows still open at end-of-input are emitted too
     # (append mode would hold back the final watermark-uncommitted windows).
@@ -2625,7 +2530,6 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the customer dim."""
     from .streaming.incremental import run_to_memory
 
-    tune_session(spark)
     customers = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
     )
@@ -2658,7 +2562,6 @@ def q_corpus_streaming_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .sources.loader import raw_parquet_schema
     from .streaming.incremental import run_to_memory, stream_source
 
-    tune_session(spark)
     path = _os.path.join(sf_dir, "documents.parquet")
     schema = raw_parquet_schema(spark, path)
     if _os.path.isdir(path):
@@ -2679,7 +2582,6 @@ def q_streaming_sliding_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow stream — each event lands in two overlapping windows."""
     from .streaming.incremental import run_to_memory, sliding_event_counts
 
-    tune_session(spark)
     agg = sliding_event_counts(_stream_events(spark, sf_dir))
     return run_to_memory(agg, "mem_stream_sliding_agg", output_mode="complete")
 
@@ -2688,7 +2590,6 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-window (30 min gap) per-user aggregation on a stream."""
     from .streaming.incremental import run_to_memory, sessionized_event_counts
 
-    tune_session(spark)
     agg = sessionized_event_counts(_stream_events(spark, sf_dir), gap="30 minutes")
     return run_to_memory(agg, "mem_stream_sessionize", output_mode="complete")
 
@@ -2710,7 +2611,6 @@ def q_streaming_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.incremental import run_to_memory
     from .streaming.stateful import running_user_totals
 
-    tune_session(spark)
     out = running_user_totals(_stream_events(spark, sf_dir))
     return run_to_memory(out, "mem_stream_running_totals")
 
@@ -2724,7 +2624,6 @@ def q_running_totals_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     unbounded streams where only checkpointed per-key state can carry
     totals across microbatches. Decimal accumulation keeps the sum exact
     and bitwise-equal to both the oracle and the streaming twin."""
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -2752,7 +2651,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .streaming.incremental import dedup_stream, run_to_memory
 
-    tune_session(spark)
     deduped = dedup_stream(
         _stream_events(spark, sf_dir), ["user_id", "event_type"], watermark="60 days"
     )
@@ -2773,7 +2671,6 @@ def q_streaming_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .streaming.incremental import run_to_memory, stream_interval_join
 
-    tune_session(spark)
     clicks = (
         _stream_events(spark, sf_dir)
         .filter(F.col("event_type") == "click")
@@ -2816,7 +2713,6 @@ def q_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer equi-join: per-customer order totals vs event totals —
     keys present on either side survive with nulls opposite (the join form
     snapshot_diff builds on, exposed as a first-class operator)."""
-    tune_session(spark)
     orders = (
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_custkey").alias("custkey"))
@@ -2839,7 +2735,6 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python in the hot path); patterns are RE2-compatible so the oracle runs
     the identical expressions. Each doc gets a synthetic contact line
     appended so the redaction path is actually exercised by the fixture."""
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     dirty = F.concat(
         F.col("text"),
@@ -2872,7 +2767,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     training. See operators/textops.py::benchmark_overlap for the
     broadcast-probe scale shape (one shuffle, benchmark side broadcast,
     per-doc grams deduped map-side)."""
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     from .operators.textops import benchmark_overlap
 
@@ -2883,7 +2777,6 @@ def q_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signals per document (duplicate-word
     and duplicate-bigram fractions + pass flag) — zero-shuffle expression
     pipeline; see operators/textops.py::repetition_signals."""
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     from .operators.textops import repetition_signals
 
@@ -2899,7 +2792,6 @@ def q_source_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition partial top-k BEFORE the shuffle, so the exchange carries
     O(k · sources · partitions) rows, not the corpus. Over-represented-
     source downweighting at 100 TB is exactly this plan."""
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
@@ -2920,7 +2812,6 @@ def q_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     Integer arithmetic throughout, so the SQL window twin matches exactly."""
     from .operators.prefix import pack_shards
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     staged = docs.select(
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
@@ -2960,7 +2851,6 @@ def q_csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .sources.csv_ingest import CsvIngestor
 
-    tune_session(spark)
     csv_dir = _side_artifact_dir(sf_dir, "orders", "csv")
     marker = os.path.join(csv_dir, "_READY")
     if not os.path.exists(marker):
@@ -2997,7 +2887,6 @@ def q_expectation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per expectation with its violation count — the same aggregate
     shape the engine's Observation rides on table writes
     (plans/expectations.py). UNPIVOT keeps it one scan for all predicates."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     preds = {
         "order_key_not_null": "o_orderkey IS NOT NULL",
@@ -3030,7 +2919,6 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a ppm-floored scale — float32 inputs widen to double identically in
     both engines, so every operation is bit-reproducible; emitting raw
     float scales would compare float32 repr against float64 repr."""
-    tune_session(spark)
     emb = spread_partitions(load_table(spark, sf_dir, "embeddings"))
     staged = emb.select(
         "vec_id",
@@ -3081,7 +2969,6 @@ def q_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.similarity import _tdiv, _valid_vectors
 
-    tune_session(spark)
     emb = _valid_vectors(
         spread_partitions(load_table(spark, sf_dir, "embeddings")),
         "embedding",
@@ -3138,7 +3025,6 @@ def q_corpus_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic is integer division (ppm rarity = 1e6*N div cnt), so the
     score is bit-reproducible across engines — float log-prob averages
     would hash-diverge on summation order."""
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     words = docs.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
     vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
@@ -3166,7 +3052,6 @@ def q_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exchange carries O(partitions × labels × dims) regardless of corpus
     size. Element sums accumulate in DECIMAL (order-independent), the mean
     is rounded to 6dp for cross-engine determinism."""
-    tune_session(spark)
     emb = spread_partitions(load_table(spark, sf_dir, "embeddings"))
     ex = emb.select("label", F.posexplode("embedding").alias("dim", "val"))
     dec = F.col("val").cast("double").cast("decimal(28,12)")
@@ -3203,7 +3088,6 @@ def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.similarity import _valid_vectors
 
-    tune_session(spark)
     # the PQ family's validity guard (non-NULL, exactly 64-d, no NULL
     # elements): a NULL element would NULL the whole Spark fold while the
     # oracle's per-dim SUM skips it — they must never reach the aggregate
@@ -3260,7 +3144,6 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of O(distinct tokens) (see operators/sketches.py)."""
     from .operators.sketches import heavy_hitters
 
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token")
@@ -3291,7 +3174,6 @@ def q_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     overshoot in integer ppm are checked as VALUES, not narrative."""
     from .operators.sketches import cms_estimate, cms_sketch
 
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("token")
@@ -3320,7 +3202,6 @@ def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard long-form prep for per-metric aggregation/feature tables.
     ``DataFrame.unpivot`` compiles to an Expand node: each input row fans
     out map-side with NO shuffle and no Python."""
-    tune_session(spark)
     part = load_table(spark, sf_dir, "part")
     return part.select(
         "p_partkey",
@@ -3336,7 +3217,6 @@ def q_streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming/incremental.py::windowed_distinct_users)."""
     from .streaming.incremental import run_to_memory, windowed_distinct_users
 
-    tune_session(spark)
     agg = windowed_distinct_users(_stream_events(spark, sf_dir))
     return run_to_memory(agg, "mem_stream_distinct_users", output_mode="complete")
 
@@ -3354,7 +3234,6 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/scripts/gold/fact_order_items.sql:1)."""
     from .operators.incremental_agg import aggregate_state, finalize, merge_states
 
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     keys = ["l_returnflag", "l_linestatus"]
     history = li.filter(F.col("l_orderkey") % 10 != 0)
@@ -3372,7 +3251,6 @@ def q_group_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     state never materializes beyond k per group (the plan guard in
     tests/test_plans.py pins the rewrite). The per-group limit is what makes
     grouped top-k viable on billions of rows per group."""
-    tune_session(spark)
     cust = load_table(spark, sf_dir, "customer")
     w = Window.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), "c_custkey")
     return (
@@ -3389,7 +3267,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(key), so the sample is identical on every engine/run/partitioning
     (rand()-based sampleBy is not), and a key samples consistently across
     tables. Pure map-side filter: no shuffle, prunes at the scan."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     h = F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 1)
     keep = (
@@ -3407,7 +3284,6 @@ def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     holding at least one urgent order above 100k. Catalyst plans it as a
     left-semi hash join with the non-equi conjunct folded into the join
     condition — no subquery re-execution per row."""
-    tune_session(spark)
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("__ex_customer")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("__ex_orders")
     return spark.sql(
@@ -3431,7 +3307,6 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/textops.py)."""
     from .operators.textops import inverted_index
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return inverted_index(docs, postings_cap=50)
 
@@ -3441,7 +3316,6 @@ def q_doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     pretraining/RAG chunk shape, zero-shuffle narrow fan-out."""
     from .operators.textops import chunk_documents
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     return chunk_documents(docs, chunk_size=64, stride=48)
 
@@ -3455,7 +3329,6 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.bucketed import bucketed_equi_join
 
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("okey"), "l_linenumber", "l_extendedprice"
     )
@@ -3479,7 +3352,6 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     one agg + broadcast clip join — no full-table window sort."""
     from .operators.grouped import winsorize
 
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     return winsorize(
         events.select("event_id", "event_type", "value"),
@@ -3504,7 +3376,6 @@ def q_udaf_sumsq(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase design."""
     from .operators.udaf import sum_of_squares as sumsq
 
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events").withColumn(
         "k", F.pmod("event_id", F.lit(1000))
     )
@@ -3521,7 +3392,6 @@ def q_right_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitems right-joined to customers' orders — order rows with no
     qualifying lineitem survive with nulls. Catalyst plans it as the
     mirrored left join; the preserved side drives the build/stream choice."""
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_extendedprice") > 80000
     ).select("l_orderkey", "l_linenumber", "l_extendedprice")
@@ -3546,7 +3416,6 @@ def q_set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-priority multisets of two customer segments compared with
     duplicates retained. Spark plans both as aggregate-with-count
     rewrites — no row-pairing join."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     j = orders.join(cust, orders.o_custkey == cust.c_custkey).select(
@@ -3575,7 +3444,6 @@ def q_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct count, total characters — exact integer sums)."""
     import shutil
 
-    tune_session(spark)
     txt_dir = _side_artifact_dir(sf_dir, "documents", "txt")
     marker = os.path.join(txt_dir, "_READY")
     if not os.path.exists(marker):
@@ -3606,7 +3474,6 @@ def q_quality_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     differ across sources)."""
     from .operators.textops import analyze_documents, repetition_signals
 
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     qa = analyze_documents(docs).select("doc_id", "quality_score")
     rep = repetition_signals(docs).select(
@@ -3645,7 +3512,6 @@ def q_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.similarity import dot_col, norm_col
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     # spread BEFORE the pair scoring: the single-row-group scan otherwise
     # streams every (train x broadcast-eval) cosine fold through ONE task
@@ -3693,7 +3559,6 @@ def q_bigram_lm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: corpus collapses to bigram counts in one explode + hash-agg
     pass; the per-head top-3 is WindowGroupLimit-bounded.
     """
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     # single-token/empty docs have no bigram — and sequence(1, 0) would run
     # DESCENDING and index out of bounds, so the guard is load-bearing
@@ -3751,7 +3616,6 @@ def q_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     total attaches as a 1-row broadcast scalar; top-100 is a
     TakeOrderedAndProject, never a global sort.
     """
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     # single-token/empty docs have no bigram — and sequence(1, 0) would
     # run DESCENDING and index out of bounds, so the guard is load-bearing
@@ -3824,7 +3688,6 @@ def q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE map-side-combined hash aggregate over the event stream;
     output is bounded by types × hours, never event rows.
     """
-    tune_session(spark)
     ev = spread_partitions(load_table(spark, sf_dir, "events")).filter(
         F.col("ts").isNotNull()
         & F.col("event_id").isNotNull()
@@ -3861,7 +3724,6 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.dedup import fingerprint_col
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     history = (
         docs.filter(F.col("doc_id") < 250)
@@ -3902,7 +3764,6 @@ def q_geo_cell_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs; the same plan family as the range join's bucket
     decomposition (operators/rangejoin.py).
     """
-    tune_session(spark)
     CELL = 1_000_000  # 1 degree in micro-degrees
     R2 = 1_000_000 * 1_000_000  # 1-degree squared radius (== cell size,
     # the largest radius the 3x3 neighborhood provably covers)
@@ -3969,7 +3830,6 @@ def q_window_dedup_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the formulation to reach for when the dedup key is skewed — the window
     form remains the general one when rank > 1 or ties must be enumerated.
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events")
     first = ev.groupBy("user_id").agg(
         F.min(F.struct("ts", "event_id", "value", "event_type")).alias("f")
@@ -3992,7 +3852,6 @@ def q_jsonl_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .sources.json_ingest import JsonlIngestor
 
-    tune_session(spark)
     jsonl_dir = _side_artifact_dir(sf_dir, "documents", "jsonl")
     marker = os.path.join(jsonl_dir, "_READY")
     if not os.path.exists(marker):
@@ -4027,7 +3886,6 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    tune_session(spark)
     base = os.path.join(tempfile.gettempdir(), "spark_graft_orc")
     shutil.rmtree(base, ignore_errors=True)
     path = os.path.join(base, "orders_orc")
@@ -4057,7 +3915,6 @@ def q_optimize_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.maintenance import compact_parquet, parquet_file_stats
 
-    tune_session(spark)
     base = os.path.join(tempfile.gettempdir(), "spark_graft_optimize")
     shutil.rmtree(base, ignore_errors=True)
     small = os.path.join(base, "events_small_files")
@@ -4088,7 +3945,6 @@ def q_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     four quantiles ride ONE window pass + ONE aggregate (not one pass per
     quantile). approx_quantiles (GK sketch) is the documented scale path
     when bounded error is acceptable."""
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     cnt = Window.partitionBy("event_type")
@@ -4122,7 +3978,6 @@ def q_time_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on the partition key; within each partition the
     frame is a sliding two-pointer over the sorted events — O(rows), not
     O(rows · window span)."""
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     ev = ev.withColumn("ts_sec", F.col("ts").cast("long"))
     w = (
@@ -4147,7 +4002,6 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-path get_json_object re-parsing — the variant binary encodes the
     parsed tree, so N path extractions cost one parse).
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events")
     v = ev.select(
         "event_id",
@@ -4178,8 +4032,6 @@ def q_udtf_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressed in built-ins.
     """
     from pyspark.sql.functions import udtf
-
-    tune_session(spark)
 
     @udtf(returnType="word: string, wlen: int")
     class SplitWords:
@@ -4222,11 +4074,10 @@ def q_recursive_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan for fewer rounds; K=8 puts the round count near the floor for
     order-per-customer chain depths (sf1: 15.1s → ~6s measured).
     """
-    tune_session(spark)
     # the recursion emits one row per order; Spark guards runaway recursion
     # with a total-output row cap (default 1e6) — size it to the data like
     # any other admission limit. The override is scoped, not leaked:
-    # tune_session (called at every catalog query's entry) resets it to the
+    # tuning.catalog_entry (run on every catalog call) resets it to the
     # default, so the weakened guard lasts only for this query's execution —
     # and because the returned frame is localCheckpoint-ed (executed HERE,
     # under the raised cap), a caller that builds this query, runs another,
@@ -4283,7 +4134,6 @@ def q_list_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.listrank import list_rank
 
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     nodes = orders.select(
@@ -4364,7 +4214,6 @@ def q_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import pagerank_integer
 
-    tune_session(spark)
     edges = _trade_edges(spark, sf_dir)  # directed half checkpointed inside
     ranks = pagerank_integer(edges, iterations=5, materialized=True, symmetric=True)
     return ranks.select(
@@ -4398,7 +4247,6 @@ def q_dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     (its substr(…,1,80)/substr(…,1,64) compose identically over the
     pre-truncated key).
     """
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     key = F.lower(F.trim(F.col("text")))
     base = docs.select(
@@ -4449,7 +4297,6 @@ def q_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import pagerank_integer
 
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     # each order has exactly ONE customer, so "distinct orders linking the
@@ -4502,7 +4349,6 @@ def q_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import BROADCAST_NODE_LIMIT
 
-    tune_session(spark)
     edges = _trade_edges(spark, sf_dir)  # directed half checkpointed inside
     supplier = load_table(spark, sf_dir, "supplier")
     l0 = (
@@ -4567,7 +4413,6 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import label_propagation
 
-    tune_session(spark)
     edges = _trade_edges(spark, sf_dir)  # directed half checkpointed inside
     labels = label_propagation(edges, rounds=3)
     return labels.select(
@@ -4605,7 +4450,6 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import BROADCAST_NODE_LIMIT, label_propagation
 
-    tune_session(spark)
     edges = _trade_edges(spark, sf_dir)  # directed half checkpointed inside
     labels = label_propagation(edges, rounds=3).localCheckpoint()
     t2m = edges.count()
@@ -4688,7 +4532,6 @@ def q_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import kcore_peel
 
-    tune_session(spark)
     edges = _trade_edges(spark, sf_dir)  # directed half checkpointed inside
     cores = kcore_peel(edges, k=20, rounds=3)
     return cores.select(
@@ -4721,7 +4564,6 @@ def q_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer) — the sf1 shuffle-stress sweep caught Σxy crossing 2^53
     scaled units. int64→double is round-to-nearest-even in both engines.
     """
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
     j = li.join(F.broadcast(part), li["l_partkey"] == part["p_partkey"])
@@ -4789,7 +4631,6 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-column scans: profiling N columns costs one table read. Min/max
     stringification uses ISO date rendering so both engines agree.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     # (column, SQL rendering of an aggregated min/max to string) — min/max
     # aggregate on the NATIVE type (numeric/date order, not lexicographic),
@@ -4850,7 +4691,6 @@ def q_profile_table_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     local (DuckDB's HLL differs), hence bounds, not values, in the
     contract output (the ``approx_quantiles`` pattern).
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     cols = [
         "o_orderkey",
@@ -4907,7 +4747,6 @@ def q_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.asof import as_of_join
 
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"), "user_id", "ts"
@@ -4948,7 +4787,6 @@ def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-row union — profiling K keys costs K aggregates, no window, no
     sort. Share arithmetic is floor-division ppm, bitwise across engines.
     """
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     outs = []
     for key in ("l_orderkey", "l_partkey", "l_suppkey"):
@@ -4980,7 +4818,6 @@ def q_robust_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     window sorts per group (the honest price of exact percentiles; the
     sketch path is approx_quantiles).
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     w1 = Window.partitionBy("event_type").orderBy("value", "event_id")
     cnt = Window.partitionBy("event_type")
@@ -5062,7 +4899,6 @@ def q_robust_zscore_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializing the fact at 100 TB, and no scan carries a per-group
     row sort.
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     grp = Window.partitionBy("event_type")
     wb = grp.orderBy("b")
@@ -5127,7 +4963,6 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source normalizer. Integer ppm floor division keeps the oracle
     bitwise.
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     trans = (
@@ -5158,7 +4993,6 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TakeOrderedAndProject, no global sort) broadcast into the membership
     probe, so the corpus-side pass stays one explode + one aggregate.
     """
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "source",
@@ -5200,7 +5034,6 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; token-frequency skew is bounded because a token contributes at
     most S·(S−1)/2 pairs regardless of its document frequency.
     """
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = (
         docs.select(
@@ -5259,7 +5092,6 @@ def q_global_median_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.selection import global_exact_median
 
-    tune_session(spark)
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_extendedprice").alias("v"))
@@ -5281,7 +5113,6 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the cumulative weight (cast to long — l_quantity arrives as
     double) + one rank-1 pick via min over the qualifying rows.
     """
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     j = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).select(
@@ -5331,7 +5162,6 @@ def q_weighted_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch. Everything else (bucket id, bounds, total weight) is
     exact-integer / identical-IEEE and value-compared.
     """
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     j = li.join(orders, li["l_orderkey"] == orders["o_orderkey"]).select(
@@ -5377,7 +5207,6 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per language — tiny); the final G is one double expression
     written identically on both engines.
     """
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     per_source = docs.groupBy("lang", "source").agg(
         F.sum(F.col("n_chars").cast("long")).alias("x")
@@ -5416,7 +5245,6 @@ def q_mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     — then a WindowGroupLimit-able rank-1 pick over the tiny
     (segments × priorities) grid; the window never sees raw rows.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     counts = (
@@ -5449,7 +5277,6 @@ def q_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~25-row nation grid partitioned by region — the partial-then-window
     pattern that never re-shuffles fact rows for the parent total.
     """
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -5495,7 +5322,6 @@ def q_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     wider than (user, island). The anti-pattern this replaces is a
     per-user self-join over day offsets — quadratic in streak length.
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events")
     days = ev.select(
         "user_id", F.to_date("ts").alias("d")
@@ -5528,7 +5354,6 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     (predicate reaches the scan). Timestamps compare exactly in both
     engines (µs precision after the loader's ns fixup).
     """
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events")
     s1 = (
         events.where(F.col("event_type") == "view")
@@ -5572,7 +5397,6 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-stage. Week truncation (Monday) and day arithmetic are identical
     in both engines, so the oracle is exact.
     """
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events")
     firsts = events.groupBy("user_id").agg(F.min("ts").alias("first_ts"))
     joined = events.join(firsts, "user_id")
@@ -5631,7 +5455,6 @@ def q_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row global order count. Support threshold ≥2 prunes the long tail
     before the metric joins.
     """
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
     n_orders = op.select("l_orderkey").distinct().agg(
@@ -5688,7 +5511,6 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import count_triangles
 
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     und = _copurchase_edges(li, min_support=2).select("part_a", "part_b")
     return count_triangles(und, "part_a", "part_b")
@@ -5700,7 +5522,6 @@ def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     window/aggregate plan rather than a per-row probe — the declarative
     per-group-top-1 the reference's window-dedup subqueries approximate
     (dim_customers.sql:29-36)."""
-    tune_session(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("__lt_orders")
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("__lt_lineitem")
     return spark.sql(
@@ -5732,7 +5553,6 @@ def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.multimodal import attach_binary_payload, extract_byte_features
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     feats = extract_byte_features(attach_binary_payload(docs), bins=16)
     phash = F.expr(
@@ -5758,7 +5578,6 @@ def q_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     over O(alphabet²) keys + TakeOrdered — the exact per-iteration cost
     profile of distributed BPE training.
     """
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     words = (
         docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
@@ -5809,7 +5628,6 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow map applying the merge. localCheckpoint per round truncates
     the K-deep lineage.
     """
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     return _bpe_merges_frame(docs)
 
@@ -5910,7 +5728,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression — nothing joins, nothing broadcasts) followed by ONE
     map-side-combined groupBy(doc_id); cost is K linear scans per word,
     the same O(corpus) a production tokenizer pays."""
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     return _bpe_encode_frame(docs)
 
@@ -6049,7 +5866,6 @@ def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     N/avgdl is a one-row broadcast; df is a |terms|-row broadcast; the
     final top-50 is TakeOrderedAndProject, never a global sort.
     """
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     k1, b = 1.2, 0.75
     base = (
@@ -6126,7 +5942,6 @@ def q_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution's blocking decomposition — no all-pairs comparison)."""
     from .operators.fuzzy import fuzzy_pairs
 
-    tune_session(spark)
     part = load_table(spark, sf_dir, "part")
     return fuzzy_pairs(part, part, "p_name", max_dist=2)
 
@@ -6143,7 +5958,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.cdc import read_current, run_cdc_apply
 
-    tune_session(spark)
     base = os.path.join(tempfile.gettempdir(), "spark_graft_cdc_apply")
     shutil.rmtree(base, ignore_errors=True)
     table, ckpt = os.path.join(base, "table"), os.path.join(base, "ckpt")
@@ -6174,7 +5988,6 @@ def q_streaming_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .streaming.incremental_mv import maintain_aggregate_mv, read_mv
 
-    tune_session(spark)
     base = os.path.join(tempfile.gettempdir(), "spark_graft_inc_mv")
     shutil.rmtree(base, ignore_errors=True)
     mv, ckpt = os.path.join(base, "mv"), os.path.join(base, "ckpt")
@@ -6197,7 +6010,6 @@ def q_segment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     step between doc-level exact dedup and suffix-array substring dedup)."""
     from .operators.dedup import segment_dedup
 
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     return segment_dedup(docs, id_col="doc_id", text_col="text", seg_len=2)
 
@@ -6207,7 +6019,6 @@ def q_semantic_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components -> canonical survivor per semantic-dup group."""
     from .operators.similarity import semantic_prune
 
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return semantic_prune(emb, threshold=0.3)
 
@@ -6227,7 +6038,6 @@ def q_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     20-row weight table — one tiny shuffle for the source counts, zero for
     the decision itself.
     """
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     counts = docs.groupBy("source").agg(F.count(F.lit(1)).alias("c"))
     weights = counts.select(
@@ -6266,7 +6076,6 @@ def q_grouped_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     honest cost of an EXACT percentile; approx_quantiles is the sketch-based
     scale path when 1e-2 relative error is acceptable.
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     cnt = Window.partitionBy("event_type")
@@ -6304,7 +6113,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor per row, bigint sum) — never a double sum, so shuffle order
     cannot move a cent.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = orders.groupBy("o_custkey").agg(
         F.max(F.to_date("o_orderdate")).alias("last_d"),
@@ -6372,7 +6180,6 @@ def q_zipf_head_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from the same cell relation — one explode pass, everything
     after it aggregates cells, all integer arithmetic.
     """
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select(
@@ -6419,7 +6226,6 @@ def q_token_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``·10⁶`` could not); the participation ratio is ONE identically
     written IEEE double expression on the final per-source row.
     """
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     counts = (
         docs.select(
@@ -6464,7 +6270,6 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan), and the (doc, bucket) aggregate is the only shuffle.
     The 64-bucket width is a parameter, not a plan property.
     """
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 20 == 0
     )
@@ -6502,7 +6307,6 @@ def q_class_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     would find the rank-m threshold without a global sort (same contract
     as the exact-median path).
     """
-    tune_session(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     sizes = emb.groupBy("label").agg(F.count(F.lit(1)).alias("n_total"))
     m = sizes.agg(F.min("n_total").alias("m"))
@@ -6541,7 +6345,6 @@ def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     floored to micro-units so the final sum is an order-independent
     bigint sum, never a float accumulation.
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         F.col("event_type").alias("x"),
@@ -6593,7 +6396,6 @@ def q_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     two hash aggregates joined on the tiny week key; no windows, no
     per-user state.
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.trunc(F.to_date("ts"), "week").alias("week"),
         F.to_date("ts").alias("day"),
@@ -6647,7 +6449,6 @@ def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute the fact subtree — a second full pass the plan guard
     forbids); nation names broadcast-join.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -6711,7 +6512,6 @@ def q_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a driver-free stack() to the 6 pair rows. No shuffle beyond
     the one 1-row agg; adding columns adds sums, not passes.
     """
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         F.expr("cast(l_quantity as bigint)").alias("q"),
         F.expr("cast(floor(l_extendedprice / 100.0) as bigint)").alias("p"),
@@ -6790,7 +6590,6 @@ def q_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     to (flag, day) rows — bounded by flags × calendar, independent of
     row count — and the 8-lag window runs over that bounded table.
     """
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     daily = li.groupBy(
         "l_returnflag", F.to_date("l_shipdate").alias("day")
@@ -6851,7 +6650,6 @@ def q_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells; the priority marginal is a window over that bounded cell
     table; the expected table is a 9-arm CASE, not a join.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     cells = (
         orders.select(
@@ -6903,7 +6701,6 @@ def q_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     table. new + returning = dau by construction; cum_users is the
     running sum of first-seens — exact integers throughout.
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "user_id"
     )
@@ -6957,7 +6754,6 @@ def q_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the window partitions per user (embarrassingly parallel);
     the 1-in-5 user slice pushes to the scan and bounds the oracle.
     """
-    tune_session(spark)
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") % 5 == 0)
@@ -7020,7 +6816,6 @@ def q_ab_test_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     join), so the whole test is ONE map-side-combined aggregate to a
     single row — the cheapest possible plan shape.
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.expr(
             "cast(conv(substr(md5(cast(user_id as string)), 1, 1), 16, 10)"
@@ -7093,7 +6888,6 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import BROADCAST_NODE_LIMIT
 
-    tune_session(spark)
     edges = _trade_edges(spark, sf_dir)
     deg = (
         edges.groupBy("src")
@@ -7163,7 +6957,6 @@ def q_shortest_path_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.graph import bellman_ford
 
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     supplier = load_table(spark, sf_dir, "supplier")
@@ -7220,7 +7013,6 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one fact join (customer broadcast-able), one hash agg to the
     bounded cell grid, windows over that grid only, final 1-row agg.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     cells = (
@@ -7283,7 +7075,6 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.textops import all_tokens_col
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source", F.explode(all_tokens_col("text")).alias("token")
@@ -7329,7 +7120,6 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     All-integer → the oracle is bitwise, no float tolerance anywhere.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderpriority").alias("priority"),
@@ -7389,7 +7179,6 @@ def q_seasonality_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one hash agg to the bounded 5×7 grid, windows over that grid
     only (per-priority totals), no joins.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     cells = orders.groupBy(
         F.col("o_orderpriority").alias("priority"),
@@ -7436,7 +7225,6 @@ def q_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.textops import all_tokens_col
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     mx = docs.agg(F.max("doc_id").cast("bigint").alias("mx"))
     tok = docs.select(
@@ -7519,7 +7307,6 @@ def q_kl_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .operators.textops import all_tokens_col
 
-    tune_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     # (source, token) counts feed FOUR consumers (the join, c_t, n_s, N) —
     # materialize the bounded table once; without it each branch
@@ -7571,7 +7358,6 @@ def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's floors, and acctbal goes negative. Two chained hash aggs
     (rows → classes → bands) + windows over ≤4 band rows; nothing else.
     """
-    tune_session(spark)
     cust = load_table(spark, sf_dir, "customer")
     classes = cust.groupBy(
         F.col("c_nationkey").alias("nat"),
@@ -7625,7 +7411,6 @@ def q_rank_fusion_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense ranking; when only the head is needed at 100 TB, group_topk's
     WindowGroupLimit shape bounds per-group state to k instead.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     per_cust = (
@@ -7702,7 +7487,6 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     appear (inner join; the unattributed share is `attribution_last_touch`'s
     NULL row in that query's contract).
     """
-    tune_session(spark)
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.where(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
@@ -7765,7 +7549,6 @@ def q_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash agg to 5×7 rows. Nothing touches raw orders after the first
     agg.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderpriority").alias("priority"),
@@ -7828,7 +7611,6 @@ def q_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     picks the quartiles per priority; the fence test is a broadcast join
     of the 5-row quartile table back to the cells. Bitwise oracle.
     """
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(
         F.col("o_orderpriority").alias("priority"),
@@ -7897,7 +7679,6 @@ def q_lm_perplexity_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lm_cross_entropy(spark: SparkSession, sf_dir: str, min_count: int) -> DataFrame:
     """Shared body of lm_perplexity / lm_perplexity_pruned (see their
     docstrings; min_count=1 is the exact unpruned LM)."""
-    tune_session(spark)
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.split(F.trim("text"), r"\s+").alias("w")
@@ -7955,7 +7736,6 @@ def q_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass), and the final top-25 is TakeOrderedAndProject. Determinism:
     rank ties break on event_id; path ranking ties break on the path
     string."""
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
@@ -7989,7 +7769,6 @@ def q_event_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two hash aggregates with map-side combine ((user,type) then
     user); no windows, no joins."""
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events")
     counts = events.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
@@ -8028,7 +7807,6 @@ def q_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     per customer FIRST (hash agg), so the NTILE window and everything
     after run over the customer dimension, partitioned by segment — never
     over fact rows; output is 10 rows per segment."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     spend = orders.groupBy("o_custkey").agg(
@@ -8087,7 +7865,6 @@ def q_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     floored-double ppm division. Scale: fact → per-customer hash agg
     first; the rank/cumsum window runs over the customer dimension
     partitioned by segment; the final row set is one row per segment."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     spend = orders.groupBy("o_custkey").agg(
@@ -8139,7 +7916,6 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint product, and the final ÷Σdt is one identically-written
     floored-double division. Scale: one per-user window (lead) over the
     fact's natural partitioning, then one hash agg — no joins."""
-    tune_session(spark)
     events = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     stepped = events.select(
@@ -8484,9 +8260,14 @@ _DRIVER_PRIORITY = [
     "tpch_q21", "user_paths", "weighted_median_approx", "window_dedup",
     "winnow_fingerprints",
 ]
+# driver-priority keys first, then the rest in registration order; every
+# catalog call applies the session contract here, once (tuning.py)
 SPARK_QUERIES = {
-    **{k: SPARK_QUERIES[k] for k in _DRIVER_PRIORITY if k in SPARK_QUERIES},
-    **{k: v for k, v in SPARK_QUERIES.items() if k not in set(_DRIVER_PRIORITY)},
+    k: catalog_entry(fn)
+    for k, fn in {
+        **{k: SPARK_QUERIES[k] for k in _DRIVER_PRIORITY if k in SPARK_QUERIES},
+        **SPARK_QUERIES,
+    }.items()
 }
 
 ORACLES: dict[str, str] = {

@@ -1,13 +1,12 @@
 """SparkSession factory with scale-aware defaults.
 
 Local testing runs on ``local[N]`` but every default here is chosen to also be
-the right call on a 1000-executor cluster reading 100 TB:
-
-- AQE on (runtime shuffle-partition coalescing, skew-join splitting, dynamic
-  broadcast conversion) — replaces hand-tuned shuffle partition counts.
-- Arrow on — every Pandas-UDF extension operator moves batches, not rows.
-- Session timezone pinned to UTC so results are reproducible across machines
-  (and comparable against the DuckDB oracle, whose timestamps are UTC-naive).
+the right call on a 1000-executor cluster reading 100 TB. The builder holds
+only launch-time confs (master, driver memory and JVM options, the initial
+shuffle width, the UI switch). The runtime SQL confs — AQE, Arrow, the UTC
+session timezone, nanos-as-long parquet reads — are the engine's session
+contract, defined once in tuning.py and applied by ``tune_session`` after
+the session exists, the same call every catalog query makes on entry.
 """
 
 from __future__ import annotations
@@ -15,6 +14,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from .tuning import tune_session
 
 
 def get_spark(app_name: str = "medallion-engine", extra_conf: dict | None = None) -> SparkSession:
@@ -28,15 +29,6 @@ def get_spark(app_name: str = "medallion-engine", extra_conf: dict | None = None
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Parquet TIMESTAMP(NANOS) is rejected by default; read as long and
-        # convert to microsecond timestamps in sources/loader.py (same
-        # truncation DuckDB applies when reading nanos into its us timestamps).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         # A 150-query session generates thousands of whole-stage-codegen
@@ -55,6 +47,6 @@ def get_spark(app_name: str = "medallion-engine", extra_conf: dict | None = None
         builder = builder.master(f"local[{cpus}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = tune_session(builder.getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     return spark

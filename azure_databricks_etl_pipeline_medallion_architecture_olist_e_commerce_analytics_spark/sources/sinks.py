@@ -34,17 +34,14 @@ def write_table(
     dataset,
     warehouse: str | None = None,
     fmt: str = "parquet",
-    count: bool = True,
-) -> int:
-    """Full-refresh write of a dataset to the warehouse; returns row count.
+) -> None:
+    """Full-refresh write of a dataset to the warehouse.
 
     MVs and tables both overwrite here (the engine's batch mode re-derives
     every table per run, mirroring the reference's full-refresh gold layer);
-    incremental appends are the streaming runner's job.
-
-    ``count=False`` skips the post-write count scan and returns -1 — used
-    when the caller already gets the row count from an Observation riding
-    the write job itself (plans/registry.py).
+    incremental appends are the streaming runner's job. The row count is
+    not re-read from the table: ``Pipeline.run`` takes it from the
+    Observation riding the write job itself (plans/registry.py).
 
     The dataset's schema (database) must already exist: ``Pipeline.run``
     creates each one once, before its concurrent writes start.
@@ -96,12 +93,12 @@ def write_table(
         # persist leaves the MV's CTE definitions in both sides of that
         # self-join, which trips Spark's InlineCTE.buildCTEMap
         # ("key not found" NoSuchElementException) on some write plans.
+        # One column needs it too: the range sampling pass would otherwise
+        # re-run the frame, and the row-count Observation attached by
+        # Pipeline.run would count every row twice.
         from ..operators.layout import cluster_frame
 
-        cols = list(dataset.cluster_by)
-        if len(cols) > 1:
-            out = df.localCheckpoint()
-        out = cluster_frame(out, cols)
+        out = cluster_frame(df.localCheckpoint(), list(dataset.cluster_by))
 
     use_fmt = "delta" if (HAVE_DELTA and fmt == "delta") else "parquet"
     writer = out.write.format(use_fmt).mode("overwrite")
@@ -140,4 +137,3 @@ def write_table(
     if location:
         writer = writer.option("path", location)
     writer.saveAsTable(ident)
-    return spark.table(ident).count() if count else -1

@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .sources.loader import load_table
-from .tuning import tune_session
 
 
 def _dec(col: str, prec: int = 18, scale: int = 2):
@@ -83,7 +82,6 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial aggregate; averages derived from exact sums so no
     second pass.
     """
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("2001-09-01")
     )
@@ -133,7 +131,6 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     sizes it for broadcast; lineitem⋈orders shuffles once on the order key,
     which is also the aggregation key — one exchange serves both.
     """
-    tune_session(spark)
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     ).select("c_custkey")
@@ -177,7 +174,6 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation-filtered customer side broadcast via AQE. The only large shuffle
     is lineitem⋈orders on the order key.
     """
-    tune_session(spark)
     region = F.broadcast(
         load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     )
@@ -224,7 +220,6 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     global aggregate. All three predicates reach the parquet scan
     (PushedFilters); zero joins, one partial-agg exchange of one row per
     partition."""
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1997-01-01"))
@@ -262,7 +257,6 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     The nation dimension broadcasts twice (supplier side, customer side);
     the disjunctive nation-pair predicate is applied after both broadcast
     joins, before the grouped aggregate."""
-    tune_session(spark)
     n1 = F.broadcast(
         load_table(spark, sf_dir, "nation").select(
             F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("supp_nation")
@@ -321,7 +315,6 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q8 market share: conditional-sum ratio per year (CASE inside SUM over
     a 7-table join). The part side is filtered to one type before the join
     so only matching fact rows survive the first (broadcast) join."""
-    tune_session(spark)
     part = load_table(spark, sf_dir, "part").filter(
         F.col("p_type") == "ECONOMY"
     ).select("p_partkey")
@@ -393,7 +386,6 @@ _TPCH_Q8_SQL = f"""
 def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 returned-item reporting: returnflag-filtered fact joined to
     customer+nation, grouped per customer, top 20 by lost revenue."""
-    tune_session(spark)
     nation = F.broadcast(
         load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     )
@@ -433,7 +425,6 @@ _TPCH_Q10_SQL = f"""
 def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q14 promotion effect: conditional revenue ratio over a part join in
     one month window. Part dim broadcasts; single-row output."""
-    tune_session(spark)
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-03-01"))
@@ -473,7 +464,6 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q15 top supplier: revenue view per supplier in one quarter; return
     the supplier(s) whose revenue equals the global max (scalar-subquery
     max joined back — the max is a 1-row broadcast, no window sort)."""
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01"))
         & (F.col("l_shipdate") < F.lit("1996-04-01"))
@@ -511,7 +501,6 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     avg quantity is exact (integer-valued doubles, sum < 2^53), so the
     0.2*avg threshold is bitwise-reproducible in the oracle."""
-    tune_session(spark)
     part = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") == "Brand#3") & (F.col("p_size") < 15)
     ).select("p_partkey")
@@ -550,7 +539,6 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18 large-volume customers: grouped HAVING over the fact, then join
     back to orders+customer. The HAVING side reduces to qualifying order
     keys first, so the join-back streams only survivors."""
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
@@ -590,7 +578,6 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates over a part equi-join. Catalyst extracts the common
     l_partkey=p_partkey equi-condition and evaluates the OR as a join
     residual — one hash join, not a cartesian."""
-    tune_session(spark)
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     li = load_table(spark, sf_dir, "lineitem")
     cond = (
@@ -633,7 +620,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q22 global-sales-opportunity analog: customers with above-average
     positive balance and NO orders — scalar subquery (1-row broadcast) +
     left-anti join, grouped per market segment."""
-    tune_session(spark)
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1999-01-01")
@@ -680,7 +666,6 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     becomes "shipped >30 days after order"): EXISTS correlated semi-join
     against lineitem, counted per priority. Catalyst rewrites the EXISTS
     to a left-semi hash join — no per-row subquery."""
-    tune_session(spark)
     orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01"))
         & (F.col("o_orderdate") < F.lit("1996-04-01"))
@@ -716,7 +701,6 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier nation x order year for a part-name family). Part filter
     runs before the join; nation broadcasts; lineitem⋈orders is the one
     big shuffle."""
-    tune_session(spark)
     part = load_table(spark, sf_dir, "part").filter(
         F.col("p_name").contains("bolt")
     ).select("p_partkey")
@@ -757,7 +741,6 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-customer count (zeros preserved), then the histogram of counts —
     two hash aggregations, the second over O(max orders per customer)
     keys."""
-    tune_session(spark)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") != "1-URGENT"
@@ -789,7 +772,6 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     late-shipped line in a multi-supplier order where NO other supplier in
     that order shipped late — the classic correlated EXISTS + NOT EXISTS
     pair, both rewritten to semi/anti hash joins on (orderkey)."""
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
@@ -862,7 +844,6 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side partial), the outer is dim-broadcast joins; the final sort is
     bounded by LIMIT 100 → TakeOrderedAndProject.
     """
-    tune_session(spark)
     for t in ("part", "supplier", "nation", "region", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"__q2_{t}")
     return spark.sql(
@@ -933,7 +914,6 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-sum pattern; the threshold multiply (decimal-as-double *
     0.0005) is a deterministic IEEE double op on both engines.
     """
-    tune_session(spark)
     for t in ("supplier", "nation", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"__q11_{t}")
     return spark.sql(
@@ -989,7 +969,6 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     date-window predicate is evaluated rowwise pre-aggregation (no
     second pass).
     """
-    tune_session(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_shipdate"
     )
@@ -1035,7 +1014,6 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti join; COUNT(DISTINCT supplier) expands to the standard two-phase
     distinct aggregate on the group key.
     """
-    tune_session(spark)
     for t in ("part", "supplier", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"__q16_{t}")
     return spark.sql(
@@ -1082,7 +1060,6 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     (region: 5 rows; red parts: LIKE-filtered dim; qualifying suppliers:
     grouped fact slice) — all broadcastable.
     """
-    tune_session(spark)
     for t in ("part", "supplier", "nation", "region", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(f"__q20_{t}")
     return spark.sql(

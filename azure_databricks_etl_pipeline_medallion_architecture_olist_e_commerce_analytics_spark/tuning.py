@@ -1,14 +1,24 @@
-"""Runtime session tuning for externally-created SparkSessions.
+"""The engine's runtime session contract, defined once.
 
 The driver hands ``entry``/``queries`` an already-built SparkSession; these
 are the runtime-settable confs the engine depends on for correctness
 (UTC timezone for oracle comparability, nanos-as-long for the events table)
 and scale behavior (AQE).
+
+The contract is applied in two places and defined only here:
+``session.get_spark`` tunes every session it builds, and
+:func:`catalog_entry` wraps every ``SPARK_QUERIES`` value so each catalog
+call re-applies the contract before the query body runs — the analog of
+DLT applying its pipeline settings once per pipeline rather than per
+dataset.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import functools
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 _RUNTIME_CONF = {
     "spark.sql.session.timeZone": "UTC",
@@ -18,10 +28,10 @@ _RUNTIME_CONF = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # restore the runaway-recursion admission guard to its default on every
-    # query entry: q_recursive_chain must raise it for the duration of its
+    # catalog call: q_recursive_chain must raise it for the duration of its
     # (lazy) execution, and the returned DataFrame is collected by the
     # caller after the function returns — so the reset lives here, at the
-    # next query's entry point, not in a finally that would fire too early
+    # next query's catalog_entry, not in a finally that would fire too early
     "spark.sql.cteRecursionRowLimit": "1000000",
 }
 
@@ -33,3 +43,16 @@ def tune_session(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # non-settable on this session build; engine defaults apply
     return spark
+
+
+def catalog_entry(
+    fn: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """Wrap a catalog query so every call runs on a tuned session."""
+
+    @functools.wraps(fn)
+    def entry(spark: SparkSession, sf_dir: str) -> DataFrame:
+        tune_session(spark)
+        return fn(spark, sf_dir)
+
+    return entry

@@ -120,6 +120,26 @@ def test_run_materializes_tables(spark, tmp_path):
     spark.sql("DROP TABLE `silver`.`nums`")
 
 
+@pytest.mark.parametrize("cluster_by", [("k",), ("k", "v")])
+def test_run_counts_clustered_rows_once(spark, tmp_path, cluster_by):
+    """The row and warn counts come from the Observation riding the write;
+    the range-clustered write's sampling pass must not count rows again."""
+    p = Pipeline("t")
+
+    @p.table(name="silver.clustered", cluster_by=cluster_by)
+    @p.expect("v_small", "v < 6")
+    def clustered(ctx):
+        return ctx.spark_session.range(1000).selectExpr("id AS k", "id % 7 AS v")
+
+    report = p.run(spark, warehouse=str(tmp_path / "wh"))
+    try:
+        assert report["silver.clustered"]["rows"] == 1000
+        assert report["silver.clustered"]["expectations"] == {"v_small": 142}
+        assert spark.table("silver.clustered").count() == 1000
+    finally:
+        spark.sql("DROP TABLE `silver`.`clustered`")
+
+
 def test_run_fail_expectation_aborts(spark):
     p = Pipeline("t")
 
@@ -265,7 +285,7 @@ def test_mv_cluster_by_layout_prunes_nonleading_column(spark, tmp_path):
     for k, v in confs.items():
         spark.conf.set(k, v)
     try:
-        p.run(spark, warehouse=str(tmp_path / "wh"), collect_metrics=False)
+        p.run(spark, warehouse=str(tmp_path / "wh"))
         files = sorted(
             globmod.glob(str(tmp_path / "wh" / "gold" / "fact_lineitem" / "*.parquet"))
         )
@@ -416,6 +436,60 @@ def test_driver_priority_registry_integrity():
     assert len(set(_DRIVER_PRIORITY)) == len(_DRIVER_PRIORITY)
     no_oracle = [n for n in SPARK_QUERIES if n not in ORACLES]
     assert not no_oracle, f"catalog queries without oracles: {no_oracle}"
+
+
+def test_catalog_keys_oracles_and_headline_are_pinned():
+    """The catalog's keys and order, its oracle names and the bench headline
+    are pinned by hash: a refactor of how the catalog is built must not
+    add, drop, rename or reorder a query."""
+    import hashlib
+
+    import bench
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.queries import (
+        ORACLES,
+        SPARK_QUERIES,
+    )
+
+    def sha(names):
+        return hashlib.sha256("\n".join(names).encode()).hexdigest()
+
+    assert (len(SPARK_QUERIES), len(ORACLES), len(bench.HEADLINE)) == (255, 255, 191)
+    assert sha(SPARK_QUERIES) == "6afa3c19f4f004b84f4387d1b2f65609b238ebcfb5269119eb2bb0d498659990"
+    assert sha(sorted(ORACLES)) == "e753ef054cc54cd228ea7eb3e82b2d9e5247fc4040e4ec190e94d33bed34fc73"
+    assert sha(bench.HEADLINE) == "630dd94038053594dfad405ff9a9981b11490e2de4460b55b33df699ba211426"
+
+
+def test_catalog_entry_restores_session_contract(spark):
+    """Every catalog value applies the runtime session contract on entry
+    (tuning.catalog_entry): a session drifted away from it — another
+    caller's time zone, nanos reads off, AQE off, a raised recursion cap —
+    is restored by constructing any catalog query, TPC-H or pipeline."""
+    from conftest import SF_SMALL
+
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.tuning import (
+        _RUNTIME_CONF,
+        tune_session,
+    )
+
+    for name, fn in _ALL_QUERIES.items():
+        assert fn.__wrapped__.__name__ == fn.__name__, name
+    assert _ALL_QUERIES["tpch_q6"].__name__ == "q_tpch_q6"
+
+    drift = {
+        "spark.sql.session.timeZone": "America/Los_Angeles",
+        "spark.sql.legacy.parquet.nanosAsLong": "false",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.cteRecursionRowLimit": "200000000",
+    }
+    try:
+        for name in ("tpch_q6", "gold_dim_date", "gold_dim_customers"):
+            for k, v in drift.items():
+                spark.conf.set(k, v)
+            _ALL_QUERIES[name](spark, SF_SMALL)
+            got = {k: spark.conf.get(k) for k in _RUNTIME_CONF}
+            assert got == _RUNTIME_CONF, (name, got)
+    finally:
+        tune_session(spark)
 
 
 @pytest.fixture(scope="session")

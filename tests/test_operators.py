@@ -1079,24 +1079,24 @@ def test_incremental_agg_state_merge_invariance(spark):
 
 
 def test_morton_key_matches_reference_bit_interleave(spark):
-    """morton_key_2d must equal the textbook bit-interleave (x even bits,
-    y odd bits) — checked against a pure-Python reference on edge values."""
+    """The 2-column Morton key must equal the textbook bit-interleave
+    (leading column x on odd bits, y on even bits) — checked against a
+    pure-Python reference on edge values. The values span [0, 65535], so
+    the 16-bit equal-width bucket rank is the identity."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.layout import (
-        morton_key_2d,
+        with_morton_key_nd,
     )
 
     def ref(x, y):
         z = 0
         for i in range(16):
-            z |= ((x >> i) & 1) << (2 * i)
-            z |= ((y >> i) & 1) << (2 * i + 1)
+            z |= ((y >> i) & 1) << (2 * i)
+            z |= ((x >> i) & 1) << (2 * i + 1)
         return z
 
     vals = [0, 1, 2, 3, 255, 256, 21845, 43690, 65534, 65535]
     rows = [(x, y) for x in vals for y in vals]
-    df = spark.createDataFrame(rows, "x int, y int").withColumn(
-        "z", morton_key_2d(F.col("x"), F.col("y"))
-    )
+    df = with_morton_key_nd(spark.createDataFrame(rows, "x int, y int"), ["x", "y"], key="z")
     for r in df.collect():
         assert r.z == ref(r.x, r.y), (r.x, r.y, r.z)
 
@@ -1110,12 +1110,14 @@ def test_zorder_layout_prunes_files_on_both_dimensions(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.layout import (
-        zorder_write,
+        cluster_frame,
     )
 
     li = load_table(spark, SF_SMALL, "lineitem").select("l_orderkey", "l_partkey")
     zpath, lpath = str(tmp_path / "zorder"), str(tmp_path / "linear")
-    zorder_write(li, "l_orderkey", "l_partkey", zpath, num_files=16)
+    cluster_frame(li, ["l_orderkey", "l_partkey"], num_files=16).write.mode(
+        "overwrite"
+    ).parquet(zpath)
     (
         li.repartitionByRange(16, "l_orderkey")
         .sortWithinPartitions("l_orderkey")

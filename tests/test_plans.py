@@ -49,7 +49,7 @@ def test_fact_joins_are_hash_based_never_nested_loop(spark):
 
 
 def test_hot_path_is_whole_stage_codegen(spark):
-    # build first (the query's tune_session turns AQE on), then plan with AQE
+    # build first (the catalog entry's tune_session turns AQE on), then plan with AQE
     # off — AQE defers codegen to per-stage runtime and would hide it here
     df = SPARK_QUERIES["predicates"](spark, SF_SMALL)
     jvm = df.sparkSession._jvm

@@ -77,6 +77,22 @@ def test_parse_rejects_non_mv():
         parse_mv_ddl("CREATE OR REFRESH MATERIALIZED VIEW g.t (CONSTRAINT c EXPECT (1=1))")
 
 
+def test_parse_rejects_partitioned_by_instead_of_dropping_it():
+    """The engine writes MVs by CLUSTER BY only: a PARTITIONED BY clause
+    must fail the parse by name, not register an unpartitioned MV."""
+    p = Pipeline("part")
+    ddl = "CREATE OR REFRESH MATERIALIZED VIEW gold.x PARTITIONED BY (d) AS SELECT 1 AS d"
+    with pytest.raises(ValueError, match="PARTITIONED BY"):
+        register_mv_sql(p, ddl)
+    assert p.datasets() == []
+    # the words inside a COMMENT string are not the clause
+    spec = parse_mv_ddl(
+        "CREATE OR REFRESH MATERIALIZED VIEW gold.y COMMENT 'partitioned by day upstream' "
+        "AS SELECT 1 AS d"
+    )
+    assert spec.name == "gold.y"
+
+
 def test_registered_mv_resolves_live_refs_and_drops_rows(spark):
     p = Pipeline("t")
 
