@@ -484,8 +484,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 60,
     bands: int = 10,
     ngram: int = 1,
-    cache: bool = True,
-    screen: bool | None = None,
     hash_family: str = "murmur3",
     bucket_cap: int | None = 8192,
 ) -> DataFrame:
@@ -517,16 +515,16 @@ def minhash_lsh_pairs(
        that shuffle was >50% of end-to-end runtime and is now simply gone.
     3. **Adaptive screen-then-verify in one join pass.** Candidates join
        the compact per-representative payload (signature + xxhash64 token
-       hashes + set size) once per side. When ``screen`` is on, the
+       hashes + set size) once per side. When the screen is on, the
        signature-estimated Jaccard (matching positions / num_hashes,
        est ≥ threshold − 3σ of the Binomial(num_hashes, j) estimator)
        gates the exact intersect at the cost of screening out <0.1% of
        true pairs. The estimate is an interpreted ``num_hashes``-element
        fold per pair, so it only pays when token sets are much wider than
-       the signature; ``screen=None`` decides from the data (one cheap
-       aggregate over the cached per-representative payload: screen iff
-       mean set size > 2×num_hashes — for short-doc corpora the exact
-       intersect is cheaper than its own estimate AND loses zero pairs).
+       the signature; the data decides (one cheap aggregate over the cached
+       per-representative payload: screen iff mean set size > 2×num_hashes
+       — for short-doc corpora the exact intersect is cheaper than its own
+       estimate AND loses zero pairs).
        The exact union size is derived as ``|A| + |B| − |A∩B|``
        (one array_intersect per pair).
        The intersect runs over xxhash64 *token hashes* (fixed-width
@@ -554,9 +552,8 @@ def minhash_lsh_pairs(
     blocks across the cluster instead of one task (output provably
     identical — the blocks partition the pair set; see the inline comment).
     ``bucket_cap=None`` disables the cap (the pre-round-6 behavior).
-    ``cache=True`` persists the group table and the per-rep payload that
-    multiple plan branches re-read; pass ``cache=False`` to manage
-    persistence at the pipeline level.
+    The group table and the per-rep payload, which several plan branches
+    re-read, are persisted.
     """
     rows = num_hashes // bands
     margin = 3.0 * (threshold * (1.0 - threshold) / num_hashes) ** 0.5
@@ -585,8 +582,7 @@ def minhash_lsh_pairs(
         F.first("s").alias("s"),
         *agg_extra,
     )
-    if cache:
-        groups = groups.persist()
+    groups = groups.persist()
     # The similarity set: tokens for ngram=1, shingles otherwise (banding AND
     # verification must measure the same sets — matching jaccard_pairs).
     set_col = "s" if ngram == 1 else "sh"
@@ -600,16 +596,13 @@ def minhash_lsh_pairs(
     # blow past the cap and keep the xxhash64-array path — this is the same
     # trade Parquet makes with dictionary-encoded columns.
     vocab: list | None = None
-    n_reps: int | None = None
-    if cache:
-        # Fills the groups cache and prices the rep table for the verify-join
-        # build-side decision below. Catalyst misprices the candidate stream
-        # here: its size estimate derives from the tiny cached rep relation,
-        # so without a hint it can pick the *pair explosion* as the broadcast
-        # build side (measured: a 3M-row broadcast at sf0.1).
-        n_reps = groups.count()
-    small_reps = n_reps is not None and n_reps <= 100_000
-    if cache and ngram == 1:
+    # Fills the groups cache and prices the rep table for the verify-join
+    # build-side decision below. Catalyst misprices the candidate stream
+    # here: its size estimate derives from the tiny cached rep relation,
+    # so without a hint it can pick the *pair explosion* as the broadcast
+    # build side (measured: a 3M-row broadcast at sf0.1).
+    small_reps = groups.count() <= 100_000
+    if ngram == 1:
         probe = (
             groups.select(F.explode(set_col).alias("t"))
             .distinct()
@@ -650,8 +643,7 @@ def minhash_lsh_pairs(
             F.size(set_col).alias("n"),
             minhash_signature(F.col(set_col), num_hashes, hash_family).alias("sig"),
         )
-    if cache:
-        prepared = prepared.persist()
+    prepared = prepared.persist()
     band_hashes = [
         F.hash(F.array_join(F.slice("sig", k * rows + 1, rows), ",")).alias(f"h{k}")
         for k in range(bands)
@@ -702,16 +694,11 @@ def minhash_lsh_pairs(
         # Bitmap intersect is a few integer ops — always cheaper than the
         # signature estimate, so the screen never pays.
         screen = False
-    if screen is None:
-        # Decide from the data when the payload is cached (the aggregate
-        # forces the cached plan once; everything downstream reuses it).
-        # Without a cache, default to screening — the conservative wide-doc
-        # assumption, and no extra recompute.
-        if cache:
-            mean_n = prepared.agg(F.avg("n")).first()[0] or 0.0
-            screen = mean_n > 2.0 * num_hashes
-        else:
-            screen = True
+    else:
+        # Decide from the data (the aggregate forces the cached plan once;
+        # everything downstream reuses it).
+        mean_n = prepared.agg(F.avg("n")).first()[0] or 0.0
+        screen = mean_n > 2.0 * num_hashes
     est = F.aggregate(
         F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
         F.lit(0),

@@ -68,7 +68,6 @@ def build_corpus_pipeline(sf_dir: str) -> Pipeline:
         name="bronze.corpus_documents",
         comment="Raw document corpus landed from source (incremental at ingest).",
         table_properties={"quality": "bronze"},
-        streaming=True,
     )
     def bronze_corpus_documents(ctx):
         return load_table(ctx.spark_session, sf_dir, "documents")
@@ -78,7 +77,6 @@ def build_corpus_pipeline(sf_dir: str) -> Pipeline:
         comment="Typed documents with language ID, quality score, token "
         "counts and dedup fingerprint (all JVM expressions).",
         table_properties={"quality": "silver"},
-        streaming=True,
     )
     @p.expect_all(
         {

@@ -13,21 +13,40 @@ Re-implements the DLT expectation surface on open-source PySpark
 - ``ON VIOLATION DROP ROW`` — filter violating rows (DLT public semantics;
   unused by the reference but part of the API surface).
 
+The contract
+------------
+One meaning per expectation, whether the dataset is a pipeline table, a
+materialized view or a streaming table:
+
+- **Violation.** A row violates an expectation when its predicate is FALSE
+  or NULL (DLT's "expectation not met"). :func:`violation` is the one
+  definition of that rule; every count and every filter here uses it.
+- **Ordering.** DROP filters first (:func:`apply_expectations`); WARN and
+  FAIL then judge the rows that remain, which are the rows written. A row
+  that violates both a DROP and a FAIL expectation is dropped and fails
+  nothing; a row that violates both a WARN and a DROP expectation is not
+  counted.
+- **Counts.** Written datasets take their row and warn counts from the
+  :class:`~pyspark.sql.Observation` riding the write
+  (:func:`observe_expectations`; the write step is
+  ``plans/registry.py::checked_write``). :func:`expectation_report` is the
+  same count as a lazy per-expectation frame for reporting queries.
+
 Scale notes
 -----------
 Predicates are compiled with ``F.expr`` so they stay JVM-side inside
-whole-stage codegen — no Python round trip. Warn metrics are computed in ONE
-aggregate pass over the dataset (a single job with a map-side partial
-aggregation; no per-predicate jobs). Fail mode short-circuits with
-``isEmpty()`` on the violation filter, which stops scanning at the first
-violating row per partition.
+whole-stage codegen — no Python round trip. Counts are ONE aggregate over
+the dataset (a map-side partial aggregation; no per-predicate jobs). Fail
+mode short-circuits with ``isEmpty()`` on the violation filter, which stops
+scanning at the first violating row per partition.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 WARN = "warn"
@@ -41,8 +60,14 @@ class Expectation:
     predicate: str  # SQL boolean expression over the dataset's columns
     action: str = WARN  # warn | drop | fail
 
-    def as_column(self):
-        return F.expr(self.predicate)
+
+def violation(e: Expectation) -> Column:
+    """TRUE for a row that violates ``e``: its predicate is FALSE or NULL."""
+    return ~F.coalesce(F.expr(e.predicate).cast("boolean"), F.lit(False))
+
+
+def _violation_counts(expectations: list[Expectation]) -> list[Column]:
+    return [F.sum(violation(e).cast("long")).alias(e.name) for e in expectations]
 
 
 class ExpectationViolation(Exception):
@@ -56,38 +81,37 @@ class ExpectationViolation(Exception):
 
 
 def apply_expectations(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
-    """Apply drop-mode expectations to the DataFrame plan (lazy).
+    """Filter out the rows that violate a drop-mode expectation (lazy).
 
-    Warn/fail expectations do not change the row set; they are evaluated by
-    :func:`expectation_metrics` / :func:`enforce_fail` at materialization time.
+    Warn and fail expectations do not change the row set; they judge the
+    rows this returns (module docstring: ordering rule).
     """
     drops = [e for e in expectations if e.action == DROP]
     if not drops:
         return df
-    cond = drops[0].as_column()
-    for e in drops[1:]:
-        cond = cond & e.as_column()
-    return df.filter(cond)
+    return df.filter(~reduce(lambda a, b: a | b, map(violation, drops)))
+
+
+def expectation_report(df: DataFrame, expectations: list[Expectation]) -> DataFrame:
+    """Lazy ``(expectation, violations, n_rows)`` frame, one row per
+    expectation in the given order: one aggregate pass over ``df``, unpivoted
+    with ``stack``."""
+    counted = df.agg(F.count(F.lit(1)).alias("__rows"), *_violation_counts(expectations))
+    stack = ", ".join(f"'{e.name}', `{e.name}`" for e in expectations)
+    return counted.selectExpr(
+        f"stack({len(expectations)}, {stack}) AS (expectation, violations)",
+        "__rows AS n_rows",
+    )
 
 
 def expectation_metrics(df: DataFrame, expectations: list[Expectation]) -> dict[str, int]:
-    """Violation count per expectation, computed in one aggregate job.
-
-    ``sum(case when not (pred) or pred is null then 1 else 0)`` per predicate —
-    a null predicate result counts as a violation, matching DLT's
-    "expectation not met" semantics for NULL.
-    """
-    checked = [e for e in expectations if e.action in (WARN, FAIL)]
-    if not checked:
+    """Violation count per given expectation, computed in one aggregate job."""
+    if not expectations:
         return {}
-    aggs = [
-        F.sum(
-            F.when(F.coalesce(e.as_column().cast("boolean"), F.lit(False)), F.lit(0)).otherwise(F.lit(1))
-        ).alias(e.name)
-        for e in checked
-    ]
-    row = df.agg(*aggs).collect()[0]
-    return {e.name: int(row[e.name] or 0) for e in checked}
+    return {
+        r.expectation: int(r.violations or 0)
+        for r in expectation_report(df, expectations).collect()
+    }
 
 
 def observe_expectations(df: DataFrame, expectations: list[Expectation]):
@@ -96,8 +120,7 @@ def observe_expectations(df: DataFrame, expectations: list[Expectation]):
     action materializes the DataFrame next (normally the table write), so
     expectation reporting costs ZERO additional scans. This is the mechanism
     DLT itself uses for its expectation metrics (``observe`` feeds the
-    Spark listener bus), where :func:`expectation_metrics` pays one extra
-    aggregate job.
+    Spark listener bus).
 
     Returns ``(df_observed, observation)``; read ``observation.get`` only
     AFTER an action that scans every row. In particular, do not run the
@@ -107,17 +130,9 @@ def observe_expectations(df: DataFrame, expectations: list[Expectation]):
     """
     from pyspark.sql import Observation
 
-    checked = [e for e in expectations if e.action == WARN]
-    aggs = [F.count(F.lit(1)).alias("__rows")] + [
-        F.sum(
-            F.when(
-                F.coalesce(e.as_column().cast("boolean"), F.lit(False)), F.lit(0)
-            ).otherwise(F.lit(1))
-        ).alias(e.name)
-        for e in checked
-    ]
+    warns = [e for e in expectations if e.action == WARN]
     obs = Observation()
-    return df.observe(obs, *aggs), obs
+    return df.observe(obs, F.count(F.lit(1)).alias("__rows"), *_violation_counts(warns)), obs
 
 
 def enforce_fail(dataset: str, df: DataFrame, expectations: list[Expectation]) -> None:
@@ -127,16 +142,9 @@ def enforce_fail(dataset: str, df: DataFrame, expectations: list[Expectation]) -
     Spark stop at the first violating row instead of counting all of them.
     """
     fails = [e for e in expectations if e.action == FAIL]
-    if not fails:
-        return
-    viol = None
-    for e in fails:
-        bad = ~F.coalesce(e.as_column().cast("boolean"), F.lit(False))
-        viol = bad if viol is None else (viol | bad)
-    if df.filter(viol).isEmpty():
+    if not fails or df.filter(reduce(lambda a, b: a | b, map(violation, fails))).isEmpty():
         return
     # Violations exist: now pay for exact per-expectation counts in one pass
     # (only on the failure path, so the happy path stays one cheap scan).
-    counts = expectation_metrics(df, [Expectation(e.name, e.predicate, WARN) for e in fails])
-    failed = [(n, c) for n, c in counts.items() if c > 0]
-    raise ExpectationViolation(dataset, failed)
+    counts = expectation_metrics(df, fails)
+    raise ExpectationViolation(dataset, [(n, c) for n, c in counts.items() if c > 0])

@@ -88,7 +88,6 @@ def build_pipeline(sf_dir: str) -> Pipeline:
             name=f"bronze.bronze_{tbl}",
             comment=f"Raw {tbl} landed from source (incremental at ingest).",
             table_properties={"quality": "bronze"},
-            streaming=True,
         )
         def _bronze(ctx, _tbl=tbl):
             return load_table(ctx.spark_session, sf_dir, _tbl)
@@ -105,7 +104,6 @@ def build_pipeline(sf_dir: str) -> Pipeline:
         name="silver.silver_orders",
         comment="Typed, validated orders.",
         table_properties={"quality": "silver"},
-        streaming=True,
     )
     @p.expect_all(
         {
@@ -140,7 +138,6 @@ def build_pipeline(sf_dir: str) -> Pipeline:
         name="silver.silver_lineitem",
         comment="Typed, validated line items (order_items analog).",
         table_properties={"quality": "silver"},
-        streaming=True,
     )
     @p.expect_all(
         {
@@ -170,7 +167,6 @@ def build_pipeline(sf_dir: str) -> Pipeline:
         name="silver.silver_customer",
         comment="Customers with literal-map segment expansion and broadcast nation join.",
         table_properties={"quality": "silver"},
-        streaming=True,
     )
     @p.expect_all(
         {
@@ -200,7 +196,6 @@ def build_pipeline(sf_dir: str) -> Pipeline:
         name="silver.silver_supplier",
         comment="Suppliers with string cleanup (sellers analog).",
         table_properties={"quality": "silver"},
-        streaming=True,
     )
     @p.expect("supplier_name_nonempty", "LENGTH(s_name) >= 2")
     def silver_supplier(ctx):
@@ -219,7 +214,6 @@ def build_pipeline(sf_dir: str) -> Pipeline:
         name="silver.silver_part",
         comment="Parts with derived metrics, null-defaults, dedup (products analog).",
         table_properties={"quality": "silver"},
-        streaming=True,
     )
     @p.expect_all({"part_key_not_null": "p_partkey IS NOT NULL", "size_non_negative": "p_size >= 0"})
     def silver_part(ctx):
@@ -243,7 +237,6 @@ def build_pipeline(sf_dir: str) -> Pipeline:
         name="silver.silver_events",
         comment="Deduplicated, imputed user events (order_reviews analog).",
         table_properties={"quality": "silver"},
-        streaming=True,
     )
     @p.expect_all(
         {

@@ -26,18 +26,23 @@ implements those semantics on stock PySpark:
     from the written files; the tables are the run's outputs.
 
 ``Pipeline.run`` works like a DLT update. It resolves every dataset on the
-calling thread, in registration order, and hands each table/MV to a thread
-pool as soon as it is resolved and every table it reads (looking through
-views) has been written. Its fail gate and write then run beside those of
-other datasets, so independent bronze, silver and gold datasets refresh at
-the same time. The pool has ``defaultParallelism`` threads. After the first
-failure no further dataset starts; the ones already running finish, and the
-first exception (e.g. :class:`ExpectationViolation`) is raised. Downstream
-datasets of a failed one are therefore never written.
+calling thread, in registration order (drop-mode expectations filter in the
+resolver), and hands each table/MV to a thread pool as soon as it is
+resolved and every table it reads (looking through views) has been written.
+There its :func:`checked_write` step (fail gate, then the write with its
+row and warn counts riding along) runs beside those of other datasets, so
+independent bronze, silver and gold datasets refresh at the same time. The
+pool has ``defaultParallelism`` threads. After the first failure no further
+dataset starts; the ones already running finish, and the first exception
+(e.g. :class:`ExpectationViolation`) is raised. Downstream datasets of a
+failed one are therefore never written.
 
-Streaming tables (``streaming=True``) execute in batch-incremental mode here
-(``availableNow`` parity — identical results); the true-streaming runner lives
-in ``streaming/incremental.py``.
+Every table here runs in batch mode (``availableNow`` parity: a streaming
+table's update over the data present gives the same rows). The
+true-streaming runner, ``streaming/incremental.py::
+run_incremental_with_expectations``, writes each microbatch through the same
+:func:`checked_write` step, so both paths judge rows by one contract
+(``plans/expectations.py``).
 """
 
 from __future__ import annotations
@@ -90,11 +95,35 @@ class DatasetDef:
     comment: str = ""
     table_properties: dict = field(default_factory=dict)
     expectations: list[Expectation] = field(default_factory=list)
-    streaming: bool = False
     cluster_by: tuple = ()
-    partition_by: tuple = ()
-    bucket_by: tuple = ()  # (n_buckets, col, ...) — hash-bucketed table layout
-    sort_by: tuple = ()  # within-bucket sort columns (requires bucket_by)
+    bucket_by: tuple = ()  # (n_buckets, col, ...) — hash-bucketed, sorted by col
+
+
+def checked_write(
+    dataset: str,
+    df: DataFrame,
+    expectations: list[Expectation],
+    write: Callable[[DataFrame], None],
+) -> dict:
+    """The one checked-write step of a table, an MV or a streaming microbatch.
+
+    ``df`` holds the rows left after drop-mode expectations. Runs the fail
+    gate on them, then ``write`` on the same rows with the row count and
+    the warn violation counts riding the write job as an Observation, so
+    one scan writes the rows and counts them. Returns ``{"rows": n}``, plus
+    ``"expectations": {warn_name: violations}`` when there are warn
+    expectations.
+    """
+    # the gate runs on the UN-observed plan: its isEmpty probe
+    # short-circuits, which would freeze an observation at partial counts
+    enforce_fail(dataset, df, expectations)
+    observed, obs = observe_expectations(df, expectations)
+    write(observed)
+    counts = {k: int(v or 0) for k, v in obs.get.items()}
+    entry: dict = {"rows": counts.pop("__rows")}
+    if counts:
+        entry["expectations"] = counts
+    return entry
 
 
 class _Resolver:
@@ -209,11 +238,8 @@ class Pipeline:
         name: str | None = None,
         comment: str = "",
         table_properties: dict | None = None,
-        streaming: bool = False,
-        partition_by: tuple = (),
         cluster_by: tuple = (),
         bucket_by: tuple = (),
-        sort_by: tuple = (),
     ):
         """Register a (streaming) table. Equivalent of ``@dlt.table``
         (Silver_orders.py:16-21, bronze_ingestion.py:38-45).
@@ -227,11 +253,8 @@ class Pipeline:
             name=name,
             comment=comment,
             table_properties=table_properties or {},
-            streaming=streaming,
-            partition_by=tuple(partition_by),
             cluster_by=tuple(cluster_by),
             bucket_by=tuple(bucket_by),
-            sort_by=tuple(sort_by),
         )
 
     def materialized_view(
@@ -384,21 +407,11 @@ class Pipeline:
 
         def materialize(d: DatasetDef, df: DataFrame) -> dict:
             start = time.perf_counter() - t0
-            # fail gate runs on the UN-observed plan: its isEmpty probe
-            # short-circuits, which would freeze an observation at partial
-            # counts (see observe_expectations docstring)
-            enforce_fail(d.name, df, d.expectations)
-            # row count + warn violation counts ride the write job —
-            # one scan materializes the table AND its metrics
-            df, obs = observe_expectations(df, d.expectations)
-            write_table(spark, df, d, warehouse=warehouse, fmt=fmt)
-            end = time.perf_counter() - t0
-            m = obs.get
-            entry: dict = {"rows": int(m["__rows"])}
-            warn_counts = {k: int(v or 0) for k, v in m.items() if k != "__rows"}
-            if warn_counts:
-                entry["expectations"] = warn_counts
-            entry.update(start_s=start, end_s=end)
+            entry = checked_write(
+                d.name, df, d.expectations,
+                lambda out: write_table(spark, out, d, warehouse=warehouse, fmt=fmt),
+            )
+            entry.update(start_s=start, end_s=time.perf_counter() - t0)
             return entry
 
         # pool threads take the caller's job group / description, so a

@@ -388,31 +388,13 @@ def q_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_corpus_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus pipeline's warn-level expectation metrics as a
     driver-checkable query: one row per REGISTRY-registered expectation on
-    `silver.corpus_docs` with its violation count (NULL predicate counts as
-    a violation — DLT's semantics, plans/expectations.py). One aggregate
-    pass + stack, exactly the shape the engine's Observation rides on
-    table writes."""
+    `silver.corpus_docs` with its violation count — the engine's own
+    report (plans/expectations.py: a NULL predicate is a violation)."""
     from .plans.corpus import corpus_dataframe, corpus_silver_expectations
+    from .plans.expectations import expectation_report
 
     silver = corpus_dataframe(spark, sf_dir, "silver.corpus_docs")
-    exps = corpus_silver_expectations()
-    counted = silver.agg(
-        F.count(F.lit(1)).alias("__rows"),
-        *[
-            F.sum(
-                F.when(
-                    F.coalesce(F.expr(e.predicate).cast("boolean"), F.lit(False)),
-                    F.lit(0),
-                ).otherwise(F.lit(1))
-            ).alias(e.name)
-            for e in exps
-        ],
-    )
-    stack = ", ".join(f"'{e.name}', {e.name}" for e in exps)
-    return counted.selectExpr(
-        f"stack({len(exps)}, {stack}) AS (expectation, violations)",
-        "__rows AS n_rows",
-    )
+    return expectation_report(silver, corpus_silver_expectations())
 
 
 # --------------------------------------------------------------------------
@@ -959,19 +941,15 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # worker invocation, so a driver-side cancel or bench label set on the
     # main thread reaches the four concurrent builds (plain pool threads
     # would not inherit them).
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=4) as pool:
-        f_exact = pool.submit(inheritable_thread_target(_exact))
+        f_exact = pool.submit(inherit(_exact))
         f_ivf = pool.submit(
-            inheritable_thread_target(ivf_topk),
-            emb, k=3, n_centroids=16, nprobes=sweep, query_filter=qf,
+            inherit(ivf_topk), emb, k=3, n_centroids=16, nprobes=sweep, query_filter=qf
         )
-        f_pq = pool.submit(
-            inheritable_thread_target(ivfpq_topk),
-            emb, k=3, nprobes=sweep, query_filter=qf,
-        )
+        f_pq = pool.submit(inherit(ivfpq_topk), emb, k=3, nprobes=sweep, query_filter=qf)
         f_res = pool.submit(
-            inheritable_thread_target(ivfpq_residual_topk),
-            emb, k=3, nprobes=sweep, query_filter=qf,
+            inherit(ivfpq_residual_topk), emb, k=3, nprobes=sweep, query_filter=qf
         )
         exact = f_exact.result()
         tiers = [
@@ -2821,18 +2799,17 @@ def q_pack_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _side_artifact_dir(sf_dir: str, source_table: str, kind: str) -> str:
     """Cache dir for a per-corpus side artifact (CSV/JSONL landing copy),
-    keyed by the ABSOLUTE source path and its mtime — a different corpus
-    with the same basename, or a regenerated corpus, gets a fresh dir
-    instead of silently round-tripping stale data."""
+    keyed by the ABSOLUTE source path and its stamp (nanosecond mtime and
+    size, ``sources/loader.py::_file_stamp``) — a different corpus with the
+    same basename, or a regenerated corpus, gets a fresh dir instead of
+    silently round-tripping stale data, even within the same second."""
     import hashlib
     import tempfile
 
+    from .sources.loader import _file_stamp
+
     src = os.path.join(os.path.abspath(sf_dir), f"{source_table}.parquet")
-    try:
-        mtime = str(int(os.path.getmtime(src)))
-    except OSError:
-        mtime = "0"
-    key = hashlib.md5(f"{src}|{mtime}".encode()).hexdigest()[:12]
+    key = hashlib.md5(f"{src}|{_file_stamp(src)}".encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}_{key}")
 
 
@@ -2845,8 +2822,8 @@ def q_csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     type pinning, and the rescued-column plumbing lose nothing on clean
     data. Dates ride as ISO strings (CSV date inference is config-dependent
     across Spark versions; pinning strings keeps the contract exact); the
-    ingest ledger lives in a fresh temp state dir per call so the query is
-    idempotent."""
+    ingest ledger lives in a temp state dir removed when ``ingest()``
+    returns, so the query is idempotent and leaves nothing behind."""
     import tempfile
 
     from .sources.csv_ingest import CsvIngestor
@@ -2864,9 +2841,8 @@ def q_csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.coalesce(4).write.mode("overwrite").option("header", True).csv(csv_dir)
         with open(marker, "w", encoding="utf-8") as fh:
             fh.write("ok")
-    state = tempfile.mkdtemp(prefix="spark_graft_csv_state_")
-    result = CsvIngestor(csv_dir, state).ingest(spark)
-    df = result.df
+    with tempfile.TemporaryDirectory(prefix="spark_graft_csv_state_") as state:
+        df = CsvIngestor(csv_dir, state).ingest(spark).df
     return df.select(
         F.col("o_orderkey").cast("long"),
         F.col("o_custkey").cast("long"),
@@ -2884,10 +2860,11 @@ def q_csv_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_expectation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The quality-expectation surface (Q1-Q4) as a driver-checkable query:
     the reference's warn-level predicates evaluated over orders, emitting
-    one row per expectation with its violation count — the same aggregate
-    shape the engine's Observation rides on table writes
-    (plans/expectations.py). UNPIVOT keeps it one scan for all predicates."""
-    orders = load_table(spark, sf_dir, "orders")
+    one row per expectation with its violation count — the engine's own
+    report, one scan for all predicates (plans/expectations.py: a NULL
+    predicate is a violation)."""
+    from .plans.expectations import Expectation, expectation_report
+
     preds = {
         "order_key_not_null": "o_orderkey IS NOT NULL",
         "valid_status": "o_orderstatus IN ('O', 'F', 'P')",
@@ -2895,17 +2872,9 @@ def q_expectation_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "reasonable_total": "o_totalprice <= 400000",
         "date_in_range": "o_orderdate >= DATE '1992-01-01'",
     }
-    counted = orders.agg(
-        F.count(F.lit(1)).alias("__rows"),
-        *[
-            F.sum(F.when(~F.expr(p), 1).otherwise(0)).alias(name)
-            for name, p in preds.items()
-        ],
-    )
-    stack = ", ".join(f"'{name}', {name}" for name in preds)
-    return counted.selectExpr(
-        f"stack({len(preds)}, {stack}) AS (expectation, violations)",
-        "__rows AS n_rows",
+    return expectation_report(
+        load_table(spark, sf_dir, "orders"),
+        [Expectation(name, p) for name, p in preds.items()],
     )
 
 
@@ -3846,8 +3815,8 @@ def q_jsonl_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     as JSON-lines once per sf_dir (the canonical LLM-corpus interchange
     format), then JsonlIngestor infers-and-pins the schema, tracks the
     processed-file ledger, and reads the corpus back — the typed round-trip
-    must value-match the parquet source exactly. Fresh state dir per call
-    keeps the query idempotent."""
+    must value-match the parquet source exactly. A temp state dir, removed
+    when ``ingest()`` returns, keeps the query idempotent."""
     import tempfile
 
     from .sources.json_ingest import JsonlIngestor
@@ -3859,8 +3828,8 @@ def q_jsonl_ingest_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.coalesce(4).write.mode("overwrite").json(jsonl_dir)
         with open(marker, "w", encoding="utf-8") as fh:
             fh.write("ok")
-    state = tempfile.mkdtemp(prefix="spark_graft_jsonl_state_")
-    result = JsonlIngestor(jsonl_dir, state).ingest(spark)
+    with tempfile.TemporaryDirectory(prefix="spark_graft_jsonl_state_") as state:
+        result = JsonlIngestor(jsonl_dir, state).ingest(spark)
     if "doc_id" not in result.df.columns:
         # empty corpus: JSON schema inference sees zero records and yields
         # only _rescued_data — return the typed empty frame instead of an
@@ -11455,15 +11424,15 @@ ORACLES["corpus_rarity"] = """
 ORACLES["expectation_metrics"] = """
     WITH counted AS (
       SELECT COUNT(*) AS n_rows,
-             SUM(CASE WHEN NOT (o_orderkey IS NOT NULL) THEN 1 ELSE 0 END)
+             SUM(CASE WHEN NOT COALESCE(o_orderkey IS NOT NULL, FALSE) THEN 1 ELSE 0 END)
                AS order_key_not_null,
-             SUM(CASE WHEN NOT (o_orderstatus IN ('O', 'F', 'P')) THEN 1 ELSE 0 END)
+             SUM(CASE WHEN NOT COALESCE(o_orderstatus IN ('O', 'F', 'P'), FALSE) THEN 1 ELSE 0 END)
                AS valid_status,
-             SUM(CASE WHEN NOT (o_totalprice > 0) THEN 1 ELSE 0 END)
+             SUM(CASE WHEN NOT COALESCE(o_totalprice > 0, FALSE) THEN 1 ELSE 0 END)
                AS positive_total,
-             SUM(CASE WHEN NOT (o_totalprice <= 400000) THEN 1 ELSE 0 END)
+             SUM(CASE WHEN NOT COALESCE(o_totalprice <= 400000, FALSE) THEN 1 ELSE 0 END)
                AS reasonable_total,
-             SUM(CASE WHEN NOT (o_orderdate >= DATE '1992-01-01') THEN 1 ELSE 0 END)
+             SUM(CASE WHEN NOT COALESCE(o_orderdate >= DATE '1992-01-01', FALSE) THEN 1 ELSE 0 END)
                AS date_in_range
       FROM orders
     )

@@ -1,4 +1,4 @@
-from .loader import TABLES, load_table, load_tables, register_views
+from .loader import TABLES, load_table
 from .sinks import write_table
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views", "write_table"]
+__all__ = ["TABLES", "load_table", "write_table"]

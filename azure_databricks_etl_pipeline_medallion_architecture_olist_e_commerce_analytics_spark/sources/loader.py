@@ -180,7 +180,7 @@ def raw_parquet_schema(spark: SparkSession, path: str):
     return _raw_schema(spark, path, _table_stamp(path))
 
 
-def spread_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def spread_partitions(df: DataFrame) -> DataFrame:
     """Repartition an under-split input up to the session's parallelism.
 
     Parquet splits at row-group granularity, so a small corpus written as one
@@ -192,7 +192,7 @@ def spread_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     >= defaultParallelism` holds, and this is a no-op — it exists for the
     small-file edge, which is also exactly the local-test shape.
     """
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     # ``df.rdd`` builds the javaToPython conversion plan just to ask the
     # partition count — ~0.1 s of driver work per call. The count of a given
     # (immutable) DataFrame never changes, so memoize it on the object;
@@ -208,14 +208,3 @@ def spread_partitions(df: DataFrame, min_parts: int | None = None) -> DataFrame:
         return df.repartition(target)
     return df
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> dict[str, DataFrame]:
-    """Register every testdata table as a temp view (for spark.sql queries)."""
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(prefix + name)
-    return dfs

@@ -12,7 +12,7 @@ Open-source mapping:
   the same data-skipping-friendly file layout (min/max zone maps in parquet
   footers) without the Delta metadata.
 
-Scale notes: writes go through AQE-coalesced shuffles; partition/cluster
+Scale notes: writes go through AQE-coalesced shuffles; cluster and bucket
 columns are honored so downstream joins on those keys scan co-located files.
 """
 
@@ -78,8 +78,7 @@ def write_table(
             shutil.rmtree(stale, ignore_errors=True)
 
     out = df
-    bucket_by = tuple(getattr(dataset, "bucket_by", ()) or ())
-    if dataset.cluster_by and not bucket_by:
+    if dataset.cluster_by and not dataset.bucket_by:
         # Liquid-clustering equivalent (CLUSTER BY, reference
         # fact_order_items.sql:9): Morton-key range clustering so parquet
         # footer min/max stats prune scans on ANY clustered column, not just
@@ -102,17 +101,13 @@ def write_table(
 
     use_fmt = "delta" if (HAVE_DELTA and fmt == "delta") else "parquet"
     writer = out.write.format(use_fmt).mode("overwrite")
-    if dataset.partition_by:
-        writer = writer.partitionBy(*dataset.partition_by)
-    if bucket_by:
+    if dataset.bucket_by:
         # Hash-bucketed layout: every read of this table is pre-shuffled on
         # the bucket columns, so joins/aggs between tables bucketed the same
         # way run with ZERO Exchange — the co-located-join strategy for a
         # star schema at 100 TB.
-        n, *cols = bucket_by
-        writer = writer.bucketBy(int(n), *cols)
-        sort_cols = tuple(getattr(dataset, "sort_by", ()) or ()) or tuple(cols)
-        writer = writer.sortBy(*sort_cols)
+        n, *cols = dataset.bucket_by
+        writer = writer.bucketBy(int(n), *cols).sortBy(*cols)
     dropped_delta_props = []
     for k, v in dataset.table_properties.items():
         if k.startswith("delta.") and use_fmt != "delta":

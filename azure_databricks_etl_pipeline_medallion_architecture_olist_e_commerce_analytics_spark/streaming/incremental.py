@@ -39,11 +39,11 @@ def stream_source(
     spark: SparkSession,
     path: str,
     schema: T.StructType | None = None,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
     path_glob_filter: str | None = None,
 ) -> DataFrame:
-    """File-source stream over a landing directory (Auto Loader analogue).
+    """Parquet file-source stream over a landing directory (Auto Loader
+    analogue).
 
     Streaming reads require an explicit schema; when none is given, the
     batch reader infers it once from the current directory contents — the
@@ -52,11 +52,11 @@ def stream_source(
     ``path_glob_filter``.
     """
     if schema is None:
-        reader = spark.read.format(fmt)
+        reader = spark.read.format("parquet")
         if path_glob_filter:
             reader = reader.option("pathGlobFilter", path_glob_filter)
         schema = reader.load(path).schema
-    reader = spark.readStream.format(fmt).schema(schema)
+    reader = spark.readStream.format("parquet").schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     if path_glob_filter:
@@ -64,29 +64,21 @@ def stream_source(
     return reader.load(path)
 
 
-def run_incremental(
-    df: DataFrame,
-    target_path: str,
-    checkpoint: str,
-    fmt: str = "parquet",
-    partition_by: tuple = (),
-) -> None:
+def run_incremental(df: DataFrame, target_path: str, checkpoint: str) -> None:
     """One ``availableNow`` microbatch run: process all unseen input, stop.
 
     Parity with a DLT streaming-table update: incremental (checkpoint skips
     files already processed), append-mode, exactly-once sink commit through
-    the streaming file sink's transaction log.
+    the parquet streaming file sink's transaction log.
     """
-    writer = (
-        df.writeStream.format(fmt)
+    q = (
+        df.writeStream.format("parquet")
         .option("checkpointLocation", checkpoint)
         .option("path", target_path)
         .outputMode("append")
         .trigger(availableNow=True)
+        .start()
     )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    q = writer.start()
     q.awaitTermination()
 
 
@@ -111,26 +103,25 @@ def _needs_no_data_batches(df: DataFrame, output_mode: str) -> bool:
     return False
 
 
-def run_to_memory(
-    df: DataFrame,
-    name: str,
-    output_mode: str = "append",
-    state_partitions: int | None = 8,
-) -> DataFrame:
+#: Stateful-operator partitions of a :func:`run_to_memory` stream.
+STATE_PARTITIONS = 8
+
+
+def run_to_memory(df: DataFrame, name: str, output_mode: str = "append") -> DataFrame:
     """Run a stream to completion into an in-memory table (test/oracle path).
 
     The memory sink collects to the driver — fine for the sf0.01 correctness
     gate, never for production; use :func:`run_incremental` there.
 
-    ``state_partitions`` sizes the stateful-operator partitioning (state
+    :data:`STATE_PARTITIONS` sizes the stateful-operator partitioning (state
     store count = ``spark.sql.shuffle.partitions`` at FIRST run, pinned by
-    the checkpoint thereafter; AQE never touches streaming plans). It is a
-    per-stream knob sized to stream volume, not cluster width: every
-    microbatch pays one state-store load/commit per partition per stateful
-    operator, so an oversized count turns into pure fixed overhead (32→8
-    partitions cut the test streams 4-5×), while a 100 TB/day stream
-    genuinely needs thousands. The session value is restored afterwards so
-    batch queries keep the cluster-width setting.
+    the checkpoint thereafter; AQE never touches streaming plans). It is
+    sized to stream volume, not cluster width: every microbatch pays one
+    state-store load/commit per partition per stateful operator, so an
+    oversized count turns into pure fixed overhead (32→8 partitions cut the
+    test streams 4-5×), while a 100 TB/day stream genuinely needs
+    thousands. The session value is restored afterwards so batch queries
+    keep the cluster-width setting.
 
     No-data microbatches (the zero-row finalization batch availableNow
     appends to advance the watermark) stay on only when the output can wait
@@ -145,8 +136,7 @@ def run_to_memory(
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     nodata_key = "spark.sql.streaming.noDataMicroBatches.enabled"
     prev_nodata = spark.conf.get(nodata_key)
-    if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     spark.conf.set(nodata_key, str(_needs_no_data_batches(df, output_mode)).lower())
     try:
         q = (
@@ -158,8 +148,7 @@ def run_to_memory(
         )
         q.awaitTermination()
     finally:
-        if state_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
         spark.conf.set(nodata_key, prev_nodata)
     return spark.table(name)
 
@@ -304,22 +293,27 @@ def stream_interval_join(
     )
 
 
+#: Dataset name a failed :func:`run_incremental_with_expectations` batch
+#: reports in its :class:`ExpectationViolation`.
+STREAM_DATASET = "stream"
+
+
 def run_incremental_with_expectations(
     df: DataFrame,
     target_path: str,
     checkpoint: str,
     expectations: list,
-    dataset: str = "stream",
-    fmt: str = "parquet",
 ) -> list[dict]:
     """Streaming ingest with per-microbatch data-quality expectations.
 
-    The SURVEY §7.2 hard point, solved with ``foreachBatch`` + a cached
-    batch: each microbatch is persisted once, then (1) fail-level predicates
-    abort the query via :class:`ExpectationViolation` (the DLT ``ON
-    VIOLATION FAIL UPDATE`` semantic), (2) warn metrics are computed in ONE
-    aggregate pass, (3) drop-mode predicates filter the rows that are
-    appended — no transformation is computed twice.
+    The SURVEY §7.2 hard point, solved with ``foreachBatch``: each
+    microbatch drops the rows that violate a drop-mode expectation, then
+    goes through the same checked-write step as a pipeline table
+    (``plans/registry.py::checked_write``): fail-level predicates abort the
+    query via :class:`ExpectationViolation` (the DLT ``ON VIOLATION FAIL
+    UPDATE`` semantic), and the parquet append carries the warn counts as
+    an Observation, so warn and fail judge exactly the appended rows
+    (``plans/expectations.py``: the contract).
 
     Returns the per-batch metrics list ``[{"batch_id": n, <warn_name>:
     violations, ...}, ...]``. Exactly-once note: with a parquet sink a batch
@@ -327,26 +321,19 @@ def run_incremental_with_expectations(
     at-least-once; a transactional sink (Delta) upgrades this to
     exactly-once — same contract as DLT on Delta.
     """
-    from ..plans.expectations import (
-        WARN,
-        apply_expectations,
-        enforce_fail,
-        expectation_metrics,
-    )
+    from ..plans.expectations import apply_expectations
+    from ..plans.registry import checked_write
 
     batch_metrics: list[dict] = []
-    warns = [e for e in expectations if e.action == WARN]
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            enforce_fail(dataset, batch_df, expectations)
-            metrics = expectation_metrics(batch_df, warns) if warns else {}
-            out = apply_expectations(batch_df, expectations)
-            out.write.mode("append").format(fmt).save(target_path)
-            batch_metrics.append({"batch_id": batch_id, **metrics})
-        finally:
-            batch_df.unpersist()
+        counts = checked_write(
+            STREAM_DATASET,
+            apply_expectations(batch_df, expectations),
+            expectations,
+            lambda out: out.write.mode("append").parquet(target_path),
+        )
+        batch_metrics.append({"batch_id": batch_id, **counts.get("expectations", {})})
 
     q = (
         df.writeStream.foreachBatch(process)

@@ -12,6 +12,7 @@ from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analy
     expectation_metrics,
 )
 from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.plans.registry import (
+    DatasetDef,
     ExpectationViolation,
     Pipeline,
 )
@@ -150,6 +151,162 @@ def test_run_fail_expectation_aborts(spark):
 
     with pytest.raises(ExpectationViolation):
         p.run(spark)
+
+
+def test_pipeline_and_stream_apply_one_expectation_contract(spark, tmp_path):
+    """Pipeline.run and the streaming runner judge rows by one rule: DROP
+    filters first, WARN and FAIL see the rows that are written. Row 2
+    violates DROP and FAIL, row 4 violates DROP and WARN: both are dropped,
+    neither fails nor is counted."""
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.incremental import (
+        run_incremental_with_expectations,
+        stream_source,
+    )
+
+    rows = spark.createDataFrame(
+        [(1, 5.0, 1), (2, -3.0, 1), (3, 4.0, None), (4, -1.0, None)],
+        "id int, v double, w int",
+    )
+    p = Pipeline("contract")
+
+    @p.table(name="silver.contract")
+    @p.expect_all_or_drop({"v_non_negative": "v >= 0"})
+    @p.expect_all_or_fail({"v_above_floor": "v > -2"})
+    @p.expect("w_not_null", "w IS NOT NULL")
+    def contract(ctx):
+        return rows
+
+    report = p.run(spark, warehouse=str(tmp_path / "wh"))["silver.contract"]
+    try:
+        table_ids = sorted(r.id for r in spark.table("silver.contract").collect())
+    finally:
+        spark.sql("DROP TABLE IF EXISTS `silver`.`contract`")
+
+    src, tgt = str(tmp_path / "in"), str(tmp_path / "out")
+    rows.coalesce(1).write.parquet(src)
+    batches = run_incremental_with_expectations(
+        stream_source(spark, src), tgt, str(tmp_path / "ck"),
+        p.datasets()[0].expectations,
+    )
+    stream_ids = sorted(r.id for r in spark.read.parquet(tgt).collect())
+
+    assert table_ids == stream_ids == [1, 3]
+    assert report["rows"] == 2
+    assert report["expectations"] == {"w_not_null": 1}
+    assert batches == [{"batch_id": 0, "w_not_null": 1}]
+
+
+def test_expectation_metrics_query_counts_null_predicate_as_violation(spark, tmp_path):
+    """A NULL o_totalprice violates positive_total and reasonable_total, in
+    the catalog query and in its DuckDB oracle alike."""
+    import duckdb
+
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.queries import (
+        ORACLES,
+    )
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.sources.loader import (
+        load_table,
+    )
+
+    from conftest import SF_SMALL
+
+    def counts(sf_dir):
+        out = _ALL_QUERIES["expectation_metrics"](spark, sf_dir).collect()
+        return {r.expectation: (r.violations, r.n_rows) for r in out}
+
+    orders = load_table(spark, SF_SMALL, "orders")
+    first = orders.agg(F.min("o_orderkey")).first()[0]
+    orders.withColumn(
+        "o_totalprice",
+        F.when(F.col("o_orderkey") != first, F.col("o_totalprice")),
+    ).write.parquet(str(tmp_path / "orders.parquet"))
+
+    clean, nulled = counts(SF_SMALL), counts(str(tmp_path))
+    for name, (v, n) in clean.items():
+        bump = 1 if name in ("positive_total", "reasonable_total") else 0
+        assert nulled[name] == (v + bump, n), name
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW orders AS SELECT * FROM "
+            f"read_parquet('{tmp_path / 'orders.parquet'}/*.parquet')"
+        )
+        oracle = {
+            r[0]: (r[1], r[2]) for r in con.execute(ORACLES["expectation_metrics"]).fetchall()
+        }
+    finally:
+        con.close()
+    assert oracle == nulled
+
+
+def test_trace_seams_see_fail_gate_and_write(spark, tmp_path, monkeypatch):
+    """The benchmark tracer wraps ``registry.enforce_fail`` (dataset name
+    first) and ``sinks.write_table`` (DatasetDef third); a refresh must call
+    both through those module attributes, or traced fail-gate and write
+    spans silently read zero."""
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.plans import (
+        registry,
+    )
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.sources import (
+        sinks,
+    )
+
+    seen: dict[str, list] = {"enforce_fail": [], "write_table": []}
+
+    def recording(module, name):
+        real = getattr(module, name)
+
+        def stub(*args, **kwargs):
+            seen[name].append(args)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, stub)
+
+    recording(registry, "enforce_fail")
+    recording(sinks, "write_table")
+    p = Pipeline("seams")
+
+    @p.table(name="silver.seams")
+    @p.expect_all_or_fail({"v_small": "v < 100"})
+    def seams(ctx):
+        return ctx.spark_session.range(10).withColumnRenamed("id", "v")
+
+    try:
+        p.run(spark, warehouse=str(tmp_path / "wh"))
+    finally:
+        spark.sql("DROP TABLE IF EXISTS `silver`.`seams`")
+    assert [args[0] for args in seen["enforce_fail"]] == ["silver.seams"]
+    (write_args,) = seen["write_table"]
+    assert isinstance(write_args[2], DatasetDef) and write_args[2].name == "silver.seams"
+
+
+def test_side_artifact_dir_changes_on_same_second_overwrite(tmp_path):
+    """A source overwritten within the same second gets a new artifact dir."""
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.queries import (
+        _side_artifact_dir,
+    )
+
+    src = tmp_path / "orders.parquet"
+    src.write_bytes(b"a" * 10)
+    second = os.stat(src).st_mtime_ns // 10**9 * 10**9
+    os.utime(src, ns=(second, second + 100))
+    first = _side_artifact_dir(str(tmp_path), "orders", "csv")
+    src.write_bytes(b"b" * 20)
+    os.utime(src, ns=(second, second + 900_000_000))
+    assert _side_artifact_dir(str(tmp_path), "orders", "csv") != first
+
+
+def test_ann_recall_eval_passes_session_to_pool_threads(spark):
+    """The four concurrent builds inherit the caller's tags: constructing
+    the query gives no "Spark session is not provided" warning."""
+    import warnings
+
+    from conftest import SF_SMALL
+
+    with warnings.catch_warnings(record=True) as seen:
+        warnings.simplefilter("always")
+        _ALL_QUERIES["ann_recall_eval"](spark, SF_SMALL)
+    assert not [w for w in seen if "Spark session is not provided" in str(w.message)]
 
 
 def test_run_writes_upstream_tables_first_and_stops_after_failure(spark):

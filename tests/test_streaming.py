@@ -248,6 +248,40 @@ def test_foreach_batch_expectations_warn_drop_per_microbatch(spark, tmp_path):
     assert kept == {1, 4}  # negative-v rows dropped in their own batches
 
 
+def test_stream_warn_counts_equal_metrics_over_written_rows(spark, tmp_path):
+    """Each microbatch's warn counts ride its append, so they equal
+    expectation_metrics over the rows that batch wrote: a row that violates
+    both the warn and the drop expectation is dropped and not counted."""
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.plans.expectations import (
+        DROP,
+        WARN,
+        Expectation,
+        expectation_metrics,
+    )
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.incremental import (
+        run_incremental_with_expectations,
+    )
+
+    src, tgt, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
+    schema = "id int, v double, w int, f int"
+    _drop(spark, [(1, 1.0, None, 0), (2, -1.0, None, 0), (3, 2.0, 7, 0)], src, schema)
+    _drop(spark, [(4, 1.0, None, 1), (5, 3.0, None, 1)], src, schema)
+    _drop(spark, [(6, -2.0, 1, 2), (7, 4.0, 2, 2)], src, schema)
+    warns = [Expectation("w_not_null", "w IS NOT NULL", WARN)]
+    exps = warns + [Expectation("v_non_negative", "v >= 0", DROP)]
+    metrics = run_incremental_with_expectations(
+        stream_source(spark, src, max_files_per_trigger=1), tgt, ckpt, exps
+    )
+    written = spark.read.parquet(tgt)
+    assert sorted(r.id for r in written.collect()) == [1, 3, 4, 5, 7]
+    got = sorted(m["w_not_null"] for m in metrics)
+    want = sorted(
+        expectation_metrics(written.filter(F.col("f") == f), warns)["w_not_null"]
+        for f in (0, 1, 2)
+    )
+    assert got == want == [0, 1, 2]
+
+
 def test_foreach_batch_fail_expectation_aborts_stream(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
