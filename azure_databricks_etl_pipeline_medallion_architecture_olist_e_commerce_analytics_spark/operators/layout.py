@@ -192,7 +192,8 @@ def cluster_frame(
     Scale note: the range partitioner samples its child and the morton stats
     take one extra aggregate pass — at warehouse scale you run this over the
     already-written files (OPTIMIZE-style rewrite), not the build DAG; the
-    engine's Pipeline.run persists the frame first for exactly that reason.
+    engine's ``plans/registry.py::checked_write`` materializes the frame
+    first for exactly that reason.
     """
     cols = list(cols)
     parts = [num_files] if num_files else []

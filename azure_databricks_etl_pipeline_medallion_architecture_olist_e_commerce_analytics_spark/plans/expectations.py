@@ -26,19 +26,20 @@ materialized view or a streaming table:
   that violates both a DROP and a FAIL expectation is dropped and fails
   nothing; a row that violates both a WARN and a DROP expectation is not
   counted.
-- **Counts.** Written datasets take their row and warn counts from the
-  :class:`~pyspark.sql.Observation` riding the write
-  (:func:`observe_expectations`; the write step is
-  ``plans/registry.py::checked_write``). :func:`expectation_report` is the
+- **Counts.** Written datasets take their row, warn and fail counts from
+  one :class:`~pyspark.sql.Observation` riding the pass that produces the
+  rows (:func:`observe_expectations`); the fail gate judges those counts
+  (:func:`enforce_fail`). The write step is
+  ``plans/registry.py::checked_write``. :func:`expectation_report` is the
   same count as a lazy per-expectation frame for reporting queries.
 
 Scale notes
 -----------
 Predicates are compiled with ``F.expr`` so they stay JVM-side inside
 whole-stage codegen — no Python round trip. Counts are ONE aggregate over
-the dataset (a map-side partial aggregation; no per-predicate jobs). Fail
-mode short-circuits with ``isEmpty()`` on the violation filter, which stops
-scanning at the first violating row per partition.
+the dataset (a map-side partial aggregation; no per-predicate jobs). The
+fail gate runs no job of its own: it reads the counts of the pass that
+already scanned every row.
 """
 
 from __future__ import annotations
@@ -115,36 +116,29 @@ def expectation_metrics(df: DataFrame, expectations: list[Expectation]) -> dict[
 
 
 def observe_expectations(df: DataFrame, expectations: list[Expectation]):
-    """Attach warn-expectation violation counters plus a row count to the
-    plan as an :class:`~pyspark.sql.Observation` — the metrics ride whatever
-    action materializes the DataFrame next (normally the table write), so
-    expectation reporting costs ZERO additional scans. This is the mechanism
-    DLT itself uses for its expectation metrics (``observe`` feeds the
-    Spark listener bus).
+    """Attach a row count and the violation count of every warn and fail
+    expectation to the plan as an :class:`~pyspark.sql.Observation` — the
+    counts ride whatever action materializes the DataFrame next (the table
+    write, or the checkpoint of a gated dataset), so they cost ZERO
+    additional scans. This is the mechanism DLT itself uses for its
+    expectation metrics (``observe`` feeds the Spark listener bus).
 
     Returns ``(df_observed, observation)``; read ``observation.get`` only
-    AFTER an action that scans every row. In particular, do not run the
-    short-circuiting :func:`enforce_fail` on the observed plan — its
-    ``isEmpty`` probe stops early and would freeze the observation at
-    partial counts.
+    AFTER an action that scans every row.
     """
     from pyspark.sql import Observation
 
-    warns = [e for e in expectations if e.action == WARN]
+    judged = [e for e in expectations if e.action != DROP]
     obs = Observation()
-    return df.observe(obs, F.count(F.lit(1)).alias("__rows"), *_violation_counts(warns)), obs
+    return df.observe(obs, F.count(F.lit(1)).alias("__rows"), *_violation_counts(judged)), obs
 
 
-def enforce_fail(dataset: str, df: DataFrame, expectations: list[Expectation]) -> None:
-    """Raise :class:`ExpectationViolation` if any fail-level predicate has violations.
-
-    Single filtered scan over the union of fail predicates; ``isEmpty`` lets
-    Spark stop at the first violating row instead of counting all of them.
-    """
-    fails = [e for e in expectations if e.action == FAIL]
-    if not fails or df.filter(reduce(lambda a, b: a | b, map(violation, fails))).isEmpty():
-        return
-    # Violations exist: now pay for exact per-expectation counts in one pass
-    # (only on the failure path, so the happy path stays one cheap scan).
-    counts = expectation_metrics(df, fails)
-    raise ExpectationViolation(dataset, [(n, c) for n, c in counts.items() if c > 0])
+def enforce_fail(dataset: str, counts: dict[str, int], expectations: list[Expectation]) -> None:
+    """Raise :class:`ExpectationViolation` if a fail-level expectation has
+    violations in ``counts`` (``{expectation: violations}``, as an
+    observation of every row yields them)."""
+    failed = [
+        (e.name, counts[e.name]) for e in expectations if e.action == FAIL and counts[e.name]
+    ]
+    if failed:
+        raise ExpectationViolation(dataset, failed)

@@ -21,7 +21,7 @@ implements those semantics on stock PySpark:
     scan, column pruning across the medallion) happen for free. At 100 TB this
     is the mode you run ad-hoc queries in.
   * ``tables`` (:meth:`Pipeline.run`): each table/MV dataset is written to
-    the warehouse (parquet ``saveAsTable``; Delta when the jars are present).
+    the warehouse (parquet ``saveAsTable``).
     Downstream datasets are still computed from the resolved lineage, not
     from the written files; the tables are the run's outputs.
 
@@ -29,13 +29,16 @@ implements those semantics on stock PySpark:
 calling thread, in registration order (drop-mode expectations filter in the
 resolver), and hands each table/MV to a thread pool as soon as it is
 resolved and every table it reads (looking through views) has been written.
-There its :func:`checked_write` step (fail gate, then the write with its
-row and warn counts riding along) runs beside those of other datasets, so
-independent bronze, silver and gold datasets refresh at the same time. The
-pool has ``defaultParallelism`` threads. After the first failure no further
-dataset starts; the ones already running finish, and the first exception
-(e.g. :class:`ExpectationViolation`) is raised. Downstream datasets of a
-failed one are therefore never written.
+There its :func:`checked_write` step runs beside those of other datasets,
+so independent bronze, silver and gold datasets refresh at the same time.
+That step counts rows, warn and fail violations in one Observation on the
+pass that produces the rows; a dataset with a fail expectation or
+``cluster_by`` is materialized once first, so its fail gate judges every
+row before anything is written and a failed gate leaves the table as it
+was. The pool has ``defaultParallelism`` threads. After the first failure
+no further dataset starts; the ones already running finish, and the first
+exception (e.g. :class:`ExpectationViolation`) is raised. Downstream
+datasets of a failed one are therefore never written.
 
 Every table here runs in batch mode (``availableNow`` parity: a streaming
 table's update over the data present gives the same rows). The
@@ -99,31 +102,36 @@ class DatasetDef:
     bucket_by: tuple = ()  # (n_buckets, col, ...) — hash-bucketed, sorted by col
 
 
-def checked_write(
-    dataset: str,
-    df: DataFrame,
-    expectations: list[Expectation],
-    write: Callable[[DataFrame], None],
-) -> dict:
+def checked_write(d: DatasetDef, df: DataFrame, write: Callable[[DataFrame], None]) -> dict:
     """The one checked-write step of a table, an MV or a streaming microbatch.
 
-    ``df`` holds the rows left after drop-mode expectations. Runs the fail
-    gate on them, then ``write`` on the same rows with the row count and
-    the warn violation counts riding the write job as an Observation, so
-    one scan writes the rows and counts them. Returns ``{"rows": n}``, plus
-    ``"expectations": {warn_name: violations}`` when there are warn
-    expectations.
+    ``df`` holds the rows of dataset ``d`` left after drop-mode
+    expectations. One Observation counts them and every warn and fail
+    violation in the pass that produces them. A dataset with a fail
+    expectation or ``cluster_by`` is materialized first (one eager
+    ``localCheckpoint``, which completes the counts); its fail gate then
+    judges every row before anything is written, and ``write`` reads the
+    checkpoint. Any other dataset's counts ride ``write`` itself. Returns
+    ``{"rows": n}``, plus ``"expectations": {warn_name: violations}`` when
+    ``d`` has warn expectations.
     """
-    # the gate runs on the UN-observed plan: its isEmpty probe
-    # short-circuits, which would freeze an observation at partial counts
-    enforce_fail(dataset, df, expectations)
-    observed, obs = observe_expectations(df, expectations)
+    observed, obs = observe_expectations(df, d.expectations)
+    if d.cluster_by or any(e.action == FAIL for e in d.expectations):
+        # a clustered write re-reads its input (range sampling), re-running the build;
+        # localCheckpoint, not persist, also sheds the CTEs Spark's InlineCTE trips on
+        observed = observed.localCheckpoint()
+        enforce_fail(d.name, _counts(obs), d.expectations)
     write(observed)
-    counts = {k: int(v or 0) for k, v in obs.get.items()}
-    entry: dict = {"rows": counts.pop("__rows")}
-    if counts:
-        entry["expectations"] = counts
+    counts = _counts(obs)
+    entry: dict = {"rows": counts["__rows"]}
+    warns = {e.name: counts[e.name] for e in d.expectations if e.action == WARN}
+    if warns:
+        entry["expectations"] = warns
     return entry
+
+
+def _counts(obs) -> dict[str, int]:
+    return {k: int(v or 0) for k, v in obs.get.items()}
 
 
 class _Resolver:
@@ -337,6 +345,8 @@ class Pipeline:
             raise ValueError(f"invalid dataset name: {d.name!r}")
         if d.name in self._defs:
             raise ValueError(f"duplicate dataset definition: {d.name!r}")
+        if d.cluster_by and d.bucket_by:
+            raise ValueError(f"{d.name}: cluster_by and bucket_by are exclusive layouts; pick one")
         self._defs[d.name] = d
 
     # --- querying ------------------------------------------------------
@@ -377,22 +387,16 @@ class Pipeline:
         return sorted(found, key=len, reverse=True)
 
     # --- execution -----------------------------------------------------
-    def run(
-        self,
-        spark: SparkSession,
-        warehouse: str | None = None,
-        fmt: str = "parquet",
-    ) -> dict:
+    def run(self, spark: SparkSession, warehouse: str | None = None) -> dict:
         """Materialize every table/MV dataset, upstream tables first.
 
-        Tables append-or-overwrite as parquet managed tables under the Spark
-        warehouse (Delta when available — see sources/sinks.py); views stay
-        virtual. Datasets are resolved here, in registration order, and
-        written on a pool of ``defaultParallelism`` threads as soon as every
-        table they read is written (module docstring: schedule and failure
-        rule). Returns, in registration order, per-dataset row counts,
+        Tables overwrite as parquet managed tables under the Spark warehouse
+        (sources/sinks.py); views stay virtual. Datasets are resolved here,
+        in registration order, and written on a pool of
+        ``defaultParallelism`` threads as soon as every table they read is
+        written (module docstring: schedule and failure rule). Returns, in registration order, per-dataset row counts,
         expectation metrics, and ``start_s``/``end_s``: seconds from the start
-        of the run to the start and end of the dataset's fail gate and write.
+        of the run to the start and end of the dataset's :func:`checked_write`.
 
         Full-refresh semantics for MVs mirror the reference's gold layer
         ("Materialized views / Full Refresh", docs/pipeline-flow.png).
@@ -408,8 +412,7 @@ class Pipeline:
         def materialize(d: DatasetDef, df: DataFrame) -> dict:
             start = time.perf_counter() - t0
             entry = checked_write(
-                d.name, df, d.expectations,
-                lambda out: write_table(spark, out, d, warehouse=warehouse, fmt=fmt),
+                d, df, lambda out: write_table(spark, out, d, warehouse=warehouse)
             )
             entry.update(start_s=start, end_s=time.perf_counter() - t0)
             return entry

@@ -1,16 +1,15 @@
-"""Table sinks: managed warehouse tables with Delta-or-parquet fallback.
+"""Table sinks: managed warehouse tables, written as parquet.
 
 The reference writes every layer as managed Delta tables with tuning
 properties (bronze_ingestion.py:38-45; gold TBLPROPERTIES incl.
 ``delta.targetFileSize``/``optimizeWrite``, fact_order_items.sql:11-18) and
 liquid clustering on the fact (``CLUSTER BY``, fact_order_items.sql:9).
 
-Open-source mapping:
-- Delta jars present  → ``format("delta")`` with the same properties.
-- No Delta (this image) → parquet ``saveAsTable``; clustering degrades to
-  ``repartition(cluster_cols).sortWithinPartitions(cluster_cols)`` which gives
-  the same data-skipping-friendly file layout (min/max zone maps in parquet
-  footers) without the Delta metadata.
+Open-source mapping: parquet ``saveAsTable``; ``CLUSTER BY`` becomes a
+Morton-key range-clustered write (``operators/layout.py::cluster_frame``),
+which gives the data-skipping-friendly file layout (min/max zone maps in
+parquet footers) without the Delta metadata. ``delta.*`` table properties
+are warned about and skipped.
 
 Scale notes: writes go through AQE-coalesced shuffles; cluster and bucket
 columns are honored so downstream joins on those keys scan co-located files.
@@ -20,20 +19,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-try:  # pragma: no cover - Delta not in the test image
-    from delta import DeltaTable  # noqa: F401
-
-    HAVE_DELTA = True
-except ImportError:
-    HAVE_DELTA = False
-
 
 def write_table(
     spark: SparkSession,
     df: DataFrame,
     dataset,
     warehouse: str | None = None,
-    fmt: str = "parquet",
 ) -> None:
     """Full-refresh write of a dataset to the warehouse.
 
@@ -41,7 +32,8 @@ def write_table(
     every table per run, mirroring the reference's full-refresh gold layer);
     incremental appends are the streaming runner's job. The row count is
     not re-read from the table: ``Pipeline.run`` takes it from the
-    Observation riding the write job itself (plans/registry.py).
+    Observation of ``plans/registry.py::checked_write``, which also hands a
+    clustered dataset over already materialized.
 
     The dataset's schema (database) must already exist: ``Pipeline.run``
     creates each one once, before its concurrent writes start.
@@ -78,29 +70,16 @@ def write_table(
             shutil.rmtree(stale, ignore_errors=True)
 
     out = df
-    if dataset.cluster_by and not dataset.bucket_by:
+    if dataset.cluster_by:
         # Liquid-clustering equivalent (CLUSTER BY, reference
         # fact_order_items.sql:9): Morton-key range clustering so parquet
         # footer min/max stats prune scans on ANY clustered column, not just
-        # the leading one. The clustered write makes extra passes over the
-        # frame (stats aggregate + range-partitioner sampling), so
-        # materialize it once rather than re-running the MV's build DAG per
-        # pass — the local analog of Delta's post-write OPTIMIZE, which
-        # clusters from already-materialized files. localCheckpoint (not
-        # persist) on purpose: it TRUNCATES the logical lineage, so the
-        # morton stats self-join sees plain checkpointed scans. A lazy
-        # persist leaves the MV's CTE definitions in both sides of that
-        # self-join, which trips Spark's InlineCTE.buildCTEMap
-        # ("key not found" NoSuchElementException) on some write plans.
-        # One column needs it too: the range sampling pass would otherwise
-        # re-run the frame, and the row-count Observation attached by
-        # Pipeline.run would count every row twice.
+        # the leading one.
         from ..operators.layout import cluster_frame
 
-        out = cluster_frame(df.localCheckpoint(), list(dataset.cluster_by))
+        out = cluster_frame(df, list(dataset.cluster_by))
 
-    use_fmt = "delta" if (HAVE_DELTA and fmt == "delta") else "parquet"
-    writer = out.write.format(use_fmt).mode("overwrite")
+    writer = out.write.format("parquet").mode("overwrite")
     if dataset.bucket_by:
         # Hash-bucketed layout: every read of this table is pre-shuffled on
         # the bucket columns, so joins/aggs between tables bucketed the same
@@ -110,13 +89,13 @@ def write_table(
         writer = writer.bucketBy(int(n), *cols).sortBy(*cols)
     dropped_delta_props = []
     for k, v in dataset.table_properties.items():
-        if k.startswith("delta.") and use_fmt != "delta":
+        if k.startswith("delta."):
             # The reference's write tuning (optimizeWrite/autoCompact,
             # deletion vectors, targetFileSize — fact_order_items.sql:11-18)
             # only means something to a Delta table; under the parquet
             # fallback it must not masquerade as a parquet writer option.
-            # Parsed and carried this far so a Delta-equipped deployment
-            # gets the reference's tuning for free; warn-once here.
+            # Carried this far so the registry keeps the reference's DDL
+            # intact; warn-once here.
             dropped_delta_props.append(k)
             continue
         writer = writer.option(k, str(v))
@@ -125,8 +104,8 @@ def write_table(
 
         warnings.warn(
             f"{dataset.name}: Delta table properties {dropped_delta_props} "
-            "ignored under the parquet fallback (no Delta jars in this "
-            "environment); they apply when the sink writes format('delta').",
+            "ignored under the parquet fallback (the sink writes parquet "
+            "tables only).",
             stacklevel=2,
         )
     if location:

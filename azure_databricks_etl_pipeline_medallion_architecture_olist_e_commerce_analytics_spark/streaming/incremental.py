@@ -310,9 +310,9 @@ def run_incremental_with_expectations(
     microbatch drops the rows that violate a drop-mode expectation, then
     goes through the same checked-write step as a pipeline table
     (``plans/registry.py::checked_write``): fail-level predicates abort the
-    query via :class:`ExpectationViolation` (the DLT ``ON VIOLATION FAIL
-    UPDATE`` semantic), and the parquet append carries the warn counts as
-    an Observation, so warn and fail judge exactly the appended rows
+    query via :class:`ExpectationViolation` before the batch is appended
+    (the DLT ``ON VIOLATION FAIL UPDATE`` semantic), and warn and fail
+    counts come from one Observation over exactly the appended rows
     (``plans/expectations.py``: the contract).
 
     Returns the per-batch metrics list ``[{"batch_id": n, <warn_name>:
@@ -322,15 +322,15 @@ def run_incremental_with_expectations(
     exactly-once — same contract as DLT on Delta.
     """
     from ..plans.expectations import apply_expectations
-    from ..plans.registry import checked_write
+    from ..plans.registry import DatasetDef, checked_write
 
+    dataset = DatasetDef(STREAM_DATASET, "table", expectations=expectations)
     batch_metrics: list[dict] = []
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         counts = checked_write(
-            STREAM_DATASET,
+            dataset,
             apply_expectations(batch_df, expectations),
-            expectations,
             lambda out: out.write.mode("append").parquet(target_path),
         )
         batch_metrics.append({"batch_id": batch_id, **counts.get("expectations", {})})

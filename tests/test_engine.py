@@ -49,13 +49,14 @@ def test_expectation_drop(sample_df):
 def test_expectation_fail_raises(sample_df):
     exps = [Expectation("id_not_null", "id IS NOT NULL", "fail")]
     with pytest.raises(ExpectationViolation) as ei:
-        enforce_fail("ds", sample_df, exps)
+        enforce_fail("ds", expectation_metrics(sample_df, exps), exps)
     assert ("id_not_null", 1) in ei.value.failed
 
 
 def test_expectation_fail_passes_clean(sample_df):
     clean = sample_df.filter(F.col("id").isNotNull())
-    enforce_fail("ds", clean, [Expectation("id_not_null", "id IS NOT NULL", "fail")])
+    exps = [Expectation("id_not_null", "id IS NOT NULL", "fail")]
+    enforce_fail("ds", expectation_metrics(clean, exps), exps)
 
 
 def test_registry_dag_and_live_resolution(spark):
@@ -151,6 +152,88 @@ def test_run_fail_expectation_aborts(spark):
 
     with pytest.raises(ExpectationViolation):
         p.run(spark)
+
+
+def test_run_reports_each_fail_expectation_count(spark, tmp_path):
+    """A failed gate names every violated fail expectation with its own
+    exact count, in declaration order, and writes nothing."""
+    p = Pipeline("t")
+
+    @p.table(name="silver.two_fails")
+    @p.expect_all_or_fail({"v_below_7": "v < 7", "v_even": "v % 2 = 0", "v_known": "v >= 0"})
+    def two_fails(ctx):
+        return ctx.spark_session.range(10).withColumnRenamed("id", "v")
+
+    with pytest.raises(ExpectationViolation) as ei:
+        p.run(spark, warehouse=str(tmp_path / "wh"))
+    assert ei.value.dataset == "silver.two_fails"
+    assert ei.value.failed == [("v_below_7", 3), ("v_even", 5)]
+    assert not spark.catalog.tableExists("silver.two_fails")
+
+
+def test_run_builds_fail_gated_table_once(spark, tmp_path):
+    """A FAIL-gated table's build runs once per refresh: the gate judges the
+    counts of the pass that materializes the rows, and the write reads
+    those rows instead of running the build again."""
+    from pyspark.sql.types import LongType
+
+    built = spark.sparkContext.accumulator(0)
+
+    def tick(v):
+        built.add(1)
+        return v
+
+    p = Pipeline("t")
+
+    @p.table(name="silver.gated_once")
+    @p.expect_all_or_fail({"v_small": "v < 1000"})
+    def gated_once(ctx):
+        tagged = F.udf(tick, LongType()).asNondeterministic()
+        return ctx.spark_session.range(100).select(tagged("id").alias("v"))
+
+    try:
+        report = p.run(spark, warehouse=str(tmp_path / "wh"))
+        assert report["silver.gated_once"]["rows"] == 100
+        assert spark.table("silver.gated_once").count() == 100
+    finally:
+        spark.sql("DROP TABLE IF EXISTS `silver`.`gated_once`")
+    assert built.value == 100
+
+
+def test_failed_gate_leaves_previous_table_unchanged(spark, tmp_path):
+    """DLT's FAIL UPDATE leaves the table as it was: a refresh whose gate
+    fails writes nothing over the previous clean refresh."""
+
+    def build(n, limit):
+        p = Pipeline("keep")
+
+        @p.table(name="silver.kept")
+        @p.expect_all_or_fail({"v_small": f"v < {limit}"})
+        def kept(ctx):
+            return ctx.spark_session.range(n).withColumnRenamed("id", "v")
+
+        return p
+
+    warehouse = str(tmp_path / "wh")
+    try:
+        build(n=5, limit=100).run(spark, warehouse=warehouse)
+        with pytest.raises(ExpectationViolation):
+            build(n=10, limit=8).run(spark, warehouse=warehouse)
+        rows = sorted(r.v for r in spark.table("silver.kept").collect())
+        assert rows == [0, 1, 2, 3, 4]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS `silver`.`kept`")
+
+
+def test_table_rejects_cluster_by_with_bucket_by():
+    """A table gets one storage layout: cluster_by with bucket_by is refused
+    at registration, not silently reduced to the bucketing."""
+    p = Pipeline("t")
+    with pytest.raises(ValueError, match="cluster_by"):
+
+        @p.table(name="silver.both", cluster_by=("k",), bucket_by=(4, "k"))
+        def both(ctx):  # pragma: no cover
+            return None
 
 
 def test_pipeline_and_stream_apply_one_expectation_contract(spark, tmp_path):
@@ -715,3 +798,39 @@ def test_empty_path_fallbacks_match_nonempty_schema(spark, empty_sf):
         assert empty_cols == full_cols, (
             f"{name}: empty-path schema {empty_cols} != non-empty {full_cols}"
         )
+
+
+def test_tool_imports_resolve():
+    """Every ``from <package>... import name`` and ``from bench import name``
+    in ``tools/*.py``, ``bench.py`` and ``__spark_entry__.py`` names a module
+    or attribute that exists, so deleting or renaming a package name breaks
+    this test rather than a tool run. Parses with ``ast``; starts no Spark."""
+    import ast
+    import glob
+    import importlib
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = Pipeline.__module__.split(".")[0]
+    paths = sorted(glob.glob(os.path.join(root, "tools", "*.py")))
+    paths += [os.path.join(root, f) for f in ("bench.py", "__spark_entry__.py")]
+    checked, missing = 0, []
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.ImportFrom) or node.level:
+                continue
+            if node.module.split(".")[0] not in (pkg, "bench"):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                checked += 1
+                if hasattr(mod, alias.name):
+                    continue
+                try:
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ModuleNotFoundError:
+                    where = f"{os.path.relpath(path, root)}:{node.lineno}"
+                    missing.append(f"{where} {node.module}.{alias.name}")
+    assert checked > 20
+    assert not missing, missing

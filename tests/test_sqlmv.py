@@ -111,11 +111,12 @@ def test_registered_mv_resolves_live_refs_and_drops_rows(spark):
 
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.plans.expectations import (
         enforce_fail,
+        expectation_metrics,
     )
 
     d = {x.name: x for x in p.datasets()}["gold.fact_items"]
     with pytest.raises(ExpectationViolation) as ei:
-        enforce_fail(d.name, df, d.expectations)
+        enforce_fail(d.name, expectation_metrics(df, d.expectations), d.expectations)
     assert "valid_price" in str(ei.value)
 
 
@@ -165,12 +166,11 @@ def test_table_properties_survive_to_sink_call(spark, tmp_path):
 
     # the full parsed dict reached the sink call
     assert seen["gold.tp_fact"] == spec.table_properties
-    if not sinks.HAVE_DELTA:
-        msgs = [str(w.message) for w in caught]
-        assert any(
-            "delta.autoOptimize.optimizeWrite" in m and "parquet fallback" in m
-            for m in msgs
-        ), msgs
+    msgs = [str(w.message) for w in caught]
+    assert any(
+        "delta.autoOptimize.optimizeWrite" in m and "parquet fallback" in m
+        for m in msgs
+    ), msgs
 
 
 def test_gold_ddl_files_carry_reference_delta_properties():
