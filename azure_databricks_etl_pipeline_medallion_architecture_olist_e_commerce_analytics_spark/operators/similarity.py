@@ -1,12 +1,13 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Brute-force cosine top-k as the exact baseline, and an IVF-bucketed variant
-as the scale path — both pure DataFrame ops (``zip_with``/``aggregate`` fold
-for the dot product stays JVM-side; no Python in the row path).
+Brute-force cosine top-k as the exact baseline — a ``mapInPandas`` kernel
+that replays the engine's ``zip_with``/``aggregate`` fold bit-for-bit — and
+an IVF-bucketed variant as the scale path, in pure DataFrame ops.
 
 Scale design (100 TB / billions of vectors):
-- Brute force is O(n·m) pairs: usable when one side is small (a query batch)
-  and the other side is broadcast-partitioned; never self-join a full corpus.
+- Brute force is O(n·m) pairs: usable when one side is small (a query batch
+  that rides the kernel's closure to every corpus partition); never
+  self-join a full corpus.
 - IVF: k-means-style coarse quantizer (here: deterministic first-C centroids
   for reproducibility) → assign each vector to nearest centroid map-side
   (broadcast centroids) → queries probe only ``nprobe`` buckets → candidate
@@ -20,30 +21,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.loader import spread_partitions
-
-# Broadcasts created by the vectorized kernels, kept for explicit release.
-# A query function returns a LAZY DataFrame, so its broadcast must outlive
-# the call — but a bench/driver loop that re-invokes queries would otherwise
-# accumulate broadcast blocks for the whole session (the ContextCleaner only
-# reclaims them after Python GC drops the last reference). The bench's
-# release_cached_state() calls :func:`release_broadcasts` between queries;
-# after that, DataFrames built by earlier invocations must not be re-run.
-_LIVE_BROADCASTS: list = []
-
-
-def _register_broadcast(bc):
-    _LIVE_BROADCASTS.append(bc)
-    return bc
-
-
-def release_broadcasts() -> None:
-    """Destroy kernel broadcasts created since the last call (see above)."""
-    while _LIVE_BROADCASTS:
-        bc = _LIVE_BROADCASTS.pop()
-        try:
-            bc.destroy()
-        except Exception:  # already destroyed / context gone
-            pass
 
 
 def _sql_scalar_lit(x, kind: str) -> str:
@@ -106,7 +83,6 @@ def brute_force_topk(
     k: int = 3,
     query_filter=None,
     exclude_group_col: str | None = None,
-    vectorized_dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
@@ -118,178 +94,110 @@ def brute_force_topk(
     neighbors whose group value DIFFERS from the query's qualify (the
     contrastive-training pattern — for each anchor, the most similar
     vectors of a different class are the highest-loss negatives). The
-    group inequality rides the same join predicate, so the plan shape is
-    unchanged; NULL groups pair with nothing (SQL NULL semantics — both
-    engines drop them identically). The output then carries both group
-    columns alongside the pair.
+    output then carries both group columns alongside the pair.
 
-    ``vectorized_dim`` (round-10; round-11 extends it to the
-    ``exclude_group_col`` hard-negative form): compute the raw
-    cosines in a mapInPandas kernel that REPLAYS the engine fold exactly —
-    per-dimension accumulation ``acc += C[:,i] * Q[:,i]`` is the same
-    IEEE-754 double sequence as the zip_with left fold (float32→float64
-    widening is exact, numpy ops are IEEE doubles), norms likewise, and
-    dot/(qn·nn) uses the identical operand order — so every emitted double
-    is bit-identical to the expression path and the Spark-side
-    round(…, 6) + rank pipeline is unchanged. Rows whose vector is NULL /
-    wrong-dim / null-element (or NULL id) are dropped up front, the same
-    robustness contract as :func:`brute_force_topk_np` (on clean oracle
-    data nothing is dropped and the output is bitwise the expression
-    path's — unit-pinned; on DIRTY data the two paths differ by design:
-    the expression path would emit NULL-cosine pairs for NULL/wrong-dim
-    vectors, the kernel drops such rows). Per-batch cost is vectorized
-    numpy instead of an interpreted 64-element lambda fold per pair.
+    Scoring: the query batch is collected and rides the kernel's closure;
+    each corpus Arrow batch is scored in a ``mapInPandas`` kernel that
+    REPLAYS the engine fold — per-dimension ``acc += c_i * q_i`` is the
+    IEEE-754 double sequence of :func:`dot_col`'s left fold (float32 →
+    float64 widening is exact), norms likewise (:func:`norm_col`), and
+    dot / (query_norm · nbr_norm) keeps the expression's operand order. So
+    every raw cosine is bitwise the expression path's, and round(…, 6) and
+    the rank stay in Spark.
+
+    Validity rule, the same on the query and the corpus side: a row is
+    dropped when its id is NULL; its vector is NULL, has a NULL element or
+    is not ``dim`` long (``dim`` is the length of the lowest-id query
+    vector); its norm is zero or not finite (a NaN or infinite element);
+    or, with ``exclude_group_col``, its group is NULL. Such rows have no
+    defined cosine (or, for a NULL group, pair with nothing under SQL
+    inequality), so the output never carries a NULL or NaN cosine.
+
+    Candidate cut: within each Arrow batch, a pair survives when its raw
+    cosine is ≥ the batch's k-th best raw cosine for that query − 1e-6.
+    round(…, 6) moves a value by at most 5e-7, so every pair that can tie
+    or beat the k-th after rounding survives, and at most about k rows per
+    query per batch are shuffled to the rank.
 
     CONTRACT: the query side is collected to the driver, so callers MUST
     bound it (pass ``query_filter`` selecting a serving batch, ~≤10⁴
-    rows); ``query_filter=None`` with ``vectorized_dim`` would collect
-    the entire corpus. Every catalog caller passes a bounded filter.
+    rows); ``query_filter=None`` collects the entire corpus. Every catalog
+    caller passes a bounded filter.
     """
-    # Norms are per-vector, not per-pair: compute them once on each side so
-    # the O(n·m) join evaluates one fold (the dot product) per pair, not three.
-    df = spread_partitions(df)
-    if vectorized_dim is not None:
-        return _brute_force_topk_foldexact(
-            df, id_col, vec_col, k, query_filter, vectorized_dim,
-            exclude_group_col=exclude_group_col,
-        )
-    grp = [F.col(exclude_group_col)] if exclude_group_col else []
-    corpus = df.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(vec_col).alias("nbr_vec"),
-        norm_col(F.col(vec_col)).alias("nbr_norm"),
-        *[g.alias("nbr_group") for g in grp],
-    )
-    queries = df.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("query_vec"),
-        norm_col(F.col(vec_col)).alias("query_norm"),
-        *[g.alias("query_group") for g in grp],
-    )
-    if query_filter is not None:
-        queries = queries.filter(query_filter)
-    sim = F.round(
-        dot_col(F.col("query_vec"), F.col("nbr_vec"))
-        / (F.col("query_norm") * F.col("nbr_norm")),
-        6,
-    )
-    cond = F.col("query_id") != F.col("nbr_id")
-    if exclude_group_col:
-        cond = cond & (F.col("query_group") != F.col("nbr_group"))
-    out_grp = ["query_group", "nbr_group"] if exclude_group_col else []
-    pairs = queries.join(corpus, cond).select(
-        "query_id", "nbr_id", sim.alias("cosine"), *out_grp
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank", *out_grp)
-    )
+    import math
 
-
-def _brute_force_topk_foldexact(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    query_filter,
-    dim: int,
-    exclude_group_col: str | None = None,
-) -> DataFrame:
-    """The fold-exact vectorized brute-force path (see
-    :func:`brute_force_topk` ``vectorized_dim``): numpy per-dimension
-    accumulation replays the zip_with/aggregate left fold bit-for-bit;
-    rounding and ranking stay in Spark, unchanged.
-
-    ``exclude_group_col`` (round-11) carries the hard-negative group
-    inequality into the kernel: the group column rides the collected query
-    batch and the Arrow batch, and the self-pair mask gains
-    ``group_a != group_b``. NULL-group rows pair with NOTHING under the
-    expression path's SQL inequality (NULL != x is never true), so the
-    kernel drops them up front on both sides — the same up-front-drop
-    contract the no-group path already applies to NULL ids/vectors.
-    Emitted doubles stay bit-identical to the expression fold
-    (unit-pinned for both forms)."""
     import numpy as np
     import pandas as pd
 
-    valid = _valid_vectors(df, vec_col, dim).filter(F.col(id_col).isNotNull())
+    df = spread_partitions(df)
+    keyed = df.filter(F.col(id_col).isNotNull())
     grp_type = None
     if exclude_group_col is not None:
-        valid = valid.filter(F.col(exclude_group_col).isNotNull())
+        keyed = keyed.filter(F.col(exclude_group_col).isNotNull())
         grp_type = dict(df.dtypes)[exclude_group_col]
-    queries = valid
+    queries = keyed.filter(F.col(vec_col).isNotNull())
     if query_filter is not None:
         queries = queries.filter(query_filter)
+    cols = [F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")] + (
+        [F.col(exclude_group_col).alias("_grp")] if exclude_group_col else []
+    )
     out_grp = ["query_group", "nbr_group"] if exclude_group_col else []
-    empty_schema = "query_id bigint, nbr_id bigint, cosine double, rank int" + (
-        f", query_group {grp_type}, nbr_group {grp_type}" if grp_type else ""
-    )
-    q_cols = [id_col, vec_col] + (
-        [exclude_group_col] if exclude_group_col else []
-    )
-    q_rows = queries.select(*q_cols).collect()
+    grp_schema = f", query_group {grp_type}, nbr_group {grp_type}" if grp_type else ""
+    q_rows = queries.select(*cols).collect()
+    dim = len(min(q_rows, key=lambda r: r[0])[1]) if q_rows else 0
+    # _fold_norm is None on a NULL element; NaN fails both comparisons
+    q_rows = [
+        r for r in q_rows if len(r[1]) == dim and 0 < (_fold_norm(r[1]) or 0) < math.inf
+    ]
     if not q_rows:
-        return df.sparkSession.createDataFrame([], empty_schema)
+        return df.sparkSession.createDataFrame(
+            [], "query_id bigint, nbr_id bigint, cosine double, rank int" + grp_schema
+        )
+
+    # The kernel's closure holds only numpy and local values, so executors
+    # unpickle it without importing this package.
+    def fold_norms(M):
+        # norm_col's left fold: acc = ((0 + x0²) + x1²) + …, then sqrt
+        acc = np.zeros(len(M), dtype=np.float64)
+        for i in range(dim):
+            acc = acc + M[:, i] * M[:, i]
+        return np.sqrt(acc)
+
     q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_grp = (
-        np.array([r[2] for r in q_rows]) if exclude_group_col else None
-    )
-    # query norms via the SAME left fold: acc = ((0 + x0²) + x1²) + …
-    qn_acc = np.zeros(len(q_ids), dtype=np.float64)
-    for i in range(dim):
-        qn_acc = qn_acc + Q[:, i] * Q[:, i]
-    qn = np.sqrt(qn_acc)
-    bc = _register_broadcast(
-        df.sparkSession.sparkContext.broadcast((q_ids, Q, qn, q_grp))
-    )
+    Q = np.array([r[1] for r in q_rows], dtype=np.float64)
+    qn = fold_norms(Q)
+    q_grp = np.array([r[2] for r in q_rows]) if exclude_group_col else None
 
     def score(batches):
-        b_ids, b_Q, b_qn, b_grp = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ids = pdf["_id"].to_numpy(dtype=np.int64)
             C = np.array([list(v) for v in pdf["_vec"]], dtype=np.float64)
-            cn_acc = np.zeros(len(ids), dtype=np.float64)
-            dot = np.zeros((len(ids), len(b_ids)), dtype=np.float64)
+            cn = fold_norms(C)
+            live = (cn > 0) & (cn < np.inf)
+            ids, C, cn = pdf["_id"].to_numpy(dtype=np.int64)[live], C[live], cn[live]
+            dot = np.zeros((len(ids), len(q_ids)), dtype=np.float64)
             for i in range(dim):
-                ci = C[:, i]
-                cn_acc = cn_acc + ci * ci
-                # per-pair: dot += C[i]*Q[i] — the fold's add order
-                dot = dot + np.multiply.outer(ci, b_Q[:, i])
-            cn = np.sqrt(cn_acc)
-            # denominator operand order matches the expression:
-            # query_norm * nbr_norm (zero norms yield the same ±Inf/NaN
-            # IEEE results as the expression path — just quiet the warning)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                raw = dot / (b_qn[None, :] * cn[:, None])
-            keep = ids[:, None] != b_ids[None, :]
-            if b_grp is not None:
-                g = pdf["_grp"].to_numpy()
-                keep &= g[:, None] != b_grp[None, :]
-            ri, qi = np.nonzero(keep)
-            out = {
-                "query_id": b_ids[qi],
-                "nbr_id": ids[ri],
-                "_raw": raw[ri, qi],
-            }
-            if b_grp is not None:
-                out["query_group"] = b_grp[qi]
+                # per pair: dot += c_i * q_i — the fold's add order
+                dot = dot + np.multiply.outer(C[:, i], Q[:, i])
+            raw = dot / (qn[None, :] * cn[:, None])
+            keep = ids[:, None] != q_ids[None, :]
+            if q_grp is not None:
+                g = pdf["_grp"].to_numpy()[live]
+                keep &= g[:, None] != q_grp[None, :]
+            s = np.where(keep, raw, -np.inf)
+            kth = np.partition(s, -k, axis=0)[-k] if len(ids) >= k else -np.inf
+            ri, qi = np.nonzero(keep & (s >= kth - 1e-6))
+            out = {"query_id": q_ids[qi], "nbr_id": ids[ri], "_raw": raw[ri, qi]}
+            if q_grp is not None:
+                out["query_group"] = q_grp[qi]
                 out["nbr_group"] = g[ri]
             yield pd.DataFrame(out)
 
-    in_cols = [F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")] + (
-        [F.col(exclude_group_col).alias("_grp")] if exclude_group_col else []
-    )
-    kernel_schema = "query_id bigint, nbr_id bigint, _raw double" + (
-        f", query_group {grp_type}, nbr_group {grp_type}" if grp_type else ""
-    )
     pairs = (
-        valid.select(*in_cols)
-        .mapInPandas(score, kernel_schema)
+        _valid_vectors(keyed, vec_col, dim)
+        .select(*cols)
+        .mapInPandas(score, "query_id bigint, nbr_id bigint, _raw double" + grp_schema)
         .select(
             "query_id",
             "nbr_id",
@@ -302,94 +210,6 @@ def _brute_force_topk_foldexact(
         pairs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "nbr_id", "cosine", "rank", *out_grp)
-    )
-
-
-def brute_force_topk_np(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 3,
-    query_filter=None,
-) -> DataFrame:
-    """Exact cosine top-k with an Arrow-vectorized BLAS scorer.
-
-    Same semantics as :func:`brute_force_topk`, different physical plan: the
-    bounded query batch is collected once (q×d floats — a *serving batch*,
-    not the corpus) and broadcast; each corpus partition streams through
-    ``mapInPandas`` as Arrow batches and is scored with one float64 matrix
-    multiply (``C @ Qᵀ``), emitting only its per-partition top-k rows per
-    query. The final exact top-k is a window over ≤ k·q rows per partition —
-    shuffle volume O(k·q·partitions), never O(n·q) pairs. At 100 TB this is
-    the shape that wins: per-element interpreted lambdas become per-batch
-    BLAS calls (~100× per pair), and the pair matrix never materializes.
-    """
-    import numpy as np
-    import pandas as pd
-
-    # NULL vectors can neither query nor be scored, and a NULL id would
-    # silently cast to garbage in the int64 numpy path — drop both up
-    # front (missing values are routine at corpus scale; list(None) in
-    # the driver batch or the Arrow kernel would abort the job)
-    df = df.filter(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
-    queries = df
-    if query_filter is not None:
-        queries = queries.filter(query_filter)
-    # single source of truth for BOTH the empty-batch fallback and the
-    # scorer output — the full result appends the window rank to this
-    out_schema = "query_id bigint, nbr_id bigint, cosine double"
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        # empty query batch: np.array([]) is 1-D and norm(axis=1) raises —
-        # the top-k of no queries is an empty result
-        return df.sparkSession.createDataFrame([], out_schema + ", rank int")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    sc = df.sparkSession.sparkContext
-    bc = _register_broadcast(sc.broadcast((q_ids, Qn)))
-
-    def score(batches):
-        b_ids, b_Qn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf["_id"].to_numpy(dtype=np.int64)
-            C = np.array([list(v) for v in pdf["_vec"]], dtype=np.float64)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            # round BEFORE ranking — the contract ranks rounded cosines with
-            # an id tie-break, and the per-partition cut must agree with the
-            # global one on ties or a boundary row could be lost.
-            S = np.round(Cn @ b_Qn.T, 6)  # (batch × q)
-            S[ids[:, None] == b_ids[None, :]] = -np.inf  # mask self-pairs
-            kk = min(k, S.shape[0])
-            qi, ni, cs = [], [], []
-            for j in range(len(b_ids)):
-                col = S[:, j]
-                top = np.lexsort((ids, -col))[:kk]
-                top = top[np.isfinite(col[top])]
-                qi.append(np.full(len(top), b_ids[j]))
-                ni.append(ids[top])
-                cs.append(col[top])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(qi),
-                    "nbr_id": np.concatenate(ni),
-                    "cosine": np.concatenate(cs),
-                }
-            )
-
-    partials = (
-        spread_partitions(df)
-        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-        .mapInPandas(score, out_schema)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "nbr_id", "cosine", "rank")
     )
 
 

@@ -691,19 +691,11 @@ def q_text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-k neighbors (exact ANN baseline).
-
-    Round-10: runs the fold-exact vectorized kernel (``vectorized_dim`` —
-    per-dimension numpy accumulation replays the expression fold
-    bit-for-bit; rounding/ranking stay in Spark), unit-pinned bitwise
-    against the expression path."""
+    """Brute-force cosine top-k neighbors (exact ANN baseline)."""
     from .operators.similarity import brute_force_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = brute_force_topk(
-        emb, k=3, query_filter=F.col("vec_id") < 100, vectorized_dim=64
-    )
-    return out.withColumn("rank", F.col("rank").cast("int"))
+    return brute_force_topk(emb, k=3, query_filter=F.col("vec_id") < 100)
 
 
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -714,8 +706,8 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     gradient). The label-inequality predicate rides the same bounded
     query-batch × corpus join as ann_topk (operators/similarity.py::
     brute_force_topk, ``exclude_group_col``), so the plan shape — and the
-    100 TB story (broadcast the bounded anchor batch, never self-join the
-    corpus) — is unchanged; NULL labels pair with nothing under SQL
+    100 TB story (ship the bounded anchor batch to the corpus, never
+    self-join it) — is unchanged; NULL labels pair with nothing under SQL
     inequality semantics, identically in both engines.
     """
     from .operators.similarity import brute_force_topk
@@ -726,11 +718,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=3,
         query_filter=F.col("vec_id") < 100,
         exclude_group_col="label",
-        # round-11: the group-aware fold-exact kernel (bitwise equal to the
-        # expression pair fold — unit-pinned) replaces the interpreted
-        # 64-element lambda per pair; the bounded anchor batch is the
-        # collected side, per the operator's query_filter contract
-        vectorized_dim=64,
     )
     return out.select(
         "query_id",
@@ -738,18 +725,8 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nbr_id",
         F.col("nbr_group").cast("int").alias("nbr_label"),
         "cosine",
-        F.col("rank").cast("int").alias("rank"),
+        "rank",
     )
-
-
-def q_ann_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arrow-vectorized brute-force top-k (BLAS matmul per corpus partition,
-    per-partition top-k, O(k·q) merge) — same oracle as ann_topk."""
-    from .operators.similarity import brute_force_topk_np
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = brute_force_topk_np(emb, k=3, query_filter=F.col("vec_id") < 100)
-    return out.withColumn("rank", F.col("rank").cast("int"))
 
 
 def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -931,7 +908,7 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _exact():
         return (
-            brute_force_topk(emb, k=3, query_filter=qf, vectorized_dim=64)
+            brute_force_topk(emb, k=3, query_filter=qf)
             .select("query_id", "nbr_id")
             .localCheckpoint()
         )
@@ -8126,7 +8103,7 @@ SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ann_topk": q_ann_topk,
     "hard_negatives": q_hard_negatives,
     "embedding_outliers": q_embedding_outliers,
-    "ann_topk_np": q_ann_topk_np,
+    "ann_topk_np": q_ann_topk,  # same operator; the key keeps its catalog slot
     "ann_topk_ivf": q_ann_topk_ivf,
     "pq_topk": q_pq_topk,
     "pq_topk_trained": q_pq_topk_trained,
@@ -10900,7 +10877,6 @@ ORACLES["quality_filter"] = (
     "WHERE quality_score >= 0.5 AND predicted_lang = 'en'"
 )
 
-# The vectorized scorer computes the same exact top-k as the fold-based one.
 ORACLES["ann_topk_np"] = ORACLES["ann_topk"]
 
 ORACLES["sessionize_batch"] = """

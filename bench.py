@@ -297,13 +297,6 @@ def release_cached_state(spark) -> None:
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for jrdd in list(jmap.values()):
         jrdd.unpersist(False)
-    # kernel broadcasts (similarity module) are registered for explicit
-    # release — the ContextCleaner only reclaims them after Python GC
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators import (  # noqa: E501
-        similarity,
-    )
-
-    similarity.release_broadcasts()
     # NOTE: a System.gc() here was measured COUNTERPRODUCTIVE (round 5):
     # the full GC unloads cold generated classes, evicting JIT-compiled
     # code, and later queries repay compilation — TPC-H block 14.9s with

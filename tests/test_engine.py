@@ -802,9 +802,10 @@ def test_empty_path_fallbacks_match_nonempty_schema(spark, empty_sf):
 
 def test_tool_imports_resolve():
     """Every ``from <package>... import name`` and ``from bench import name``
-    in ``tools/*.py``, ``bench.py`` and ``__spark_entry__.py`` names a module
-    or attribute that exists, so deleting or renaming a package name breaks
-    this test rather than a tool run. Parses with ``ast``; starts no Spark."""
+    in ``tools/*.py``, ``tests/*.py``, ``bench.py`` and ``__spark_entry__.py``
+    names a module or attribute that exists, so deleting or renaming a
+    package name breaks this test rather than a tool run or a whole test
+    module's collection. Parses with ``ast``; starts no Spark."""
     import ast
     import glob
     import importlib
@@ -812,6 +813,7 @@ def test_tool_imports_resolve():
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pkg = Pipeline.__module__.split(".")[0]
     paths = sorted(glob.glob(os.path.join(root, "tools", "*.py")))
+    paths += sorted(glob.glob(os.path.join(root, "tests", "*.py")))
     paths += [os.path.join(root, f) for f in ("bench.py", "__spark_entry__.py")]
     checked, missing = 0, []
     for path in paths:

@@ -783,67 +783,128 @@ def test_scd2_versions_and_noops(spark):
     assert out.filter(F.col("is_current")).count() == 3
 
 
-def test_brute_force_topk_np_matches_fold_scorer(spark):
-    """The BLAS scorer and the JVM fold scorer agree exactly (same rounded
-    cosines, same tie-breaks) — including boundary ties across partitions."""
+def _fold_topk_reference(
+    df, id_col="vec_id", vec_col="embedding", k=3, query_filter=None,
+    exclude_group_col=None,
+):
+    """The JVM ``zip_with``/``aggregate`` fold scorer: exact cosine top-k as
+    one pair join in pure expressions. The reference the kernel in
+    ``brute_force_topk`` must match bitwise on valid rows."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.similarity import (
-        brute_force_topk_np,
+        dot_col,
+        norm_col,
+    )
+    from pyspark.sql import Window
+
+    grp = [F.col(exclude_group_col)] if exclude_group_col else []
+    corpus = df.select(
+        F.col(id_col).alias("nbr_id"),
+        F.col(vec_col).alias("nbr_vec"),
+        norm_col(F.col(vec_col)).alias("nbr_norm"),
+        *[g.alias("nbr_group") for g in grp],
+    )
+    queries = df.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("query_vec"),
+        norm_col(F.col(vec_col)).alias("query_norm"),
+        *[g.alias("query_group") for g in grp],
+    )
+    if query_filter is not None:
+        queries = queries.filter(query_filter)
+    sim = F.round(
+        dot_col(F.col("query_vec"), F.col("nbr_vec"))
+        / (F.col("query_norm") * F.col("nbr_norm")),
+        6,
+    )
+    cond = F.col("query_id") != F.col("nbr_id")
+    if exclude_group_col:
+        cond = cond & (F.col("query_group") != F.col("nbr_group"))
+    out_grp = ["query_group", "nbr_group"] if exclude_group_col else []
+    pairs = queries.join(corpus, cond).select(
+        "query_id", "nbr_id", sim.alias("cosine"), *out_grp
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("nbr_id"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "nbr_id", "cosine", "rank", *out_grp)
     )
 
+
+def _bitwise_rows(df):
+    """Rows as sorted tuples of ``repr`` — raw double bits, not approx."""
+    return sorted(tuple(repr(v) for v in r) for r in df.collect())
+
+
+@pytest.mark.parametrize("group", [None, "label"], ids=["plain", "group"])
+def test_brute_force_topk_bitwise_equals_fold_reference(spark, group):
+    """The kernel replays the engine fold's IEEE sequence, so rounded
+    cosines, ranks, tie-breaks and (hard-negative form) group columns equal
+    the JVM-fold reference bit for bit — on 8 partitions, so boundary ties
+    across Arrow batches must survive the per-batch candidate cut. In the
+    group form a NULL-group row pairs with nothing on either path."""
     emb = load_table(spark, SF_SMALL, "embeddings").repartition(8)
-    a = brute_force_topk(emb, k=3, query_filter=F.col("vec_id") < 40)
-    b = brute_force_topk_np(emb, k=3, query_filter=F.col("vec_id") < 40)
-    ra = sorted((r.query_id, r.rank, r.nbr_id, r.cosine) for r in a.collect())
-    rb = sorted((r.query_id, r.rank, r.nbr_id, r.cosine) for r in b.collect())
-    assert ra == rb
-
-
-def test_brute_force_topk_vectorized_bitwise_equals_expression(spark):
-    """The round-10 fold-exact vectorized path (``vectorized_dim``) is
-    BITWISE the expression path: the numpy per-dimension accumulation
-    replays the zip_with left fold's IEEE sequence, so rounded cosines,
-    ranks, and tie-breaks are identical — compared on raw double bits via
-    repr, not approximately."""
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.similarity import (
-        brute_force_topk,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings").repartition(8)
-    a = brute_force_topk(emb, k=3, query_filter=F.col("vec_id") < 40)
-    b = brute_force_topk(
-        emb, k=3, query_filter=F.col("vec_id") < 40, vectorized_dim=64
-    )
-    ra = sorted((r.query_id, r.rank, r.nbr_id, repr(r.cosine)) for r in a.collect())
-    rb = sorted((r.query_id, r.rank, r.nbr_id, repr(r.cosine)) for r in b.collect())
-    assert ra == rb
-
-
-def test_brute_force_topk_vectorized_group_bitwise_equals_expression(spark):
-    """Round-11: the fold-exact kernel's ``exclude_group_col`` form (the
-    hard-negative path) is BITWISE the expression path — group inequality
-    mask, group output columns, rounded cosines, ranks, tie-breaks — and a
-    NULL-group row pairs with nothing on either path (SQL inequality)."""
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.similarity import (
-        brute_force_topk,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings").repartition(8)
-    # plant a NULL-group row inside the query window: both paths must
-    # exclude it from every pair (query or neighbor side)
-    emb = emb.withColumn(
-        "label", F.when(F.col("vec_id") == 7, F.lit(None)).otherwise(F.col("label"))
-    )
-    kw = dict(k=3, query_filter=F.col("vec_id") < 40, exclude_group_col="label")
-    a = brute_force_topk(emb, **kw)
-    b = brute_force_topk(emb, vectorized_dim=64, **kw)
+    if group:
+        emb = emb.withColumn(
+            "label", F.when(F.col("vec_id") == 7, F.lit(None)).otherwise(F.col("label"))
+        )
+    kw = dict(k=3, query_filter=F.col("vec_id") < 40, exclude_group_col=group)
+    a = _fold_topk_reference(emb, **kw)
+    b = brute_force_topk(emb, **kw)
     assert a.columns == b.columns
-    key = lambda r: (  # noqa: E731
-        r.query_id, r.rank, r.nbr_id, repr(r.cosine), r.query_group, r.nbr_group
+    rows = _bitwise_rows(b)
+    assert _bitwise_rows(a) == rows
+    if group:
+        assert not any(r[0] == "7" for r in rows)  # NULL-group anchor emits nothing
+
+
+def test_brute_force_topk_dirty_input_equals_reference_on_clean_subset(spark):
+    """One validity rule on both sides: a NULL vector, a NULL element, a
+    wrong-length vector, a zero vector, a NULL id and a NaN element are
+    each dropped, so the kernel on the dirty frame equals the reference on
+    the clean rows."""
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    vid, vec = F.col("vec_id"), F.col("embedding")
+    nan = F.lit(float("nan")).cast("float")
+    dirty = emb.withColumn(
+        "embedding",
+        F.when(vid == 3, F.lit(None))
+        .when(vid == 5, F.transform(vec, lambda x, i: F.when(i == 0, None).otherwise(x)))
+        .when(vid == 9, F.slice(vec, 1, 10))
+        .when(vid == 11, F.array_repeat(F.lit(0.0).cast("float"), 64))
+        .when(vid == 15, F.transform(vec, lambda x, i: F.when(i == 0, nan).otherwise(x)))
+        .otherwise(vec),
+    ).withColumn("vec_id", F.when(vid == 13, F.lit(None)).otherwise(vid))
+    clean = emb.filter(~vid.isin(3, 5, 9, 11, 13, 15))
+    kw = dict(k=3, query_filter=F.col("vec_id") < 40)
+    out = brute_force_topk(dirty.repartition(8), **kw)
+    assert _bitwise_rows(out) == _bitwise_rows(_fold_topk_reference(clean, **kw))
+
+
+def test_brute_force_topk_cut_keeps_rounding_ties(spark):
+    """Neighbours 1 and 2 both round to cosine 0.8, but 2's raw cosine is
+    higher by 2.3e-7: the id tie-break ranks 1 first, so the per-batch
+    candidate cut must keep 1 even though 2 alone is the batch's top-1 raw
+    value. All rows sit in one partition, so they share one Arrow batch."""
+    rows = [(0, [1.0, 0.0]), (1, [1.0, 0.7500005960464478]), (2, [1.0, 0.75])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    df = df.repartition(spark.sparkContext.defaultParallelism, F.lit(0))
+    out = brute_force_topk(df, k=1, query_filter=F.col("vec_id") == 0).collect()
+    assert [(r.nbr_id, r.cosine) for r in out] == [(1, 0.8)]
+
+
+def test_brute_force_topk_drops_zero_norm_vector(spark):
+    """A zero vector has no cosine: it neither queries nor neighbours, and
+    no NULL cosine reaches the output (the fold would divide by zero)."""
+    emb = load_table(spark, SF_SMALL, "embeddings").withColumn(
+        "embedding",
+        F.when(F.col("vec_id") == 7, F.array_repeat(F.lit(0.0).cast("float"), 64))
+        .otherwise(F.col("embedding")),
     )
-    ra = sorted(key(r) for r in a.collect())
-    rb = sorted(key(r) for r in b.collect())
-    assert ra == rb
-    assert not any(r[0] == 7 for r in ra)  # NULL-group anchor emits nothing
+    rows = brute_force_topk(emb, k=3, query_filter=F.col("vec_id") < 40).collect()
+    assert rows
+    assert all(7 not in (r.query_id, r.nbr_id) for r in rows)
+    assert all(r.cosine is not None for r in rows)
 
 
 def test_srp_lsh_planted_near_dups(spark):

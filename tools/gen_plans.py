@@ -80,9 +80,11 @@ ANNOTATIONS = {
         "single-file input spread."
     ),
     "ann_topk_np": (
-        "Arrow-vectorized brute-force cosine: per-partition BLAS matmul in "
-        "mapInPandas, O(k x queries x partitions) merge — the partial-topk-"
-        "then-merge shape that scales linearly with corpus partitions."
+        "Arrow-vectorized brute-force cosine: the fold-exact mapInPandas "
+        "kernel scores each corpus batch against the query batch in its "
+        "closure and keeps ~k candidates per query per batch, O(k x queries "
+        "x batches) merge — the partial-topk-then-merge shape that scales "
+        "linearly with corpus partitions."
     ),
     "streaming_window_agg": (
         "Watermarked tumbling windows on an availableNow stream: state "
@@ -472,9 +474,10 @@ ANNOTATIONS = {
     ),
     "hard_negatives": (
         "Contrastive hard-negative mining on the fold-exact vectorized "
-        "kernel (round 11): the bounded anchor batch rides a broadcast "
-        "variable into ONE MapInPandas numpy scorer over the corpus scan "
-        "— no pair blow-up ever shuffles, the same-class exclusion is a "
+        "kernel: the bounded anchor batch rides the kernel's closure into "
+        "ONE MapInPandas numpy scorer over the corpus scan, whose per-batch "
+        "candidate cut keeps ~k pairs per anchor — no pair blow-up ever "
+        "shuffles, the same-class exclusion is a "
         "vectorized mask inside the kernel, and the per-dimension "
         "accumulation replays the zip_with left fold's IEEE sequence "
         "bit-for-bit (unit-pinned); rounding and the per-anchor top-3 "
