@@ -13,8 +13,20 @@ from the reference; reference files are cited in docstrings as behavioral
 specs (e.g. /root/reference/scripts/bronze/bronze_ingestion.py:20-32).
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from .plans.registry import Pipeline, ExpectationViolation
 from .session import get_spark
+
+# Ship every Python-worker kernel BY VALUE: cloudpickle would otherwise
+# pickle a module-level helper a kernel calls (a codec, a state function)
+# by reference, and a worker that cannot import this package — a driver
+# that put the repository on its own sys.path only — fails with
+# ModuleNotFoundError. The check walks parent packages, so this one call
+# covers every submodule.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __all__ = ["Pipeline", "ExpectationViolation", "get_spark"]
 __version__ = "0.1.0"

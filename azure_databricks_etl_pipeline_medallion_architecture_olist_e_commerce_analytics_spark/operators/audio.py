@@ -1,22 +1,22 @@
 """REAL audio modality: vendored pure-stdlib WAV/PCM codec + Arrow-batched
-decode and windowed feature extraction.
+windowed feature extraction.
 
 The multimodal contract (reference surface: opaque binary columns + typed
 metadata, decode/feature-extract as Pandas-UDF operators) gains a second
-REAL modality beyond images (BMP round-7, PNG round-8): audio as
-RIFF/WAVE 16-bit PCM. WAV is fully parseable with ``struct`` + numpy —
-no torchaudio/soundfile in this container and none needed — so both the
-writer and the parser handle true bytes, and the decode output
-(sample_rate, channels, n_samples, exact integer energy) is value-oracled
-against a closed-form DuckDB recipe. Lossy audio (MP3/AAC/Opus) remains
-behind the same explicit NotImplementedError policy as lossy images
-(a DCT/MDCT stack is out of scope for a vendored codec).
+REAL modality beyond images: audio as RIFF/WAVE 16-bit PCM. WAV is fully
+parseable with ``struct`` + numpy — no torchaudio/soundfile needed — so
+both the writer and the parser handle true bytes. The codec is one row of
+the format table in :mod:`.multimodal`: ``attach_media_payload(df,
+formats=("audio/wav",))`` writes the payloads and ``decode_media_meta``
+parses them (sample_rate, channels, n_samples, exact integer energy),
+value-oracled against a closed-form DuckDB recipe. Lossy audio
+(MP3/AAC/Opus) has no vendored codec, like lossy images.
 
 Scale notes (100 TB): payloads ride in parquet row groups next to their
-metadata; every kernel is ``mapInPandas`` over Arrow record batches —
-per-batch numpy, never per-row Python in a hot loop; the windowed-energy
-fan-out emits O(n_samples / window) rows per payload, bounded by the
-payload length, and aggregates back JVM-side.
+metadata; :func:`audio_window_energy` is ``mapInPandas`` over Arrow record
+batches — per-batch numpy, never per-row Python in a hot loop; its fan-out
+emits O(n_samples / window) rows per payload, bounded by the payload
+length, and aggregates back JVM-side.
 """
 
 from __future__ import annotations
@@ -125,57 +125,6 @@ def parse_wav(payload) -> tuple:
     chunk before fmt — yields all-None: NULL metadata, never a job abort
     (the same corrupt-blob contract as the image parsers)."""
     return _parse_wav_full(payload)[:4]
-
-
-def attach_audio_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Synthesize a REAL WAV payload per row (mapInPandas, Arrow batches)
-    — the testdata stand-in for a landed audio column. A NULL id yields a
-    NULL payload (the missing-blob case the decode contract survives)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                encode_wav(abs(int(d))) if d is not None and not pd.isna(d) else None
-                for d in pdf[id_col]
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return df.select(id_col).mapInPandas(
-        batches, schema=f"{id_col} long, payload binary"
-    )
-
-
-def decode_audio_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL audio decode: parse each payload with the vendored WAV chunk
-    walker and emit typed metadata + the exact integer energy. Same
-    mapInPandas/Arrow shape as the image decode — swapping modalities
-    never changes the plan."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [
-                parse_wav(p) if p is not None else (None, None, None, None)
-                for p in pdf["payload"]
-            ]
-            n_bytes = pdf["payload"].map(lambda p: len(p) if p is not None else None)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": n_bytes.astype("Int32"),
-                    "sample_rate": pd.array([m[0] for m in metas], dtype="Int32"),
-                    "channels": pd.array([m[1] for m in metas], dtype="Int32"),
-                    "n_samples": pd.array([m[2] for m in metas], dtype="Int32"),
-                    "energy": pd.array([m[3] for m in metas], dtype="Int64"),
-                }
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema=(
-            f"{id_col} long, n_bytes int, sample_rate int, channels int,"
-            " n_samples int, energy long"
-        ),
-    )
 
 
 def audio_window_energy(

@@ -1,13 +1,17 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Images/audio/video are carried as ``binary`` columns with a typed metadata
-struct; decode / feature-extract / frame-sample run as Arrow-batched
-``mapInPandas`` operators. Image decode is REAL in this container for BMP
-payloads via the vendored pure-numpy codec at the bottom of this file
-(headers, stride, padding, pixel sums — value-oracled); PIL remains the
-escape hatch for other formats (probed at import, below), and the
-deterministic stub kernel stays available for oracle-reproducible runs of
-the PIL-shaped path.
+Images/audio/video are carried as ``binary`` columns. Every real format
+goes through ONE codec table (:data:`_CODECS`, bottom of this file): the
+vendored pure-numpy BMP and pure-stdlib PNG codecs defined here, the WAV
+codec in :mod:`.audio` and the Y4M codec in :mod:`.video`. One attach
+kernel (:func:`attach_media_payload`) writes a genuine container per row
+and one decode kernel (:func:`decode_media_meta`) routes each payload by
+its magic bytes, both ``mapInPandas`` over Arrow batches and value-oracled
+(headers, stride, padding, pixel sums, energies, luma sums). Lossy formats
+(JPEG, MP3, H.264) have no vendored codec and no closed-form SQL replay,
+so they stay out of the catalog; production plugs a codec library into
+the same table. The integer stubs (:func:`decode_image_meta`,
+:func:`resize_image_meta`, :func:`sample_frames`) are Column expressions.
 
 Scale notes: binary payloads ride in the same parquet row groups as their
 metadata; ``maxPartitionBytes`` controls batch size; mapInPandas streams
@@ -23,24 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DECODE_SCHEMA = (
-    "doc_id long, n_bytes int, format string, width int, height int, channels int"
-)
-
-FRAME_SCHEMA = "doc_id long, n_bytes int, n_frames int, frame_index int, frame_offset int"
-
-# Real-decoder escape hatch: probe for PIL at import. In THIS container the
-# probe fails (PIL/cv2/torchaudio absent) and every decode runs the
-# deterministic stub; in a container with Pillow the real path activates
-# automatically (decode_image_meta(use_real_decoder=None) follows this flag)
-# while the stub stays available for oracle-reproducible runs.
-try:
-    from PIL import Image as _PILImage  # type: ignore
-
-    REAL_DECODERS_AVAILABLE = True
-except Exception:  # ImportError, or a broken PIL install
-    _PILImage = None
-    REAL_DECODERS_AVAILABLE = False
+from .audio import encode_wav, parse_wav
+from .video import Y4M_MAGIC, encode_y4m, parse_y4m
 
 
 def attach_binary_payload(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -61,127 +49,43 @@ def attach_binary_payload(df: DataFrame, id_col: str = "doc_id", text_col: str =
     )
 
 
-def _fake_image_meta(n_bytes: int) -> tuple[int, int, int]:
-    """STUB: deterministic fake decode (real decoder unavailable in image).
-
-    Derives plausible dimensions purely from payload length so oracles can
-    reproduce it. Replace with PIL/cv2 in a container that has them.
-    """
-    width = (n_bytes % 640) + 16
-    height = ((n_bytes // 7) % 480) + 16
-    return width, height, 3
-
-
-def _real_image_meta(payload) -> tuple:
-    """REAL decode of one payload via PIL → (width, height, channels);
-    a payload PIL cannot parse yields (None, None, None) — NULL metadata,
-    never a job abort (at corpus scale some fraction of blobs is always
-    corrupt). Only callable when REAL_DECODERS_AVAILABLE."""
-    import io
-
-    try:
-        with _PILImage.open(io.BytesIO(bytes(payload))) as im:
-            return im.width, im.height, len(im.getbands())
-    except Exception:
-        return None, None, None
-
-
-def decode_image_meta(df: DataFrame, use_real_decoder: bool | None = None) -> DataFrame:
-    """Arrow-batched image 'decode' extracting (width, height, channels).
-
-    ``use_real_decoder``: ``None`` (default) auto-selects — the real PIL
-    path when the import probe found Pillow, else the deterministic stub;
-    ``True`` demands the real path and raises when no decoder is present
-    (the stub boundary stays explicit, not silent); ``False`` pins the
-    stub (what the DuckDB oracles reproduce).
-
-    Both paths share the SAME ``DECODE_SCHEMA``, mapInPandas batch shape,
-    and metadata contract — only the (width, height, channels) values
-    differ, so swapping containers never changes the plan or the schema.
-    Real-path contract: one PIL header decode per payload (no pixel-buffer
-    materialization — PIL reads dimensions lazily), undecodable payloads
-    yield NULL dimensions.
-    """
-    if use_real_decoder is None:
-        use_real_decoder = REAL_DECODERS_AVAILABLE
-    if use_real_decoder and not REAL_DECODERS_AVAILABLE:
-        raise NotImplementedError(
-            "real decoding of LOSSY formats (JPEG etc.) requires PIL/cv2, not "
-            "present in this container — BMP and PNG decode for real via the "
-            "vendored codecs (decode_bmp_meta routes by magic bytes); run "
-            "with use_real_decoder=False for the deterministic stub. This "
-            "boundary is PERMANENT by design (SURVEY.md §8, round-10): a "
-            "vendored DCT decode has no closed-form SQL replay, so it could "
-            "never join the value-oracled catalog; production plugs a codec "
-            "library into this same mapInPandas seam"
-        )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            # NULL payload -> NULL metadata (same contract as an
-            # undecodable payload on the real path); at corpus scale some
-            # fraction of blobs is always missing and len(None) would
-            # abort the job
-            n_bytes = pdf["payload"].map(lambda p: len(p) if p is not None else None)
-            if use_real_decoder:
-                meta = [
-                    _real_image_meta(p) if p is not None else (None, None, None)
-                    for p in pdf["payload"]
-                ]
-            else:
-                meta = [
-                    _fake_image_meta(n) if n is not None else (None, None, None)
-                    for n in n_bytes
-                ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": n_bytes.astype("Int32"),
-                    "format": [
-                        m["format"] if m is not None else None
-                        for m in pdf["media_meta"]
-                    ],
-                    "width": [m[0] for m in meta],
-                    "height": [m[1] for m in meta],
-                    "channels": [m[2] for m in meta],
-                }
-            )
-
-    return df.mapInPandas(batches, schema=DECODE_SCHEMA)
+def decode_image_meta(df: DataFrame) -> DataFrame:
+    """Stub image 'decode' of an :func:`attach_binary_payload` frame, as
+    Column expressions: with ``n = length(payload)``, ``width = n % 640 +
+    16``, ``height = (n div 7) % 480 + 16``, ``channels = 3``. Plausible
+    dimensions from the length alone, so the chain stays replayable by a
+    SQL oracle; real decoding is :func:`decode_media_meta`. A NULL payload
+    gives NULL metadata."""
+    return df.selectExpr(
+        "CAST(doc_id AS BIGINT) AS doc_id",
+        "length(payload) AS n_bytes",
+        "media_meta.format AS format",
+        "length(payload) % 640 + 16 AS width",
+        "CAST((length(payload) div 7) % 480 + 16 AS INT) AS height",
+        "IF(payload IS NULL, NULL, 3) AS channels",
+    )
 
 
 def sample_frames(df: DataFrame, frame_stride: int = 1024) -> DataFrame:
-    """Frame-sampling plumbing for audio/video payloads.
+    """Frame-sampling plumbing for audio/video payloads, as Column
+    expressions: one row per frame offset, ``n_frames = n_bytes div
+    stride + 1``, offsets at stride boundaries (STUB: offsets only; the
+    real samplers are :func:`~.video.sample_video_frames` and
+    :func:`~.audio.audio_window_energy`). A NULL payload has nothing to
+    sample and emits no rows."""
+    s = int(frame_stride)
+    return df.selectExpr(
+        "CAST(doc_id AS BIGINT) AS doc_id",
+        "length(payload) AS n_bytes",
+        f"explode(sequence(0, CAST(length(payload) div {s} AS INT))) AS frame_index",
+    ).selectExpr(
+        "doc_id",
+        "n_bytes",
+        f"CAST(n_bytes div {s} AS INT) + 1 AS n_frames",
+        "frame_index",
+        f"frame_index * {s} AS frame_offset",
+    )
 
-    Emits one row per sampled frame: ``n_frames = n_bytes div stride + 1``,
-    offsets at stride boundaries — the real sampler would seek/decode at each
-    offset (STUB: offsets only). Row-exploding inside mapInPandas keeps the
-    fan-out streaming (no collect, no driver loop).
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {k: [] for k in ("doc_id", "n_bytes", "n_frames", "frame_index", "frame_offset")}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:
-                    continue  # a NULL payload has nothing to sample
-                n = len(payload)
-                n_frames = n // frame_stride + 1
-                for i in range(n_frames):
-                    out["doc_id"].append(doc_id)
-                    out["n_bytes"].append(n)
-                    out["n_frames"].append(n_frames)
-                    out["frame_index"].append(i)
-                    out["frame_offset"].append(i * frame_stride)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(batches, schema=FRAME_SCHEMA)
-
-
-RESIZE_SCHEMA = (
-    "doc_id long, width int, height int, resized_width int, resized_height int, "
-    "resized_bytes int"
-)
 
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes int, byte_histogram array<double>, "
@@ -190,44 +94,29 @@ FEATURE_SCHEMA = (
 
 
 def resize_image_meta(df: DataFrame, target: int = 256) -> DataFrame:
-    """Aspect-preserving resize plumbing (STUB: metadata-only scaling).
+    """Aspect-preserving resize plumbing (STUB: metadata-only scaling) over
+    the :func:`decode_image_meta` output, as Column expressions: the
+    geometry scales by ``new = dim * target div max(w, h)`` when the long
+    side exceeds ``target`` and is kept otherwise; ``resized_bytes = rw *
+    rh * channels``. Products run in BIGINT (the session runs ANSI mode)
+    and are cast back to INT. A row with any NULL dimension resizes to
+    NULL."""
+    t = int(target)
+    mx = "greatest(width, height)"
 
-    Consumes the decode output; the real operator would rescale pixel
-    buffers (PIL/cv2 — absent here), so the stub scales the *geometry* with
-    pure integer math (``new = dim * target div max(w, h)``), which keeps the
-    whole chain reproducible by an integer-division SQL oracle. The
-    mapInPandas batch shape, schema, and row-per-image contract match what
-    the real kernel would use.
-    """
+    def fit(d: str) -> str:
+        return f"IF({mx} > {t}, CAST({d} AS BIGINT) * {t} div {mx}, {d})"
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            # rows whose decode produced NULL metadata (missing/undecodable
-            # payload) resize to NULL — compute on placeholder-filled ints,
-            # then re-null via the validity mask
-            valid = (
-                pdf["width"].notna() & pdf["height"].notna() & pdf["channels"].notna()
-            )
-            w = pdf["width"].fillna(1).astype("int64")
-            h = pdf["height"].fillna(1).astype("int64")
-            c = pdf["channels"].fillna(1).astype("int64")
-            mx = w.where(w >= h, h)
-            scale_needed = mx > target
-            rw = (w * target // mx).where(scale_needed, w)
-            rh = (h * target // mx).where(scale_needed, h)
-            rbytes = rw * rh * c
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "resized_width": rw.where(valid).astype("Int32"),
-                    "resized_height": rh.where(valid).astype("Int32"),
-                    "resized_bytes": rbytes.where(valid).astype("Int32"),
-                }
-            )
-
-    return df.mapInPandas(batches, schema=RESIZE_SCHEMA)
+    valid = "width IS NOT NULL AND height IS NOT NULL AND channels IS NOT NULL"
+    return df.selectExpr(
+        "CAST(doc_id AS BIGINT) AS doc_id",
+        "width",
+        "height",
+        f"CAST(IF({valid}, {fit('width')}, NULL) AS INT) AS resized_width",
+        f"CAST(IF({valid}, {fit('height')}, NULL) AS INT) AS resized_height",
+        f"CAST(IF({valid}, {fit('width')} * {fit('height')} * channels, NULL)"
+        " AS INT) AS resized_bytes",
+    )
 
 
 def extract_byte_features(df: DataFrame, bins: int = 16) -> DataFrame:
@@ -286,25 +175,6 @@ def extract_byte_features(df: DataFrame, bins: int = 16) -> DataFrame:
 # in THIS container: the Spark path round-trips true bytes, the oracle checks
 # the invariant formula the pixels were generated from.
 # ---------------------------------------------------------------------------
-
-_DECODE_FIXED_FIELDS = (
-    "n_bytes int, format string, width int, height int, "
-    "channels int, pixel_sum long"
-)
-BMP_DECODE_SCHEMA = "doc_id long, " + _DECODE_FIXED_FIELDS
-
-
-def _decode_schema(id_col: str) -> str:
-    """The decode output schema with the caller's id column name. A name
-    that collides with a fixed field would yield silent duplicate columns,
-    so reject it outright."""
-    fixed = {f.split()[0] for f in _DECODE_FIXED_FIELDS.split(", ")}
-    if id_col in fixed:
-        raise ValueError(
-            f"id_col {id_col!r} collides with a decode output field {sorted(fixed)}"
-        )
-    return f"{id_col} long, " + _DECODE_FIXED_FIELDS
-
 
 def _bmp_dims(did: int) -> tuple[int, int]:
     """Deterministic synthetic dimensions from a (non-negative) doc id."""
@@ -384,8 +254,7 @@ def parse_bmp(payload) -> tuple:
 # without compressing anything. The parser handles ANY 8-bit RGB
 # non-interlaced PNG — multi-IDAT streams and all five row filters (Sub/Up/
 # Average/Paeth unfiltering) — so real-world payloads decode too, not just
-# our writer's. With BMP (round-7) this makes the decode operator's
-# NotImplementedError guard "lossy formats only" (JPEG needs a DCT stack).
+# our writer's. Lossy formats (JPEG needs a DCT stack) have no vendored codec.
 # ---------------------------------------------------------------------------
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -538,12 +407,45 @@ def parse_png(payload) -> tuple:
         return (None, None, None, None)
 
 
-def attach_image_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Synthesize a REAL mixed-format image payload per row: even ids get a
-    24-bit BMP, odd ids an 8-bit RGB PNG — both carrying the SAME
-    deterministic pixel pattern, so the decode oracle shares one pixel-sum
-    formula and only the container metadata (n_bytes, format) splits on
-    parity. A NULL id yields a NULL payload (the missing-blob case)."""
+# ---------------------------------------------------------------------------
+# The one codec table. Each row: MIME type -> (magic prefix, writer, parser,
+# the decode fields the parser's tuple fills in order). The prefixes are
+# disjoint, and each parser re-checks its whole container header. Every
+# attach and decode in the catalog goes through it.
+# ---------------------------------------------------------------------------
+
+_IMAGE_FIELDS = ("width", "height", "channels", "pixel_sum")
+_CODECS = {
+    "image/bmp": (b"BM", encode_bmp, parse_bmp, _IMAGE_FIELDS),
+    "image/png": (PNG_SIG, encode_png, parse_png, _IMAGE_FIELDS),
+    "audio/wav": (
+        b"RIFF", encode_wav, parse_wav,
+        ("sample_rate", "channels", "n_samples", "energy"),
+    ),
+    "video/y4m": (
+        Y4M_MAGIC, encode_y4m, parse_y4m,
+        ("width", "height", "fps_num", "fps_den", "n_frames", "luma_sum"),
+    ),
+}
+MEDIA_FORMATS = tuple(_CODECS)
+
+
+def attach_media_payload(
+    df: DataFrame, formats: tuple[str, ...] = MEDIA_FORMATS, id_col: str = "doc_id"
+) -> DataFrame:
+    """Synthesize a REAL payload per row — the testdata stand-in for a
+    landed blob column: id ``d`` gets a genuine ``formats[abs(d) %
+    len(formats)]`` container from the vendored writer, so the default
+    mixes all four modalities by ``id % 4`` and ``("image/bmp",
+    "image/png")`` gives BMP to even ids and PNG to odd ones. A NULL id
+    yields a NULL payload (the missing-blob case). The id column keeps
+    its name; :func:`decode_media_meta` takes the same ``id_col``."""
+    unknown = [f for f in formats if f not in _CODECS]
+    if not formats or unknown:
+        raise ValueError(
+            f"formats must be a non-empty tuple of {list(MEDIA_FORMATS)}, got {formats!r}"
+        )
+    writers = [_CODECS[f][1] for f in formats]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -553,105 +455,7 @@ def attach_image_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     payloads.append(None)
                 else:
                     did = abs(int(d))
-                    payloads.append(encode_png(did) if did % 2 else encode_bmp(did))
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return df.select(id_col).mapInPandas(
-        batches, schema=f"{id_col} long, payload binary"
-    )
-
-
-def attach_bmp_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Synthesize a REAL BMP binary payload per row (mapInPandas, Arrow
-    batches) — the testdata stand-in for a landed image column. A NULL id
-    yields a NULL payload (the missing-blob case the decode contract must
-    survive). The id column keeps its name in the output (callers joining
-    back on ``id_col`` rely on it); ``decode_bmp_meta`` takes the same
-    ``id_col`` for the round trip."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                encode_bmp(abs(int(d))) if d is not None and not pd.isna(d) else None
-                for d in pdf[id_col]
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return df.select(id_col).mapInPandas(
-        batches, schema=f"{id_col} long, payload binary"
-    )
-
-
-def _route_decode(payload) -> tuple:
-    """Magic-byte router over the vendored codecs: BMP ('BM'), PNG
-    (8-byte signature); anything else — including NULL — is
-    (format, w, h, c, sum) of all-None. A recognized container whose body
-    fails to parse also yields all-None (corrupt blob ≠ unknown format for
-    the caller; both are NULL metadata)."""
-    if payload is None:
-        return (None, None, None, None, None)
-    buf = bytes(payload)
-    if buf[:2] == b"BM":
-        w, h, c, s = parse_bmp(buf)
-        return ("image/bmp" if w is not None else None, w, h, c, s)
-    if buf[:8] == PNG_SIG:
-        w, h, c, s = parse_png(buf)
-        return ("image/png" if w is not None else None, w, h, c, s)
-    return (None, None, None, None, None)
-
-
-def decode_bmp_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL image decode: route each payload by magic bytes to the vendored
-    BMP or PNG parser (no PIL) and emit typed metadata + an exact pixel
-    sum. Same mapInPandas/Arrow shape as the PIL path — swapping decoders
-    never changes the plan or schema. ``id_col`` names the id column of
-    the incoming (id, payload) frame — the `attach_bmp_payload` /
-    `attach_image_payload` contract. (The name predates the PNG route —
-    round-7 callers pass pure-BMP frames and decode identically.)"""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [_route_decode(p) for p in pdf["payload"]]
-            n_bytes = pdf["payload"].map(lambda p: len(p) if p is not None else None)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": n_bytes.astype("Int32"),
-                    "format": [m[0] for m in metas],
-                    "width": pd.array([m[1] for m in metas], dtype="Int32"),
-                    "height": pd.array([m[2] for m in metas], dtype="Int32"),
-                    "channels": pd.array([m[3] for m in metas], dtype="Int32"),
-                    "pixel_sum": pd.array([m[4] for m in metas], dtype="Int64"),
-                }
-            )
-
-    schema = _decode_schema(id_col)
-    return df.mapInPandas(batches, schema=schema)
-
-
-decode_image_bytes_meta = decode_bmp_meta  # the format-routing name
-
-
-def attach_media_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Synthesize a REAL mixed-MODALITY payload per row — the realistic
-    landed-blob-column case: ``id % 4`` routes to 24-bit BMP (0), 8-bit
-    RGB PNG (1), 16-bit PCM WAV (2), or Y4M C420 video (3), each a
-    genuine container from the vendored writers. A NULL id yields a NULL
-    payload."""
-    from .audio import encode_wav
-    from .video import encode_y4m
-
-    writers = (encode_bmp, encode_png, encode_wav, encode_y4m)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = []
-            for d in pdf[id_col]:
-                if d is None or pd.isna(d):
-                    payloads.append(None)
-                else:
-                    did = abs(int(d))
-                    payloads.append(writers[did % 4](did))
+                    payloads.append(writers[did % len(writers)](did))
             yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
 
     return df.select(id_col).mapInPandas(
@@ -662,70 +466,87 @@ def attach_media_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 _MEDIA_FIELDS = (
     "n_bytes int, format string, width int, height int, channels int,"
     " pixel_sum long, sample_rate int, n_samples int, energy long,"
-    " fps_num int, n_frames int, luma_sum long"
+    " fps_num int, fps_den int, n_frames int, luma_sum long"
+)
+_FIELDS = [tuple(f.split()) for f in _MEDIA_FIELDS.split(", ")]
+_SLOT = {name: i for i, (name, _) in enumerate(_FIELDS)}
+# Per codec: (format, magic prefix, parser, the output slots it fills).
+_ROUTES = tuple(
+    (fmt, magic, parse, tuple(_SLOT[f] for f in fields))
+    for fmt, (magic, _, parse, fields) in _CODECS.items()
 )
 
 
-def decode_media_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """UNIFIED mixed-modality decode: route each payload by MAGIC BYTES
-    across all four vendored parsers — 'BM' → BMP, PNG signature → PNG,
-    'RIFF…WAVE' → WAV, 'YUV4MPEG2' → Y4M — into one wide nullable schema
-    (image fields NULL for audio rows and vice versa; the curation-layer
-    contract for a heterogeneous blob column). Unknown containers and
-    corrupt payloads yield an all-NULL row, never a job abort. One
-    mapInPandas pass; per-payload numpy only."""
-    from .audio import parse_wav
-    from .video import Y4M_MAGIC, parse_y4m
+def _decode_schema(id_col: str) -> str:
+    """The decode output schema with the caller's id column name. A name
+    that collides with a fixed field would yield silent duplicate columns,
+    so reject it outright."""
+    if id_col in _SLOT:
+        raise ValueError(
+            f"id_col {id_col!r} collides with a decode output field {sorted(_SLOT)}"
+        )
+    return f"{id_col} long, {_MEDIA_FIELDS}"
 
-    def route(payload):
-        none = [None] * 12
+
+def _decode_columns(payloads, n: int) -> list[list]:
+    """The decode fields of ``n`` payloads, one list per field in
+    ``_MEDIA_FIELDS`` order, under the one corrupt-payload rule:
+    ``n_bytes`` is the length of any non-NULL payload; ``format`` and the
+    codec's fields are set only when the codec its magic prefix selects
+    parses it; a NULL payload sets nothing."""
+    cols = [[None] * n for _ in _FIELDS]
+    n_bytes, formats = cols[_SLOT["n_bytes"]], cols[_SLOT["format"]]
+    for r, payload in enumerate(payloads):
         if payload is None:
-            return none
+            continue
         buf = bytes(payload)
-        n = len(buf)
-        if buf[:2] == b"BM":
-            w, h, c, s = parse_bmp(buf)
-            if w is None:
-                return none
-            return [n, "image/bmp", w, h, c, s] + [None] * 6
-        if buf[:8] == PNG_SIG:
-            w, h, c, s = parse_png(buf)
-            if w is None:
-                return none
-            return [n, "image/png", w, h, c, s] + [None] * 6
-        if buf[:4] == b"RIFF" and buf[8:12] == b"WAVE":
-            rate, ch, ns, e = parse_wav(buf)
-            if rate is None:
-                return none
-            return [n, "audio/wav", None, None, ch, None, rate, ns, e,
-                    None, None, None]
-        if buf[: len(Y4M_MAGIC)] == Y4M_MAGIC:
-            w, h, num, _den, nf, ls = parse_y4m(buf)
-            if w is None:
-                return none
-            return [n, "video/y4m", w, h, None, None, None, None, None,
-                    num, nf, ls]
-        return none
+        n_bytes[r] = len(buf)
+        for fmt, magic, parse, slots in _ROUTES:
+            if buf.startswith(magic):
+                values = parse(buf)
+                if values[0] is not None:
+                    formats[r] = fmt
+                    for i, v in zip(slots, values):
+                        cols[i][r] = v
+                break
+    return cols
 
-    int32_cols = {
-        "n_bytes": 0, "width": 2, "height": 3, "channels": 4,
-        "sample_rate": 6, "n_samples": 7, "fps_num": 9, "n_frames": 10,
-    }
-    int64_cols = {"pixel_sum": 5, "energy": 8, "luma_sum": 11}
+
+def _nullable(values: list, typ: str):
+    """``values`` as a pandas column of Spark type ``typ``. A field no row
+    filled (one of a modality absent from the batch) is built as all-NA
+    directly: pandas coerces a list of None element by element, at the
+    cost of a full column."""
+    import numpy as np
+
+    if typ == "string":
+        return values
+    np_dtype, pd_dtype = ("int32", "Int32") if typ == "int" else ("int64", "Int64")
+    if values.count(None) == len(values):
+        return pd.arrays.IntegerArray(
+            np.zeros(len(values), np_dtype), np.ones(len(values), bool)
+        )
+    return pd.array(values, dtype=pd_dtype)
+
+
+def decode_media_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """REAL decode of an (id, payload) frame: route each payload by MAGIC
+    BYTES through the codec table — 'BM' → BMP, PNG signature → PNG,
+    'RIFF' → WAV, 'YUV4MPEG2' → Y4M — into one wide nullable schema
+    (image fields NULL on audio rows and vice versa; the curation-layer
+    contract for a heterogeneous blob column). Unknown containers and
+    corrupt payloads keep ``n_bytes`` and NULL every other field, never a
+    job abort; a NULL payload is an all-NULL row. One mapInPandas pass;
+    per-payload numpy only. Per-modality callers ``select`` the fields
+    their modality fills."""
+    schema = _decode_schema(id_col)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            metas = [route(p) for p in pdf["payload"]]
+            cols = _decode_columns(pdf["payload"], len(pdf))
             out = {id_col: pdf[id_col]}
-            for name, idx in int32_cols.items():
-                out[name] = pd.array([m[idx] for m in metas], dtype="Int32")
-            out["format"] = [m[1] for m in metas]
-            for name, idx in int64_cols.items():
-                out[name] = pd.array([m[idx] for m in metas], dtype="Int64")
-            yield pd.DataFrame(out)[
-                [id_col, "n_bytes", "format", "width", "height", "channels",
-                 "pixel_sum", "sample_rate", "n_samples", "energy",
-                 "fps_num", "n_frames", "luma_sum"]
-            ]
+            for (name, typ), col in zip(_FIELDS, cols):
+                out[name] = _nullable(col, typ)
+            yield pd.DataFrame(out)
 
-    return df.mapInPandas(batches, schema=f"{id_col} long, {_MEDIA_FIELDS}")
+    return df.mapInPandas(batches, schema=schema)

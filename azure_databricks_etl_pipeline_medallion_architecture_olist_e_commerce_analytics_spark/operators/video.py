@@ -1,22 +1,24 @@
 """REAL video modality: vendored pure-stdlib Y4M (YUV4MPEG2) codec +
-Arrow-batched decode and true frame sampling.
+Arrow-batched true frame sampling and scene-cut detection.
 
 Y4M is the codec-free video interchange container (mplayer/ffmpeg
 lineage): one ASCII parameter line (``YUV4MPEG2 W<w> H<h> F<num>:<den>
 ... C420...``) followed by ``FRAME\\n``-delimited raw YUV planes. That
-makes video — like WAV for audio — fully parseable with ``struct``-free
-stdlib + numpy, so the third modality (after BMP/PNG images and WAV
-audio) is REAL bytes end-to-end: the writer emits genuine frames, the
-parser re-derives dimensions, frame rate, frame count, and exact integer
-luma statistics, and a closed-form DuckDB oracle value-pins all of it
-(header length included — it varies with the decimal digit counts).
-Compressed video (H.264/VP9/AV1) stays behind the explicit
-NotImplementedError policy, like JPEG and MP3.
+makes video — like WAV for audio — fully parseable with stdlib + numpy,
+so the third modality (after BMP/PNG images and WAV audio) is REAL bytes
+end-to-end. The codec is one row of the format table in
+:mod:`.multimodal`: ``attach_media_payload(df, formats=("video/y4m",))``
+writes genuine frames and ``decode_media_meta`` re-derives dimensions,
+frame rate, frame count, and exact integer luma statistics, which a
+closed-form DuckDB oracle value-pins (header length included — it varies
+with the decimal digit counts). Compressed video (H.264/VP9/AV1) has no
+vendored codec, like JPEG and MP3.
 
 Scale notes (100 TB): payloads ride in parquet row groups; both kernels
-are ``mapInPandas`` over Arrow batches with per-frame numpy sums — the
-frame-sample fan-out emits O(n_frames/stride) rows per payload and
-nothing touches per-pixel Python.
+here are ``mapInPandas`` over Arrow batches walking the frames through
+one generator (:func:`_y4m_luma_planes`) with per-frame numpy sums — the
+fan-out emits O(n_frames) rows per payload and nothing touches per-pixel
+Python.
 """
 
 from __future__ import annotations
@@ -106,20 +108,10 @@ def parse_y4m(payload) -> tuple:
             return none6
         if w % 2 or h % 2:
             return none6
-        frame_bytes = w * h + 2 * ((w // 2) * (h // 2))
-        pos = nl + 1
-        n_frames = 0
-        luma = 0
-        while pos < len(buf):
-            if buf[pos : pos + 5] != b"FRAME":
-                return none6
-            fnl = buf.find(b"\n", pos)
-            if fnl < 0 or fnl + 1 + frame_bytes > len(buf):
-                return none6
-            y = np.frombuffer(buf, dtype=np.uint8, count=w * h, offset=fnl + 1)
-            luma += int(y.astype(np.int64).sum())
+        n_frames = luma = 0
+        for _, y in _y4m_luma_planes(buf, w, h):
+            luma += int(y.sum(dtype=np.int64))
             n_frames += 1
-            pos = fnl + 1 + frame_bytes
         if n_frames == 0:
             return none6
         return (w, h, num, den, n_frames, luma)
@@ -127,56 +119,24 @@ def parse_y4m(payload) -> tuple:
         return none6
 
 
-def attach_video_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Synthesize a REAL Y4M payload per row (mapInPandas, Arrow batches).
-    A NULL id yields a NULL payload (the missing-blob case)."""
+def _y4m_luma_planes(buf: bytes, w: int, h: int):
+    """The one Y4M frame walk: yield ``(frame_index, luma plane)`` for
+    every ``FRAME`` record after the parameter line, the plane a zero-copy
+    uint8 view of ``w*h`` bytes. A record without the ``FRAME`` marker or
+    a truncated frame raises ``ValueError``; :func:`parse_y4m` turns that
+    into NULL metadata, and the kernels walk only payloads it parsed."""
+    import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            payloads = [
-                encode_y4m(abs(int(d))) if d is not None and not pd.isna(d) else None
-                for d in pdf[id_col]
-            ]
-            yield pd.DataFrame({id_col: pdf[id_col], "payload": payloads})
-
-    return df.select(id_col).mapInPandas(
-        batches, schema=f"{id_col} long, payload binary"
-    )
-
-
-def decode_video_meta(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL video decode: parse each payload with the vendored Y4M walker
-    and emit typed metadata + the exact total luma sum."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [
-                parse_y4m(p)
-                if p is not None
-                else (None, None, None, None, None, None)
-                for p in pdf["payload"]
-            ]
-            n_bytes = pdf["payload"].map(lambda p: len(p) if p is not None else None)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": n_bytes.astype("Int32"),
-                    "width": pd.array([m[0] for m in metas], dtype="Int32"),
-                    "height": pd.array([m[1] for m in metas], dtype="Int32"),
-                    "fps_num": pd.array([m[2] for m in metas], dtype="Int32"),
-                    "fps_den": pd.array([m[3] for m in metas], dtype="Int32"),
-                    "n_frames": pd.array([m[4] for m in metas], dtype="Int32"),
-                    "luma_sum": pd.array([m[5] for m in metas], dtype="Int64"),
-                }
-            )
-
-    return df.mapInPandas(
-        batches,
-        schema=(
-            f"{id_col} long, n_bytes int, width int, height int, fps_num int,"
-            " fps_den int, n_frames int, luma_sum long"
-        ),
-    )
+    frame_bytes = w * h + 2 * ((w // 2) * (h // 2))
+    pos = buf.find(b"\n") + 1
+    f = 0
+    while pos < len(buf):
+        fnl = buf.find(b"\n", pos)
+        if buf[pos : pos + 5] != b"FRAME" or fnl < 0 or fnl + 1 + frame_bytes > len(buf):
+            raise ValueError(f"malformed Y4M frame record at byte {pos}")
+        yield f, np.frombuffer(buf, dtype=np.uint8, count=w * h, offset=fnl + 1)
+        f += 1
+        pos = fnl + 1 + frame_bytes
 
 
 def sample_video_frames(
@@ -197,27 +157,17 @@ def sample_video_frames(
                 if p is None:
                     continue
                 buf = bytes(p)
-                meta = parse_y4m(buf)
-                if meta[0] is None:
+                w, h = parse_y4m(buf)[:2]
+                if w is None:
                     continue
-                w, h = meta[0], meta[1]
-                frame_bytes = w * h + 2 * ((w // 2) * (h // 2))
-                pos = buf.find(b"\n") + 1
-                f = 0
-                while pos < len(buf):
-                    fnl = buf.find(b"\n", pos)
+                for f, y in _y4m_luma_planes(buf, w, h):
                     if f % stride == 0:
-                        y = np.frombuffer(
-                            buf, dtype=np.uint8, count=w * h, offset=fnl + 1
-                        ).astype(np.int64)
-                        s = int(y.sum())
+                        s = int(y.sum(dtype=np.int64))
                         ids.append(d)
                         fidx.append(f)
                         lsum.append(s)
                         # truncating mean in integer (matches SQL div)
                         lmean.append(s // (w * h))
-                    f += 1
-                    pos = fnl + 1 + frame_bytes
             yield pd.DataFrame(
                 {
                     id_col: pd.array(ids, dtype="Int64"),
@@ -261,31 +211,21 @@ def video_scene_cuts(
                 if p is None:
                     continue
                 buf = bytes(p)
-                meta = parse_y4m(buf)
-                if meta[0] is None:
+                w, h = parse_y4m(buf)[:2]
+                if w is None:
                     continue
-                w, h = meta[0], meta[1]
-                wh = w * h
-                frame_bytes = wh + 2 * ((w // 2) * (h // 2))
-                pos = buf.find(b"\n") + 1
                 prev = None
-                f = 0
-                while pos < len(buf):
-                    fnl = buf.find(b"\n", pos)
-                    y = np.frombuffer(
-                        buf, dtype=np.uint8, count=wh, offset=fnl + 1
-                    ).astype(np.int64)
+                for f, plane in _y4m_luma_planes(buf, w, h):
+                    y = plane.astype(np.int64)
                     if prev is not None:
                         sad = int(np.abs(y - prev).sum())
-                        mad = (1000 * sad) // wh
+                        mad = (1000 * sad) // (w * h)
                         ids.append(d)
                         fa.append(f - 1)
                         sads.append(sad)
                         mads.append(mad)
                         cuts.append(mad >= threshold_milli)
                     prev = y
-                    f += 1
-                    pos = fnl + 1 + frame_bytes
             yield pd.DataFrame(
                 {
                     id_col: pd.array(ids, dtype="Int64"),

@@ -1471,15 +1471,19 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel-sum formula plus per-format byte lengths (BMP stride/padding
     vs PNG's 68 + h*(3w+1) stored-block size) — so a parser that
     miscounts stride, padding, vertical flip, scanline filters, or chunk
-    framing fails the value match. (PIL remains only for lossy formats.)"""
-    from .operators.multimodal import attach_image_payload, decode_bmp_meta
+    framing fails the value match."""
+    from .operators.multimodal import attach_media_payload, decode_media_meta
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_bmp_meta(attach_image_payload(docs))
+    payloads = attach_media_payload(docs, formats=("image/bmp", "image/png"))
+    return decode_media_meta(payloads).select(
+        "doc_id", "n_bytes", "format", "width", "height", "channels", "pixel_sum"
+    )
 
 
 def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling fan-out over binary payloads (mapInPandas)."""
+    """Frame-sampling fan-out over binary payloads (explode of a
+    sequence of stride offsets, no Python worker)."""
     from .operators.multimodal import attach_binary_payload, sample_frames
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
@@ -1497,12 +1501,14 @@ def q_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_bytes = 44 + n·ch·2; energy over the same integer sample formula),
     so a parser that miscounts the data offset, chunk framing, RIFF
     padding, or sample width fails the value match. Lossy audio
-    (MP3/AAC) stays behind the explicit NotImplementedError policy, like
-    JPEG for images."""
-    from .operators.audio import attach_audio_payload, decode_audio_meta
+    (MP3/AAC) has no vendored codec, like JPEG for images."""
+    from .operators.multimodal import attach_media_payload, decode_media_meta
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_audio_meta(attach_audio_payload(docs))
+    payloads = attach_media_payload(docs, formats=("audio/wav",))
+    return decode_media_meta(payloads).select(
+        "doc_id", "n_bytes", "sample_rate", "channels", "n_samples", "energy"
+    )
 
 
 def q_audio_window_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1515,10 +1521,13 @@ def q_audio_window_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays each window's sum from the closed-form sample
     formula, so window boundary arithmetic (offsets, partial tails) is
     value-pinned."""
-    from .operators.audio import attach_audio_payload, audio_window_energy
+    from .operators.audio import audio_window_energy
+    from .operators.multimodal import attach_media_payload
 
     docs = load_table(spark, sf_dir, "documents")
-    return audio_window_energy(attach_audio_payload(docs), window=128)
+    return audio_window_energy(
+        attach_media_payload(docs, formats=("audio/wav",)), window=128
+    )
 
 
 def q_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1528,14 +1537,18 @@ def q_video_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-stdlib parser re-derives width/height/frame-rate/frame-count
     plus the exact total luma sum. With BMP/PNG images and WAV audio this
     completes the REAL modality triple; compressed video (H.264/VP9)
-    stays behind the explicit NotImplementedError policy. The oracle
+    has no vendored codec. The oracle
     rebuilds the variable-length header STRING to count its bytes and
     replays the per-frame luma formula, so header tokenization, frame
     framing, and plane-size arithmetic are all value-pinned."""
-    from .operators.video import attach_video_payload, decode_video_meta
+    from .operators.multimodal import attach_media_payload, decode_media_meta
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_video_meta(attach_video_payload(docs))
+    payloads = attach_media_payload(docs, formats=("video/y4m",))
+    return decode_media_meta(payloads).select(
+        "doc_id", "n_bytes", "width", "height", "fps_num", "fps_den",
+        "n_frames", "luma_sum",
+    )
 
 
 def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1546,10 +1559,13 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows per payload; corrupt payloads emit zero rows. The oracle
     replays the sampled frame indices and the closed-form per-frame
     luma, pinning the stride arithmetic and plane offsets."""
-    from .operators.video import attach_video_payload, sample_video_frames
+    from .operators.multimodal import attach_media_payload
+    from .operators.video import sample_video_frames
 
     docs = load_table(spark, sf_dir, "documents")
-    return sample_video_frames(attach_video_payload(docs), stride=2)
+    return sample_video_frames(
+        attach_media_payload(docs, formats=("video/y4m",)), stride=2
+    )
 
 
 def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1566,10 +1582,13 @@ def q_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id + 13f + 5i) % 256, so |Δ| to frame f+1 is 13 unless the
     value wraps (≥ 243), where it is 243 — summed per pair in SQL.
     """
-    from .operators.video import attach_video_payload, video_scene_cuts
+    from .operators.multimodal import attach_media_payload
+    from .operators.video import video_scene_cuts
 
     docs = load_table(spark, sf_dir, "documents")
-    return video_scene_cuts(attach_video_payload(docs), threshold_milli=24700)
+    return video_scene_cuts(
+        attach_media_payload(docs, formats=("video/y4m",)), threshold_milli=24700
+    )
 
 
 def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1579,19 +1598,23 @@ def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     column, and the decode kernel routes each payload by MAGIC BYTES
     across all four vendored parsers into one wide nullable schema
     (image fields NULL on audio rows and vice versa). Unknown/corrupt
-    containers yield all-NULL rows, never job aborts. The oracle
+    containers yield NULL metadata, never job aborts. The oracle
     replays every modality's closed form CASEd on the same parity — so
     the router itself (magic dispatch + per-format field placement) is
     value-pinned, not just the individual codecs."""
     from .operators.multimodal import attach_media_payload, decode_media_meta
 
     docs = load_table(spark, sf_dir, "documents")
-    return decode_media_meta(attach_media_payload(docs))
+    return decode_media_meta(attach_media_payload(docs)).select(
+        "doc_id", "n_bytes", "format", "width", "height", "channels",
+        "pixel_sum", "sample_rate", "n_samples", "energy", "fps_num",
+        "n_frames", "luma_sum",
+    )
 
 
 def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aspect-preserving resize plumbing over decoded metadata (stub kernel,
-    integer-exact geometry — oracle-able)."""
+    """Aspect-preserving resize plumbing over decoded metadata (stub
+    Column expressions, integer-exact geometry — oracle-able)."""
     from .operators.multimodal import (
         attach_binary_payload,
         decode_image_meta,
@@ -1599,10 +1622,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return resize_image_meta(
-        decode_image_meta(attach_binary_payload(docs), use_real_decoder=False),
-        target=256,
-    )
+    return resize_image_meta(decode_image_meta(attach_binary_payload(docs)), target=256)
 
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -122,75 +122,3 @@ def running_user_totals(events: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-_FIRST_SEEN_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("first_event_id", T.LongType()),
-        T.StructField("first_ts", T.TimestampType()),
-        T.StructField("first_value", T.DoubleType()),
-    ]
-)
-_FIRST_SEEN_STATE = T.StructType(
-    [T.StructField("seen_types", T.ArrayType(T.StringType()))]
-)
-
-
-def _first_seen_fn(key, pdf_iter: Iterator["pd.DataFrame"], state) -> Iterator["pd.DataFrame"]:
-    import pandas as pd
-
-    (user_id,) = key
-    st = tuple(state.get) if state.exists else ([],)
-    seen = set(st[0] or [])
-    chunks = [p for p in pdf_iter if len(p)]
-    if chunks:
-        pdf = (pd.concat(chunks) if len(chunks) > 1 else chunks[0]).sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        )
-        firsts = pdf.drop_duplicates(subset=["event_type"], keep="first")
-        out = [
-            (user_id, r.event_type, r.event_id, r.ts, r.value)
-            for r in firsts.itertuples(index=False)
-            if r.event_type not in seen
-        ]
-        seen.update(firsts["event_type"])
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "user_id",
-                    "event_type",
-                    "first_event_id",
-                    "first_ts",
-                    "first_value",
-                ],
-            )
-    # sorted() pins a deterministic state encoding (sets iterate in hash
-    # order); the seen-set is bounded by the distinct event-type vocabulary
-    state.update((sorted(seen),))
-
-
-def first_seen_events_apws(events: DataFrame) -> DataFrame:
-    """First event of each (user, event_type), ever — streaming
-    first-occurrence dedup on ``applyInPandasWithState``. State per user =
-    the array of event types already seen (bounded by the type vocabulary,
-    not the event count). Batch-twin semantics: ``ROW_NUMBER() OVER
-    (PARTITION BY user_id, event_type ORDER BY ts, event_id) = 1``, which
-    the test asserts."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return (
-        events.select("user_id", "event_id", "ts", "event_type", "value")
-        .filter("event_type IS NOT NULL")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _first_seen_fn,
-            outputStructType=_FIRST_SEEN_SCHEMA,
-            stateStructType=_FIRST_SEEN_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-

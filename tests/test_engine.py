@@ -836,3 +836,47 @@ def test_tool_imports_resolve():
                     missing.append(f"{where} {node.module}.{alias.name}")
     assert checked > 20
     assert not missing, missing
+
+
+def test_kernel_queries_run_from_outside_the_repository(spark, tmp_path):
+    """Python-worker kernels ship by value: a driver started in another
+    working directory, with ``PYTHONPATH`` unset and the repository only
+    on its own ``sys.path``, runs the media kernels, the
+    ``applyInPandasWithState`` query and a numpy-only control with the
+    in-process row counts. A kernel whose pickle referenced a package
+    helper by name would raise ``ModuleNotFoundError`` on the workers."""
+    import json
+    import subprocess
+    import sys
+    import textwrap
+
+    from conftest import SF_SMALL
+
+    names = [
+        "multimodal_decode", "multimodal_resize", "audio_decode",
+        "audio_window_energy", "video_decode", "video_frame_sample",
+        "video_scene_cuts", "media_decode", "streaming_running_totals",
+        "ann_topk",
+    ]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = Pipeline.__module__.split(".")[0]
+    script = tmp_path / "drive.py"
+    script.write_text(textwrap.dedent(f"""
+        import json, sys
+        sys.path.insert(0, {root!r})
+        from {pkg} import get_spark
+        from {pkg}.queries import SPARK_QUERIES
+        spark = get_spark("outside-repo")
+        counts = {{n: SPARK_QUERIES[n](spark, {SF_SMALL!r}).count() for n in {names!r}}}
+        print("COUNTS " + json.dumps(counts))
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEMORY="2g")
+    proc = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    line = [s for s in proc.stdout.splitlines() if s.startswith("COUNTS ")][-1]
+    want = {n: _ALL_QUERIES[n](spark, SF_SMALL).count() for n in names}
+    assert json.loads(line[len("COUNTS "):]) == want

@@ -401,13 +401,13 @@ def test_ivfpq_full_probe_equals_pq(spark):
 
 def test_multimodal_decode_schema_and_determinism(spark):
     docs = load_table(spark, SF_SMALL, "documents").limit(50)
-    out = decode_image_meta(attach_binary_payload(docs), use_real_decoder=False)
+    out = decode_image_meta(attach_binary_payload(docs))
     pdf = out.toPandas()
     assert list(pdf.columns) == ["doc_id", "n_bytes", "format", "width", "height", "channels"]
     assert (pdf["channels"] == 3).all()
     assert (pdf["width"] >= 16).all() and (pdf["width"] < 656).all()
     # deterministic: second run identical
-    pdf2 = decode_image_meta(attach_binary_payload(docs), use_real_decoder=False).toPandas()
+    pdf2 = decode_image_meta(attach_binary_payload(docs)).toPandas()
     pd.testing.assert_frame_equal(
         pdf.sort_values("doc_id").reset_index(drop=True),
         pdf2.sort_values("doc_id").reset_index(drop=True),
@@ -582,17 +582,18 @@ def test_png_codec_all_filters_and_rejection():
 
 
 def test_mixed_format_payload_decode_routes_by_magic(spark):
-    """attach_image_payload synthesizes BMP for even ids and PNG for odd;
-    the decode kernel routes by magic bytes — format splits on parity,
-    the pixel sum follows the shared closed-form formula either way, and
-    NULL ids stay NULL metadata."""
+    """attach_media_payload over (BMP, PNG) synthesizes BMP for even ids
+    and PNG for odd; the decode kernel routes by magic bytes — format
+    splits on parity, the pixel sum follows the shared closed-form formula
+    either way, and NULL ids stay NULL metadata."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.multimodal import (
-        attach_image_payload,
-        decode_bmp_meta,
+        attach_media_payload,
+        decode_media_meta,
     )
 
     df = spark.createDataFrame([(2,), (3,), (None,), (8,), (9,)], "doc_id long")
-    out = {r.doc_id: r for r in decode_bmp_meta(attach_image_payload(df)).collect()}
+    payloads = attach_media_payload(df, formats=("image/bmp", "image/png"))
+    out = {r.doc_id: r for r in decode_media_meta(payloads).collect()}
     for did in (2, 3, 8, 9):
         r = out[did]
         assert r.format == ("image/png" if did % 2 else "image/bmp")
@@ -612,56 +613,17 @@ def test_bmp_decode_null_ids_yield_null_metadata(spark):
     """A NULL doc id (missing blob) flows through attach+decode as NULL
     payload → NULL metadata, never an abort."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.multimodal import (
-        attach_bmp_payload,
-        decode_bmp_meta,
+        attach_media_payload,
+        decode_media_meta,
     )
 
     df = spark.createDataFrame([(1,), (None,), (7,)], "doc_id long")
-    out = {r.doc_id: r for r in decode_bmp_meta(attach_bmp_payload(df)).collect()}
+    payloads = attach_media_payload(df, formats=("image/bmp",))
+    out = {r.doc_id: r for r in decode_media_meta(payloads).collect()}
     assert out[1].format == "image/bmp" and out[1].pixel_sum is not None
     nulls = [r for r in out.values() if r.doc_id is None]
     assert len(nulls) == 1 and nulls[0].width is None and nulls[0].pixel_sum is None
-
-
-def test_multimodal_real_decoder_escape_hatch(spark):
-    """The real-path contract (round-4 verdict ask #5): PIL is probed at
-    import; `use_real_decoder=None` auto-selects, `True` raises when no
-    decoder exists, and BOTH paths share schema + plumbing — only cell
-    values may differ between containers."""
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.multimodal import (
-        REAL_DECODERS_AVAILABLE,
-        _real_image_meta,
-    )
-
-    docs = load_table(spark, SF_SMALL, "documents").limit(5)
-    stub = decode_image_meta(attach_binary_payload(docs), use_real_decoder=False)
-    auto = decode_image_meta(attach_binary_payload(docs), use_real_decoder=None)
-    # identical schema and mapInPandas plan shape regardless of container
-    assert auto.schema == stub.schema
-    assert "MapInPandas" in auto._jdf.queryExecution().analyzed().toString()
-    if not REAL_DECODERS_AVAILABLE:
-        # THIS container: probe failed -> explicit stub boundary
-        with pytest.raises(NotImplementedError):
-            decode_image_meta(attach_binary_payload(docs), use_real_decoder=True)
-        # auto mode resolved to the stub: values match the stub run
-        pd.testing.assert_frame_equal(
-            auto.toPandas().sort_values("doc_id").reset_index(drop=True),
-            stub.toPandas().sort_values("doc_id").reset_index(drop=True),
-        )
-    else:  # pragma: no cover — runs only in a Pillow-equipped container
-        real = decode_image_meta(attach_binary_payload(docs), use_real_decoder=True)
-        assert real.schema == stub.schema
-        pdf = real.toPandas()
-        # synthesized text payloads are not decodable images -> NULL dims
-        assert pdf["width"].isna().all()
-        # and a genuinely decodable payload yields real dimensions
-        import io
-
-        from PIL import Image
-
-        buf = io.BytesIO()
-        Image.new("RGB", (7, 11)).save(buf, format="PNG")
-        assert _real_image_meta(buf.getvalue()) == (7, 11, 3)
+    assert nulls[0].n_bytes is None
 
 
 def test_multimodal_frames_fanout(spark):
@@ -1047,12 +1009,7 @@ def test_resize_never_upscales_and_preserves_aspect(spark):
     )
 
     docs = load_table(spark, SF_SMALL, "documents").filter(F.col("doc_id") < 200)
-    # pin the stub kernel: in a Pillow-equipped container the auto default
-    # would real-decode the synthesized text payloads to NULL dims
-    out = resize_image_meta(
-        decode_image_meta(attach_binary_payload(docs), use_real_decoder=False),
-        target=256,
-    )
+    out = resize_image_meta(decode_image_meta(attach_binary_payload(docs)), target=256)
     for r in out.collect():
         assert max(r.resized_width, r.resized_height) <= max(256, min(r.width, r.height))
         assert r.resized_width <= r.width and r.resized_height <= r.height
@@ -2409,16 +2366,18 @@ def test_audio_window_energy_sums_to_decode_energy(spark):
     must sum EXACTLY to the decode kernel's total energy and the window
     counts to channels*n_samples — any reduceat offset error breaks it."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.audio import (
-        attach_audio_payload,
         audio_window_energy,
-        decode_audio_meta,
+    )
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.multimodal import (
+        attach_media_payload,
+        decode_media_meta,
     )
 
     docs = load_table(spark, SF_SMALL, "documents").filter(F.col("doc_id") < 50)
-    att = attach_audio_payload(docs)
+    att = attach_media_payload(docs, formats=("audio/wav",))
     dec = {
         r.doc_id: (r.energy, r.n_samples * r.channels)
-        for r in decode_audio_meta(att).collect()
+        for r in decode_media_meta(att).collect()
     }
     agg = (
         audio_window_energy(att, window=128)
@@ -2490,17 +2449,19 @@ def test_video_frame_sample_matches_decode(spark):
     0,2,4,... of each doc's n_frames; per-frame luma_mean is the
     truncating integer mean; and summing ALL frames at stride=1 equals
     the decode kernel's total luma_sum."""
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.multimodal import (
+        attach_media_payload,
+        decode_media_meta,
+    )
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.video import (
-        attach_video_payload,
-        decode_video_meta,
         sample_video_frames,
     )
 
     docs = load_table(spark, SF_SMALL, "documents").filter(F.col("doc_id") < 50)
-    att = attach_video_payload(docs)
+    att = attach_media_payload(docs, formats=("video/y4m",))
     dec = {
         r.doc_id: (r.n_frames, r.luma_sum, r.width * r.height)
-        for r in decode_video_meta(att).collect()
+        for r in decode_media_meta(att).collect()
     }
     samp = sample_video_frames(att, stride=2).collect()
     by_doc: dict = {}
@@ -2519,9 +2480,10 @@ def test_video_frame_sample_matches_decode(spark):
 def test_media_decode_routes_all_four_modalities(spark):
     """The unified router (round-9): doc_id % 4 lands BMP/PNG/WAV/Y4M in
     one binary column; every row must decode to its own modality's fields
-    with the OTHER modalities' fields NULL, a corrupt payload must yield
-    an all-NULL row, and the per-modality values must equal the dedicated
-    kernels' outputs."""
+    with the OTHER modalities' fields NULL, and the per-modality values
+    must equal the vendored parsers' outputs. The one corrupt-payload
+    rule: a payload no codec parses keeps ``n_bytes`` and NULLs the rest;
+    a NULL payload is an all-NULL row."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.audio import (
         parse_wav,
     )
@@ -2576,13 +2538,14 @@ def test_media_decode_routes_all_four_modalities(spark):
             )
             assert r.channels is None and r.energy is None
 
-    # a corrupt payload routes to the all-NULL row, never an abort
+    # a corrupt payload keeps n_bytes and NULLs the rest, never an abort
     corrupt = spark.createDataFrame(
         [(1, bytearray(b"not a container")), (2, None)],
         "doc_id long, payload binary",
     )
     rows = {r.doc_id: r for r in decode_media_meta(corrupt).collect()}
-    assert rows[2].format is None
+    assert rows[2].format is None and rows[2].n_bytes is None
+    assert rows[1].n_bytes == len(b"not a container")
     assert all(
         getattr(rows[1], f) is None
         for f in ("format", "width", "sample_rate", "n_frames", "luma_sum")
@@ -2593,8 +2556,8 @@ def test_media_decode_router_fuzz_sniff_pass_parse_fail(spark):
     """ROUTER-level fuzz (round-10): payloads that PASS the magic-byte
     sniff of each of the four containers but then fail to parse —
     magic-only stubs, truncations at every structural boundary, and
-    header/size-field corruptions — must land in the all-NULL error row,
-    never throw. The per-codec rejection units cover the parsers in
+    header/size-field corruptions — must land in the NULL-metadata error
+    row (``n_bytes`` kept, every decoded field NULL), never throw. The per-codec rejection units cover the parsers in
     isolation; this pins the dispatch path itself: once the router has
     committed to a codec by magic, a downstream parse failure must still
     degrade to NULL metadata (the corpus-scale contract: some fraction
@@ -2655,14 +2618,16 @@ def test_media_decode_router_fuzz_sniff_pass_parse_fail(spark):
     assert len(out) == len(cases)  # one row per payload — nothing threw
     meta_fields = (
         "width", "height", "channels", "pixel_sum", "sample_rate",
-        "n_samples", "energy", "fps_num", "n_frames", "luma_sum",
+        "n_samples", "energy", "fps_num", "fps_den", "n_frames", "luma_sum",
     )
     n_null = 0
     for i, payload, fmt in cases:
         r = out[i]
         if r.format is None:
-            # rejected: the error row must be ALL-null, not half-parsed
+            # rejected: every decoded field NULL, not half-parsed; the
+            # byte length is known and kept
             assert all(getattr(r, f) is None for f in meta_fields), (fmt, i)
+            assert r.n_bytes == len(payload), (fmt, i)
             n_null += 1
         else:
             # a mutation that happens to still parse (e.g. a flipped
@@ -3046,16 +3011,19 @@ def test_video_scene_cuts_matches_plane_formula(spark):
     — the identity the DuckDB oracle relies on."""
     import numpy as np
 
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.multimodal import (
+        attach_media_payload,
+    )
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.video import (
         _y4m_params,
-        attach_video_payload,
         video_scene_cuts,
     )
 
     docs = load_table(spark, SF_SMALL, "documents").filter(F.col("doc_id") < 40)
+    payloads = attach_media_payload(docs, formats=("video/y4m",))
     got = {
         (r.doc_id, r.frame_a): r.sad
-        for r in video_scene_cuts(attach_video_payload(docs)).collect()
+        for r in video_scene_cuts(payloads).collect()
     }
     for did in range(40):
         w, h, _, n = _y4m_params(did)

@@ -5,14 +5,10 @@ import os
 import shutil
 
 import pytest
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from conftest import SF_SMALL
 
-from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.sources.loader import (
-    load_table,
-)
 from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.incremental import (
     dedup_stream,
     run_incremental,
@@ -320,39 +316,6 @@ def test_sliding_windows_overlap(spark, tmp_path):
     out = run_to_memory(agg, "mem_t_sliding", output_mode="complete").collect()
     starts = sorted(str(r.window_start) for r in out)
     assert starts == ["2024-01-01 00:00:00", "2024-01-01 00:30:00"]
-
-
-def test_first_seen_events_stateful(spark):
-    """Streaming first-occurrence dedup through ``applyInPandasWithState``
-    (``first_seen_events_apws``) must equal the batch ROW_NUMBER()=1 twin."""
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.queries import (
-        _stream_events,
-    )
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.incremental import (
-        run_to_memory,
-    )
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.streaming.stateful import (
-        first_seen_events_apws,
-    )
-
-    events = load_table(spark, SF_SMALL, "events").filter("event_type IS NOT NULL")
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    twin = events.withColumn("rn", F.row_number().over(w)).filter("rn = 1")
-    want = {
-        (r.user_id, r.event_type): (r.event_id, r.ts, r.value)
-        for r in twin.collect()
-    }
-    assert want
-
-    out = run_to_memory(
-        first_seen_events_apws(_stream_events(spark, SF_SMALL)),
-        "mem_first_seen_apws",
-    )
-    got = {
-        (r.user_id, r.event_type): (r.first_event_id, r.first_ts, r.first_value)
-        for r in out.collect()
-    }
-    assert got == want
 
 
 def test_cdc_apply_latest_per_key_wins_and_versions_commit(spark, tmp_path):

@@ -448,8 +448,9 @@ def probe_round10_hostiles(spark) -> None:
       cells, but cell counts combine map-side — flat is the pass.
     - media_decode under hostile BYTES: payloads truncated to 40 bytes
       (past every container's magic, so the router commits to a codec
-      and the parse fails) on half the docs — the all-NULL error path
-      must cost no more than clean decoding and never throw.
+      and the parse fails) on half the docs — the NULL-metadata error
+      path (``n_bytes`` kept, every decoded field NULL) must cost no
+      more than clean decoding and never throw.
     """
     from pyspark.sql import functions as F2
 
