@@ -1,4 +1,4 @@
-"""Deterministic surrogate keys.
+"""Deterministic surrogate keys and the portable 60-bit md5 hash.
 
 The reference derives every surrogate key as SHA-256 over '|'-joined natural
 keys so keys are stable across incremental refreshes
@@ -21,3 +21,16 @@ def surrogate_key(*cols) -> Column:
         col = c if isinstance(c, Column) else F.col(c)
         parts.append(col.cast("string"))
     return F.sha2(F.concat(*parts), 256)
+
+
+def md5_int60(col) -> Column:
+    """The first 15 hex digits of ``md5(col)`` as a non-negative BIGINT.
+
+    The one hash family of the hashing operators (simhash token hashes,
+    winnowing gram hashes, bloom positions, count-min cells): DuckDB
+    replays it as ``('0x' || substr(md5(x), 1, 15))::BIGINT``, so every
+    output built on it can be value-checked against a SQL oracle. ``col``
+    is a Column or a column name.
+    """
+    c = col if isinstance(col, Column) else F.col(col)
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")

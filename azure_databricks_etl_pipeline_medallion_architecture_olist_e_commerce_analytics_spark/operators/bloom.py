@@ -11,12 +11,10 @@ false negatives are impossible — that no-false-negative contract is what
 the value oracle pins.
 
 This implementation makes the bloom filter ITSELF value-oracle-able: the
-hash family is md5-derived (``conv(substr(md5(key || '#' || i), 1, 15),
-16, 10) % m_bits`` — 60 bits of the digest, exactly replayable in DuckDB
-as ``('0x' || substr(md5(...), 1, 15))::BIGINT % m_bits``), so an SQL
-oracle can recompute every bit and every pass/fail decision. Production
-would swap in xxhash64 for speed (the same md5-vs-xxhash trade the
-minhash family documents) — the plan shape is identical.
+hash family is :func:`md5_int60` (``md5_int60(key || '#' || i) % m_bits``
+— 60 bits of the digest), which DuckDB replays exactly, so an SQL oracle
+can recompute every bit and every pass/fail decision. That value oracle
+is what pins the no-false-negative contract.
 
 Scale shape: the build side aggregates to ≤ ``m_bits`` DISTINCT
 positions (map-side combined), which collect to the driver BOUNDED BY
@@ -33,11 +31,12 @@ then switch to broadcasting the position table and probing via join —
 
 from __future__ import annotations
 
-from collections.abc import Sequence
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.keys import md5_int60
 
 # Beyond this the filter's word-array literal stops being a reasonable
 # expression tree (16 KiB of longs); larger blooms should broadcast the
@@ -48,16 +47,12 @@ MAX_LITERAL_BITS = 1 << 17
 class BloomFilter(NamedTuple):
     """A built bloom filter WITH the parameters it was built under.
 
-    The build/probe contract (same ``m_bits``, probe ``k_hashes`` ≤
-    build's — violating the first scrambles word indexing, a LARGER
-    probe ``k_hashes`` tests bits the build never set) used to be
-    documentation only: ``bloom_build_positions`` returned a bare
-    position list and ``bloom_prune`` took independent ``m_bits``/
-    ``k_hashes`` arguments, so a mismatched override silently
-    manufactured false negatives. Carrying the parameters WITH the
-    positions makes the mismatch unrepresentable on the normal path —
-    ``bloom_prune`` reads them from here, and explicit overrides that
-    disagree raise instead of lying.
+    The build/probe contract (same ``m_bits`` and ``k_hashes`` — a
+    different ``m_bits`` scrambles word indexing, a LARGER probe
+    ``k_hashes`` tests bits the build never set and manufactures false
+    negatives) holds by construction: ``bloom_prune`` takes only this
+    object and reads both parameters from it. Tests that plant a bitmap
+    by hand construct ``BloomFilter(positions, m_bits, k_hashes)``.
     """
 
     positions: tuple[int, ...]
@@ -67,11 +62,9 @@ class BloomFilter(NamedTuple):
 
 def _position_cols(key_col: str, m_bits: int, k_hashes: int) -> list:
     """The k replayable hash positions of a (string-cast) key."""
+    key = F.col(key_col).cast("string")
     return [
-        F.expr(
-            f"cast(conv(substring(md5(concat(cast({key_col} as string),"
-            f" '#{i}')), 1, 15), 16, 10) as bigint) % {m_bits}"
-        )
+        md5_int60(F.concat(key, F.lit(f"#{i}"))) % m_bits
         for i in range(1, k_hashes + 1)
     ]
 
@@ -113,10 +106,8 @@ def bloom_build_positions(
 
 def bloom_prune(
     probe: DataFrame,
-    bloom: BloomFilter | Sequence[int],
+    bloom: BloomFilter,
     key_col: str,
-    m_bits: int | None = None,
-    k_hashes: int | None = None,
     flag_col: str = "passes_bloom",
 ) -> DataFrame:
     """Tag each probe row with the bloom membership verdict: true iff ALL
@@ -128,35 +119,10 @@ def bloom_prune(
     callers both prune and audit the false-positive rate; filter on the
     flag for the production path.
 
-    ``bloom`` is normally the ``BloomFilter`` returned by
-    ``bloom_build_positions`` — the probe then uses the BUILD's
-    ``m_bits``/``k_hashes`` automatically, and passing either argument
-    here with a DIFFERENT value raises (a larger probe-side ``k_hashes``
-    would test bits the build never set and silently manufacture FALSE
-    NEGATIVES, the one failure mode the bloom contract forbids; a
-    mismatched ``m_bits`` scrambles word indexing). A bare position
-    sequence is the low-level escape hatch (hand-planted bitmaps in
-    tests); that path requires the parameters explicitly and defaults to
-    (8192, 2) like the builder."""
-    if isinstance(bloom, BloomFilter):
-        if m_bits is not None and m_bits != bloom.m_bits:
-            raise ValueError(
-                f"probe m_bits {m_bits} != build m_bits {bloom.m_bits}:"
-                " the bloom carries its build parameters; drop the override"
-            )
-        if k_hashes is not None and k_hashes != bloom.k_hashes:
-            raise ValueError(
-                f"probe k_hashes {k_hashes} != build k_hashes"
-                f" {bloom.k_hashes}: the bloom carries its build"
-                " parameters; drop the override"
-            )
-        positions = bloom.positions
-        m_bits = bloom.m_bits
-        k_hashes = bloom.k_hashes
-    else:
-        positions = bloom
-        m_bits = 8192 if m_bits is None else m_bits
-        k_hashes = 2 if k_hashes is None else k_hashes
+    ``bloom`` is the ``BloomFilter`` from ``bloom_build_positions``; the
+    probe uses its ``m_bits``/``k_hashes``, so build and probe cannot
+    disagree."""
+    positions, m_bits, k_hashes = bloom
     if m_bits % 64 or m_bits < 64 or m_bits > MAX_LITERAL_BITS:
         raise ValueError(f"invalid m_bits {m_bits}")
     if k_hashes < 1:

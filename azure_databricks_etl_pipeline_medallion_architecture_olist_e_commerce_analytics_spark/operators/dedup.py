@@ -19,8 +19,11 @@ Scale design notes (100 TB):
 - MinHash LSH: cost is O(docs × shingles × hashes) map-side plus a shuffle
   keyed on (band_id, band_hash) — candidate pairs only materialize within a
   bucket, never the O(n²) cross join.
-- SimHash: 64-bit fingerprint map-side, then a 4×16-bit banded self-join
+- SimHash: 60-bit fingerprint map-side, then a 4×15-bit banded self-join
   (pigeonhole: hamming ≤ 3 ⇒ at least one of 4 bands identical).
+- The LSH hash family is md5 (the minhash signature, the simhash token
+  hashes): DuckDB replays md5, so the whole near-dup output is
+  value-checked against a SQL oracle.
 - Brute-force Jaccard is provided as the small-scale oracle-checkable
   baseline; the banded variants are the scale path.
 """
@@ -30,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.keys import md5_int60
 from ..sources.loader import spread_partitions
 
 # Vocabulary cap for the dictionary-bitmap verify representation in
@@ -361,36 +365,27 @@ def jaccard_prefix_join(
     return cross.unionByName(within)
 
 
-def minhash_signature(shingles, num_hashes: int = 64, family: str = "murmur3"):
+def minhash_signature(shingles, num_hashes: int = 64):
     """MinHash signature array over a shingle-array column/expression.
 
-    ``sig[h] = min over shingles of hash(shingle, seed=h)`` — one pass,
-    pure codegen (transform + array_min), no UDF. Pass a *column reference*
-    to an already-projected shingle array (not the raw shingle expression):
-    the lambda evaluates its input once per hash seed, and CollapseProject
-    keeps a separate projection for the non-cheap shingle construction, so
-    shingling runs once per document instead of ``num_hashes`` times.
-
-    Two hash families:
-    - ``murmur3`` (default): seeded 32-bit murmur — the fast scale path.
-    - ``md5``: ``min`` over the *hex strings* ``md5(seed || ':' || shingle)``
-      (lexicographic min of a uniform hash is a valid min-hash family).
-      ~2-3× the hash cost, but byte-identical in any engine with md5 —
-      which makes the whole LSH output value-verifiable against a SQL
-      oracle (DuckDB replicates the signature exactly).
+    ``sig[h] = min over shingles of md5(h || ':' || shingle)`` as *hex
+    strings* (the lexicographic min of a uniform hash is a valid min-hash
+    family) — one pass, pure codegen (transform + array_min), no UDF.
+    md5 is byte-identical in DuckDB, so the whole LSH output is
+    value-verifiable against a SQL oracle that replays the signature.
+    Pass a *column reference* to an already-projected shingle array (not
+    the raw shingle expression): the lambda evaluates its input once per
+    hash seed, and CollapseProject keeps a separate projection for the
+    non-cheap shingle construction, so shingling runs once per document
+    instead of ``num_hashes`` times.
     """
-    if family == "md5":
-        return F.transform(
-            F.sequence(F.lit(1), F.lit(num_hashes)),
-            lambda s: F.array_min(
-                F.transform(
-                    shingles, lambda x: F.md5(F.concat_ws(":", s.cast("string"), x))
-                )
-            ),
-        )
     return F.transform(
         F.sequence(F.lit(1), F.lit(num_hashes)),
-        lambda s: F.array_min(F.transform(shingles, lambda x: F.hash(x, s))),
+        lambda s: F.array_min(
+            F.transform(
+                shingles, lambda x: F.md5(F.concat_ws(":", s.cast("string"), x))
+            )
+        ),
     )
 
 
@@ -484,7 +479,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 60,
     bands: int = 10,
     ngram: int = 1,
-    hash_family: str = "murmur3",
     bucket_cap: int | None = 8192,
 ) -> DataFrame:
     """MinHash + LSH near-dup pairs with exact-Jaccard verification.
@@ -632,7 +626,7 @@ def minhash_lsh_pairs(
                 "rid",
                 F.transform(set_col, lambda x: tid[x]).alias("_ids"),
                 F.size(set_col).alias("n"),
-                minhash_signature(F.col(set_col), num_hashes, hash_family).alias("sig"),
+                minhash_signature(F.col(set_col), num_hashes).alias("sig"),
             )
             .select("rid", F.array(*words).alias("hs"), "n", "sig")
         )
@@ -641,7 +635,7 @@ def minhash_lsh_pairs(
             "rid",
             F.transform(set_col, lambda x: F.xxhash64(x)).alias("hs"),
             F.size(set_col).alias("n"),
-            minhash_signature(F.col(set_col), num_hashes, hash_family).alias("sig"),
+            minhash_signature(F.col(set_col), num_hashes).alias("sig"),
         )
     prepared = prepared.persist()
     band_hashes = [
@@ -754,28 +748,25 @@ def minhash_lsh_pairs(
     return identical.unionByName(expanded)
 
 
-def token_hashes(tokens_field: str, family: str = "xxhash64"):
-    """One 64-bit hash per token → array<bigint> (project this BEFORE simhash).
+# SimHash fingerprint width: the 60 bits of md5_int60, banded 4×15.
+SIMHASH_BITS = 60
 
-    Materializing the hash array in its own projection means the 64 bit-sum
+
+def token_hashes(tokens_field: str):
+    """One :func:`md5_int60` hash per token → array<bigint> (project this
+    BEFORE simhash).
+
+    Materializing the hash array in its own projection means the 60 bit-sum
     passes of :func:`simhash_expr` read a cheap attribute instead of
-    re-hashing every token per bit position.
-
-    ``family="md5"`` derives a 60-bit integer from the md5 hex digest
-    (``conv(substr(md5(x),1,15),16,10)``) — slower than xxhash64 but
-    engine-portable, so the simhash fingerprints (and therefore the whole
-    near-dup output) can be value-verified against a SQL oracle.
+    re-hashing every token per bit position. md5 keeps the fingerprints
+    (and therefore the whole near-dup output) replayable in DuckDB.
     """
-    if family == "md5":
-        return F.expr(
-            f"transform({tokens_field},"
-            " x -> cast(conv(substr(md5(x), 1, 15), 16, 10) as bigint))"
-        )
-    return F.expr(f"transform({tokens_field}, x -> xxhash64(x))")
+    return F.transform(F.col(tokens_field), md5_int60)
 
 
-def simhash_expr(hashes_field: str, bits: int = 64):
-    """SimHash fingerprint as BIGINT over a pre-hashed array<bigint> column.
+def simhash_expr(hashes_field: str):
+    """60-bit SimHash fingerprint as BIGINT over a pre-hashed array<bigint>
+    column of :func:`token_hashes`.
 
     Per bit position k: sum of ±1 over token hashes (+1 if bit k set);
     sign of the sum → bit k of the fingerprint. Written as a SQL
@@ -786,10 +777,11 @@ def simhash_expr(hashes_field: str, bits: int = 64):
     codegen): the hash array appears exactly once, as the *input* of the
     outer aggregate, so even after CollapseProject inlines the
     :func:`token_hashes` projection each token is hashed exactly once. (A
-    k-outer formulation — 64 passes, each referencing the hash array inside
+    k-outer formulation — 60 passes, each referencing the hash array inside
     the bit lambda — gets the hash transform inlined into every pass and
-    re-hashes each token 64×, ~3× slower end-to-end.)
+    re-hashes each token 60×, ~3× slower end-to-end.)
     """
+    bits = SIMHASH_BITS
     n = bits - 1
     return F.expr(
         f"""
@@ -811,7 +803,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """SimHash near-dup pairs via 4-band banded self-join + bit_count verify.
 
@@ -819,18 +810,16 @@ def simhash_pairs(
     identical, so banding loses no true pairs while keeping the join an
     equi-shuffle. At larger ``max_hamming`` the banded join is the standard
     recall/cost trade: only pairs sharing one exact band are candidates.
-
-    ``hash_family="md5"`` switches to 60-bit md5-derived token hashes
-    (4×15-bit bands) whose fingerprints a SQL oracle reproduces exactly.
+    Fingerprints are 60 bits of md5-derived token hashes (4×15-bit bands),
+    which a SQL oracle reproduces exactly.
     """
-    bits = 60 if hash_family == "md5" else 64
-    band_w = bits // 4
+    band_w = SIMHASH_BITS // 4
     mask = (1 << band_w) - 1
     base = (
         spread_partitions(df)
         .select(F.col(id_col).alias("id"), tokens_col(text_col).alias("__toks"))
-        .select("id", token_hashes("__toks", hash_family).alias("__hs"))
-        .select("id", simhash_expr("__hs", bits).alias("fp"))
+        .select("id", token_hashes("__toks").alias("__hs"))
+        .select("id", simhash_expr("__hs").alias("fp"))
     )
     banded = base.select(
         "id",

@@ -658,8 +658,6 @@ def kcore_peel(
     src: str = "src",
     dst: str = "dst",
     num_nodes: int | None = None,
-    symmetric: bool = True,
-    until_fixpoint: bool = False,
 ) -> DataFrame:
     """Fixed-round k-core peeling (Matula & Beck 1983; the Seidman 1983
     k-core) — the density primitive the graph family's other questions
@@ -673,42 +671,26 @@ def kcore_peel(
     Synchronous peeling, fully deterministic: round r removes EVERY
     surviving node whose degree in the current surviving subgraph is
     < k (simultaneously — no within-round cascade), then restricts the
-    edge list to survivors. Default mode is fixed ``rounds`` (no
+    edge list to survivors. Always exactly ``rounds`` rounds (no
     convergence probe), so the oracle is the same rounds unrolled as
-    chained SQL CTEs — exact integer equality. With enough rounds this
-    converges to the true k-core; a fixed budget yields the standard
+    chained SQL CTEs — exact integer equality; a data-dependent round
+    count is one a static SQL oracle cannot unroll. With enough rounds
+    this converges to the true k-core; a fixed budget yields the standard
     bounded-iteration approximation from the outside in (every removed
     node is provably outside the k-core; survivors are "not yet
     peeled").
-
-    ``until_fixpoint=True`` makes ``rounds`` a max-rounds CAP and
-    early-exits the first time a round removes zero nodes — at that
-    point the survivors ARE the exact Seidman k-core (synchronous
-    peeling is monotone: no removals now means no removals ever after),
-    so peeled_round=0 rows are no longer an approximation when
-    convergence happens under the cap. Cost of the probe: one
-    O(1)-driver-row count per round against the already-checkpointed
-    O(V) evaluation (reading materialized blocks — no recompute). The
-    executed round count becomes data-dependent, which is exactly why
-    the value-oracled catalog query runs the fixed-rounds mode (a
-    static SQL oracle cannot unroll a data-dependent depth); fixpoint
-    mode is pinned by unit against a run-to-convergence reference.
 
     Returns one row per node: (node, peeled_round, degree) where
     peeled_round = r ≥ 1 when the node fell in round r (degree = its
     degree in the round-(r-1) surviving subgraph, the value that killed
     it) and peeled_round = 0 for survivors (degree = their degree at the
-    final evaluation). ``symmetric=True`` (default) is the caller's
-    assertion that every node appears as a source — the symmetric
-    every-node-appears-as-src edge list (the ``_trade_edges`` /
-    ``label_propagation`` contract; mirrors
-    ``pagerank_integer(symmetric=True)``) — letting round 1's degree
-    keys double as the node table. Pass ``symmetric=False`` for a
-    directed / non-symmetrized edge list: the node set is then built
-    from distinct(src ∪ dst) (one extra O(E) pass), degree counts
-    src-side edges only, and dst-only nodes correctly appear with
-    degree 0 (peeled round 1 for k ≥ 1) instead of silently vanishing
-    from the output. Callers pass ``edges`` already materialized.
+    final evaluation). ``edges`` must be symmetric — every edge listed
+    in both directions, so every node appears as a source (the
+    ``_trade_edges`` / ``label_propagation`` contract; mirrors
+    ``pagerank_integer(symmetric=True)``) — which lets round 1's degree
+    keys double as the node table. A node that appears only as a
+    destination is absent from the output. Callers pass ``edges``
+    already materialized.
 
     Scale: each round is ONE map-side-combined hash aggregate (degree by
     src over the surviving edge list) plus TWO left-semi equi-joins
@@ -738,7 +720,7 @@ def kcore_peel(
         # branch would replay every prior round's degree aggregate and
         # the plan grows O(rounds²) in shuffles (observed: 141 exchanges
         # at rounds=3 lazy vs ~a dozen materialized)
-        if r == 1 and symmetric:
+        if r == 1:
             # under the symmetric contract every node appears as a source
             # with >= 1 edge, so round 1's degree keys ARE the node set —
             # the deg aggregate doubles as the node table (the
@@ -747,28 +729,6 @@ def kcore_peel(
             evaluated = deg.select(
                 F.col("__s").alias("node"), F.col("__deg").alias("degree")
             ).localCheckpoint()
-            n = num_nodes if num_nodes is not None else evaluated.count()
-            small = n <= BROADCAST_NODE_LIMIT
-        elif r == 1:
-            # non-symmetric input: the node set must come from BOTH edge
-            # endpoints (one extra O(E) union-distinct — the cost of not
-            # asserting the contract), so dst-only nodes surface with
-            # degree 0 rather than dropping out of the output
-            nodes = (
-                cur.select(F.col("__s").alias("node"))
-                .union(cur.select(F.col("__d").alias("node")))
-                .distinct()
-            )
-            evaluated = (
-                nodes.join(deg, nodes["node"] == deg["__s"], "left")
-                .select(
-                    "node",
-                    F.coalesce(F.col("__deg"), F.lit(0).cast("long")).alias(
-                        "degree"
-                    ),
-                )
-                .localCheckpoint()
-            )
             n = num_nodes if num_nodes is not None else evaluated.count()
             small = n <= BROADCAST_NODE_LIMIT
         else:
@@ -790,19 +750,6 @@ def kcore_peel(
                 .localCheckpoint()
             )
         fell = evaluated.filter(F.col("degree") < k)
-        if until_fixpoint and fell.limit(1).count() == 0:
-            # fixpoint reached: zero removals this round means zero
-            # removals every later round (peeling is monotone), so the
-            # survivors are the EXACT k-core. The probe is a limit(1)
-            # count over the just-checkpointed O(V) evaluation — one
-            # O(1)-row driver job per round, no recompute. Skip the
-            # empty peeled frame; emit survivors and stop.
-            peeled.append(
-                evaluated.select(
-                    "node", F.lit(0).cast("int").alias("peeled_round"), "degree"
-                )
-            )
-            break
         peeled.append(
             fell.select(
                 "node", F.lit(r).cast("int").alias("peeled_round"), "degree"

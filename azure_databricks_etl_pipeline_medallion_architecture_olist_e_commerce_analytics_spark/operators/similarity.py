@@ -8,8 +8,8 @@ Scale design (100 TB / billions of vectors):
 - Brute force is O(n·m) pairs: usable when one side is small (a query batch
   that rides the kernel's closure to every corpus partition); never
   self-join a full corpus.
-- IVF: k-means-style coarse quantizer (here: deterministic first-C centroids
-  for reproducibility) → assign each vector to nearest centroid map-side
+- IVF: coarse quantizer (deterministic first-C centroids by id, so a SQL
+  oracle replays the cells) → assign each vector to nearest centroid map-side
   (broadcast centroids) → queries probe only ``nprobe`` buckets → candidate
   set shrinks by ~C/nprobe. The bucket join is an equi-shuffle on
   ``centroid_id``, not a cross join.
@@ -70,10 +70,6 @@ def norm_col(a):
             lambda acc, v: acc + v,
         )
     )
-
-
-def cosine_col(a, b):
-    return dot_col(a, b) / (norm_col(a) * norm_col(b))
 
 
 def brute_force_topk(
@@ -213,66 +209,6 @@ def brute_force_topk(
     )
 
 
-def kmeans_centroids(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 16,
-    iterations: int = 3,
-) -> DataFrame:
-    """Deterministic distributed Lloyd iterations for IVF coarse centroids.
-
-    Seeds = the first ``k`` vectors by id; each iteration assigns every vector
-    to its nearest centroid (broadcast cross join — k rows broadcast, one pass
-    over the data) and recomputes centroids as per-cluster means (one shuffle
-    keyed on centroid_id, map-side partial aggregation via
-    ``array-position-wise`` sums). Driver holds only k centroid vectors per
-    iteration — never data rows — so the loop scales to any corpus size.
-    """
-    spark = df.sparkSession
-    dims = df.select(F.size(vec_col).alias("d")).first().d
-    seeds = df.orderBy(id_col).limit(k).select(vec_col).collect()
-    cents: list[tuple[int, list[float]]] = [
-        (i + 1, [float(x) for x in row[0]]) for i, row in enumerate(seeds)
-    ]
-    points = df.select(F.col(vec_col).alias("v"))
-    for _ in range(iterations):
-        # centroids are a k×dims literal (the "model"); assignment is a pure
-        # projection — greatest (sim, -cid) struct picks the nearest centroid
-        # deterministically with zero shuffle and zero join.
-        candidates = [
-            F.struct(
-                cosine_col(F.col("v"), F.expr(sql_array_lit(vec))).alias("s"),
-                F.lit(-cid).alias("n"),
-            )
-            for cid, vec in cents
-        ]
-        assigned = points.select(
-            (-F.greatest(*candidates).getField("n")).alias("centroid_id"), "v"
-        )
-        # per-cluster mean: ONE narrow shuffle keyed on centroid_id with
-        # map-side partial sums; k result rows come back to the driver.
-        rows = (
-            assigned.groupBy("centroid_id")
-            .agg(
-                *[
-                    F.sum(F.element_at("v", i + 1)).alias(f"s{i}")
-                    for i in range(dims)
-                ],
-                F.count(F.lit(1)).alias("n"),
-            )
-            .collect()
-        )
-        cents = sorted(
-            (r.centroid_id, [float(r[f"s{i}"] / r.n) for i in range(dims)])
-            for r in rows
-        )
-    return spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents],
-        "centroid_id int, centroid_vec array<float>",
-    )
-
-
 def _fold_norm(vec) -> float | None:
     """Driver-side replay of ``norm_col`` (left-fold sum of squares, then
     sqrt) — bit-identical to the engine fold: Python floats ARE IEEE-754
@@ -296,7 +232,6 @@ def ivf_assign_ranked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_centroids: int = 16,
-    kmeans_iterations: int = 0,
     centroids: DataFrame | None = None,
     max_rank: int = 1,
 ) -> DataFrame:
@@ -327,35 +262,19 @@ def ivf_assign_ranked(
     Python doubles (bit-identical); the row vector's norm is computed
     once per row instead of once per (row, centroid) pair.
 
-    ``max_rank=1`` is the classic cell assignment (:func:`ivf_assign`);
+    ``max_rank=1`` is the classic single-cell assignment;
     ``max_rank=nprobe`` is the multi-cell QUERY-side probe list — the
     recall knob of a production IVF index.
 
-    ``kmeans_iterations=0`` uses the first ``n_centroids`` vectors by id
-    as centroids — deterministic and cheap; ``> 0`` refines them with
-    distributed Lloyd iterations (:func:`kmeans_centroids`). A caller who
-    already holds the seed rows passes ``centroids`` — a
-    (centroid_id, centroid_vec) frame, still accepted and collected here
-    (bounded by contract).
+    The centroids are the first ``n_centroids`` vectors by id —
+    deterministic and cheap. A caller who already holds the seed rows
+    passes ``centroids`` — a (centroid_id, centroid_vec) frame, still
+    accepted and collected here (bounded by contract).
     """
     if centroids is not None:
-        if kmeans_iterations > 0:
-            raise ValueError(
-                "pass either a pre-built `centroids` frame OR "
-                "kmeans_iterations>0, not both — refining caller-supplied "
-                "centroids here would silently retrain the caller's model"
-            )
         cents = [
             (int(r["centroid_id"]), r["centroid_vec"])
             for r in centroids.collect()
-        ]
-        cents.sort(key=lambda t: t[0])
-    elif kmeans_iterations > 0:
-        cents = [
-            (int(r["centroid_id"]), r["centroid_vec"])
-            for r in kmeans_centroids(
-                df, vec_col, id_col, n_centroids, kmeans_iterations
-            ).collect()
         ]
         cents.sort(key=lambda t: t[0])
     else:
@@ -411,21 +330,6 @@ def ivf_assign_ranked(
     )
 
 
-def ivf_assign(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    kmeans_iterations: int = 0,
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """Assign each vector to its single nearest coarse centroid (broadcast
-    join) — :func:`ivf_assign_ranked` at ``max_rank=1``."""
-    return ivf_assign_ranked(
-        df, id_col, vec_col, n_centroids, kmeans_iterations, centroids, max_rank=1
-    ).drop("probe_rank")
-
-
 def ivf_topk(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -433,7 +337,6 @@ def ivf_topk(
     k: int = 3,
     n_centroids: int = 16,
     query_filter=None,
-    kmeans_iterations: int = 0,
     nprobe: int = 1,
     nprobes=None,
 ) -> DataFrame:
@@ -458,16 +361,8 @@ def ivf_topk(
     candidate join stays an equi-join on ``centroid_id`` — the
     100 TB-safe shape at every nprobe.
     """
-    if nprobes is not None:
-        sweep = _validate_nprobes(nprobes, n_centroids)
-        max_np = max(sweep)
-    elif not 1 <= nprobe <= n_centroids:
-        raise ValueError(f"nprobe must be in [1, n_centroids], got {nprobe}")
-    else:
-        sweep, max_np = None, nprobe
-    ranked = ivf_assign_ranked(
-        df, id_col, vec_col, n_centroids, kmeans_iterations, max_rank=max_np
-    )
+    sweep, max_np = _validate_nprobes(nprobe, nprobes, n_centroids)
+    ranked = ivf_assign_ranked(df, id_col, vec_col, n_centroids, max_rank=max_np)
     corpus = ranked.filter(F.col("probe_rank") == 1).select(
         F.col("centroid_id"),
         F.col(id_col).alias("nbr_id"),
@@ -510,15 +405,15 @@ def srp_band_keys(
     vec_col: str = "embedding",
     bits_per_band: int = 8,
     num_bands: int = 16,
-    seed: int = 42,
-    plane_family: str = "gaussian",
 ) -> DataFrame:
     """Sign-random-projection band keys per vector (Arrow/BLAS map-side).
 
-    Each vector is projected onto ``bits_per_band * num_bands`` fixed
-    hyperplanes (seeded Gaussian — regenerated identically inside every Arrow
-    batch, so no broadcast and no driver round-trip) and the sign bits are
-    packed per band into an int64 key. P(sign match) for a pair at cosine
+    Each vector is projected onto ``bits_per_band * num_bands`` fixed ±1
+    hyperplanes (entry (d, j) is the low bit of the first hex digit of
+    ``md5(f"{j}:{d}")`` — the md5 family the other hashing operators use,
+    rebuilt identically inside every Arrow batch, so no broadcast and no
+    driver round-trip) and the sign bits are packed per band into an
+    int64 key. P(sign match) for a pair at cosine
     ``s`` is ``1 − arccos(s)/π``, so banding gives the classic LSH S-curve
     over *angular* similarity. One ``V @ P`` matmul per batch — per-batch
     BLAS, never per-row Python.
@@ -537,27 +432,20 @@ def srp_band_keys(
                 continue
             V = np.array([list(v) for v in pdf["_vec"]], dtype=np.float64)
             if planes is None:
-                if plane_family == "md5":
-                    import hashlib
+                import hashlib
 
-                    planes = np.array(
+                planes = np.array(
+                    [
                         [
-                            [
-                                1.0
-                                if int(
-                                    hashlib.md5(f"{j}:{d}".encode()).hexdigest()[0], 16
-                                )
-                                & 1
-                                else -1.0
-                                for j in range(nbits)
-                            ]
-                            for d in range(V.shape[1])
+                            1.0
+                            if int(hashlib.md5(f"{j}:{d}".encode()).hexdigest()[0], 16)
+                            & 1
+                            else -1.0
+                            for j in range(nbits)
                         ]
-                    )
-                else:
-                    planes = np.random.default_rng(seed).standard_normal(
-                        (V.shape[1], nbits)
-                    )
+                        for d in range(V.shape[1])
+                    ]
+                )
             B = (V @ planes) > 0
             out = {"id": pdf["_id"].to_numpy(dtype=np.int64)}
             for k in range(num_bands):
@@ -583,9 +471,7 @@ def srp_lsh_dup_pairs(
     threshold: float = 0.9,
     bits_per_band: int = 8,
     num_bands: int = 16,
-    seed: int = 42,
     query_filter=None,
-    plane_family: str = "gaussian",
     bucket_cap: int | None = 8192,
 ) -> DataFrame:
     """Embedding near-duplicate pairs via SRP-LSH buckets + exact verify.
@@ -612,7 +498,7 @@ def srp_lsh_dup_pairs(
     t = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     if query_filter is not None:
         t = t.filter(query_filter)
-    keys = srp_band_keys(t, "id", "v", bits_per_band, num_bands, seed, plane_family)
+    keys = srp_band_keys(t, "id", "v", bits_per_band, num_bands)
     member = F.struct(F.col("id"), *[F.col(f"h{k}") for k in range(num_bands)])
     banded = keys.select(
         member.alias("mb"),
@@ -667,8 +553,8 @@ def embedding_dup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (exact, bounded input).
 
-    The scale path reuses :func:`ivf_assign`: near-dups almost always share a
-    bucket, so dedup becomes per-bucket pair generation.
+    The scale path is :func:`srp_lsh_dup_pairs`: near-dups almost always
+    share an LSH bucket, so dedup becomes per-bucket pair generation.
     """
     t = df.select(
         F.col(id_col).alias("id"),
@@ -709,8 +595,8 @@ def semantic_prune(
 
     Scale notes: the within-label self-join shuffles both sides on the
     cluster key — at production scale the clusterer emits k >> cores
-    clusters so the per-key groups stay small (this is the same contract as
-    the k-means IVF path in ivf_topk); the component step is O(log²) rounds
+    clusters so the per-key groups stay small (the same contract as the
+    IVF cells in ivf_topk); the component step is O(log²) rounds
     over the dup edges only, which are a tiny fraction of the corpus.
     """
     from .graph import dedup_clusters
@@ -851,16 +737,23 @@ def _rank_topk(pairs: DataFrame, score_col: str, k: int) -> DataFrame:
     )
 
 
-def _validate_nprobes(nprobes, n_centroids: int) -> tuple:
-    """Shared validation for the nprobe-sweep parameter: a non-empty
-    tuple of ints, each in [1, n_centroids]."""
+def _validate_nprobes(nprobe: int, nprobes, n_centroids: int) -> tuple:
+    """The IVF operators' shared probe-count check. Returns
+    ``(sweep, max_np)``: with ``nprobes`` set, ``sweep`` is it as a
+    non-empty tuple of ints in [1, n_centroids] and ``max_np`` its max;
+    otherwise ``sweep`` is None and ``max_np`` is ``nprobe``, which must
+    lie in [1, n_centroids]."""
+    if nprobes is None:
+        if not 1 <= nprobe <= n_centroids:
+            raise ValueError(f"nprobe must be in [1, n_centroids], got {nprobe}")
+        return None, nprobe
     sweep = tuple(nprobes)
     if not sweep or any(not 1 <= p <= n_centroids for p in sweep):
         raise ValueError(
             f"nprobes must be non-empty with every value in "
             f"[1, n_centroids]; got {nprobes}"
         )
-    return sweep
+    return sweep, max(sweep)
 
 
 def _rank_topk_sweep(
@@ -1163,13 +1056,7 @@ def ivfpq_residual_topk(
     """
     import math
 
-    if nprobes is not None:
-        sweep = _validate_nprobes(nprobes, n_centroids)
-        nprobe = max(sweep)
-    elif not 1 <= nprobe <= n_centroids:
-        raise ValueError(f"nprobe must be in [1, n_centroids], got {nprobe}")
-    else:
-        sweep = None
+    sweep, nprobe = _validate_nprobes(nprobe, nprobes, n_centroids)
     d_sub = dim // m_subspaces
     df = _valid_vectors(df, vec_col, dim)
     # ONE seed collect covers both roles: positions 1..n_centroids are the
@@ -1350,13 +1237,7 @@ def ivfpq_topk(
     the IVF tier entirely — the result must equal :func:`pq_topk` on the
     same corpus (the composition's equivalence unit test).
     """
-    if nprobes is not None:
-        sweep = _validate_nprobes(nprobes, n_centroids)
-        nprobe = max(sweep)
-    elif not 1 <= nprobe <= n_centroids:
-        raise ValueError(f"nprobe must be in [1, n_centroids], got {nprobe}")
-    else:
-        sweep = None
+    sweep, nprobe = _validate_nprobes(nprobe, nprobes, n_centroids)
     d_sub = dim // m_subspaces
     df = _valid_vectors(df, vec_col, dim)
     seeds, n_codes = _pq_seeds(df, id_col, vec_col, n_codes)
@@ -1371,7 +1252,7 @@ def ivfpq_topk(
     codes_sql, luts_sql = _pq_double_exprs(m_subspaces, n_codes, d_sub)
 
     # One seed scan serves both tiers: the collected PQ seed rows ARE the
-    # first-n-by-id vectors ivf_assign would top-k-scan the corpus for
+    # first-n-by-id vectors ivf_assign_ranked would top-k-scan the corpus for
     # again (seeds are id-ordered, centroid_id = 1-based list position —
     # the exact row_number-over-id contract), so the coarse centroids
     # rebuild driver-side whenever enough seeds exist. Values are bit-

@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.keys import md5_int60
+
 
 class CountMinSketch(NamedTuple):
     """A built count-min sketch WITH the parameters it was built under —
@@ -51,15 +53,11 @@ class CountMinSketch(NamedTuple):
     width: int
 
 
-def _cms_cell_expr(key_expr: str, row_i: int, width: int):
-    """The replayable cell hash of one sketch row: 60 md5 bits mod width
-    (the bloom filter's engine-portable hash family — DuckDB replays it
-    as ``('0x' || substr(md5(key || '#i'), 1, 15))::BIGINT % width``).
-    Production swaps in xxhash64(key, seed=i); identical plan shape."""
-    return F.expr(
-        f"cast(conv(substring(md5(concat({key_expr}, '#{row_i}')), 1, 15),"
-        f" 16, 10) as bigint) % {width}"
-    )
+def _cms_cell_expr(key_col: str, row_i: int, width: int):
+    """The replayable cell hash of one sketch row:
+    ``md5_int60(key || '#i') % width`` (the bloom filter's hash family).
+    md5 because DuckDB replays it, so the oracle recomputes every cell."""
+    return md5_int60(F.concat(F.col(key_col), F.lit(f"#{row_i}"))) % width
 
 
 def cms_sketch(

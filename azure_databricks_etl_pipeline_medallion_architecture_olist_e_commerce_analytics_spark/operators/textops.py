@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.keys import md5_int60
 from ..sources.loader import spread_partitions
 
 from .dedup import fingerprint_col, tokens_col
@@ -193,7 +194,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 5,
     w: int = 4,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Winnowing document fingerprints (rolling k-gram hash + window-min).
 
@@ -212,17 +212,9 @@ def winnow_fingerprints(
 
     Documents shorter than k tokens fingerprint their whole token array;
     fewer than w grams selects the global minimum (standard winnowing edge
-    behavior).
+    behavior). Gram hashes are :func:`md5_int60`, which DuckDB replays, so
+    the selected fingerprints are value-verified against a SQL oracle.
     """
-    if hash_family == "md5":
-        # 60-bit md5-derived gram hash — engine-portable (value-verifiable
-        # against a SQL oracle); xxhash64 is the fast default at scale.
-        def hash_of(col):
-            return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-    else:
-        def hash_of(col):
-            return F.xxhash64(col)
-
     toks = all_tokens_col(text_col)
     prepared = spread_partitions(df).select(
         F.col(id_col), toks.alias("_toks"), F.size(toks).alias("_n")
@@ -231,9 +223,9 @@ def winnow_fingerprints(
         F.col("_n") >= k,
         F.transform(
             F.sequence(F.lit(1), F.col("_n") - (k - 1)),
-            lambda i: hash_of(F.array_join(F.slice("_toks", i, k), " ")),
+            lambda i: md5_int60(F.array_join(F.slice("_toks", i, k), " ")),
         ),
-    ).otherwise(F.array(hash_of(F.array_join("_toks", " "))))
+    ).otherwise(F.array(md5_int60(F.array_join("_toks", " "))))
     hashed = prepared.select(id_col, grams.alias("_gh"), F.size(grams).alias("_g"))
     selected = F.when(
         F.col("_g") >= w,
@@ -495,7 +487,6 @@ def containment_pairs(
     w: int = 4,
     threshold_ppm: int = 600_000,
     max_df: int = 256,
-    hash_family: str = "xxhash64",
 ) -> DataFrame:
     """Directional near-containment pairs (doc A mostly inside doc B) via
     the winnowing fingerprint index — the superset/subset dedup pass
@@ -517,9 +508,7 @@ def containment_pairs(
     never biases the ratio, only recall on boilerplate. The shared-count
     aggregate map-side combines on (id_a, id_b).
     """
-    fps = winnow_fingerprints(
-        df, id_col=id_col, text_col=text_col, k=k, w=w, hash_family=hash_family
-    )
+    fps = winnow_fingerprints(df, id_col=id_col, text_col=text_col, k=k, w=w)
     df_counts = fps.groupBy("fingerprint").agg(F.count(F.lit(1)).alias("fp_df"))
     pruned = fps.join(
         df_counts.filter(F.col("fp_df") <= max_df).select("fingerprint"),

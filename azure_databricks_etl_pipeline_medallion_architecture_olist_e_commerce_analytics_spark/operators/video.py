@@ -15,10 +15,10 @@ with the decimal digit counts). Compressed video (H.264/VP9/AV1) has no
 vendored codec, like JPEG and MP3.
 
 Scale notes (100 TB): payloads ride in parquet row groups; both kernels
-here are ``mapInPandas`` over Arrow batches walking the frames through
-one generator (:func:`_y4m_luma_planes`) with per-frame numpy sums — the
-fan-out emits O(n_frames) rows per payload and nothing touches per-pixel
-Python.
+here are ``mapInPandas`` over Arrow batches that read each payload's
+header once and walk its frames once (:func:`_y4m_frames`) with
+per-frame numpy sums — the fan-out emits O(n_frames) rows per payload and
+nothing touches per-pixel Python.
 """
 
 from __future__ import annotations
@@ -69,26 +69,19 @@ def encode_y4m(did: int) -> bytes:
     return b"".join(parts)
 
 
-def parse_y4m(payload) -> tuple:
-    """VENDORED pure-stdlib Y4M parser: (width, height, fps_num, fps_den,
-    n_frames, luma_sum) — the total Σ of all frames' luma bytes as int64.
-    Handles any token order on the parameter line, FRAME lines carrying
-    their own parameters (``FRAME<params>\\n`` is legal Y4M), and C420
-    colorspace variants (C420, C420jpeg, C420mpeg2, C420paldv; absent C
-    defaults to 420 per the spec). Odd dimensions under 420 subsampling,
-    non-420 colorspaces, truncated frames, or a malformed header yield
-    all-None — NULL metadata, never a job abort."""
-    import numpy as np
-
-    none6 = (None, None, None, None, None, None)
+def _y4m_header(buf: bytes) -> tuple | None:
+    """The parameter line of a Y4M payload: ``(width, height, fps_num,
+    fps_den)``, or None for a malformed line, odd dimensions (420
+    subsampling needs even ones) or a non-420 colorspace. Handles any
+    token order and the C420 variants (C420, C420jpeg, C420mpeg2,
+    C420paldv; absent C defaults to 420 per the spec)."""
+    nl = buf.find(b"\n")
+    if nl < 0 or not buf.startswith(Y4M_MAGIC + b" "):
+        return None
+    w = h = None
+    num, den = None, None
+    cspace = "420"
     try:
-        buf = bytes(payload)
-        nl = buf.find(b"\n")
-        if nl < 0 or not buf.startswith(Y4M_MAGIC + b" "):
-            return none6
-        w = h = None
-        num, den = None, None
-        cspace = "420"
         for tok in buf[len(Y4M_MAGIC) + 1 : nl].split(b" "):
             if not tok:
                 continue
@@ -102,41 +95,62 @@ def parse_y4m(payload) -> tuple:
                 num, den = int(a), int(b)
             elif key == b"C":
                 cspace = val.decode("ascii", "replace")
-        if not w or not h or w <= 0 or h <= 0 or not num or not den:
-            return none6
-        if not cspace.startswith("420"):
-            return none6
-        if w % 2 or h % 2:
-            return none6
-        n_frames = luma = 0
-        for _, y in _y4m_luma_planes(buf, w, h):
-            luma += int(y.sum(dtype=np.int64))
-            n_frames += 1
-        if n_frames == 0:
-            return none6
-        return (w, h, num, den, n_frames, luma)
-    except Exception:
-        return none6
+    except ValueError:
+        return None
+    if not w or not h or w <= 0 or h <= 0 or not num or not den:
+        return None
+    if not cspace.startswith("420") or w % 2 or h % 2:
+        return None
+    return w, h, num, den
 
 
-def _y4m_luma_planes(buf: bytes, w: int, h: int):
-    """The one Y4M frame walk: yield ``(frame_index, luma plane)`` for
-    every ``FRAME`` record after the parameter line, the plane a zero-copy
-    uint8 view of ``w*h`` bytes. A record without the ``FRAME`` marker or
-    a truncated frame raises ``ValueError``; :func:`parse_y4m` turns that
-    into NULL metadata, and the kernels walk only payloads it parsed."""
+def _y4m_frames(payload) -> tuple | None:
+    """The one Y4M walk: read the header once and walk the ``FRAME``
+    records once, returning ``(header, planes)`` with every frame's luma
+    plane as a zero-copy uint8 view of ``w*h`` bytes — or None when the
+    payload is NULL, the header does not parse, or a record lacks the
+    ``FRAME`` marker or is truncated. The walk completes before anything
+    is returned, so a payload cut mid-frame yields no frames at all."""
     import numpy as np
 
+    if payload is None:
+        return None
+    buf = bytes(payload)
+    hdr = _y4m_header(buf)
+    if hdr is None:
+        return None
+    w, h = hdr[0], hdr[1]
     frame_bytes = w * h + 2 * ((w // 2) * (h // 2))
+    planes = []
     pos = buf.find(b"\n") + 1
-    f = 0
     while pos < len(buf):
         fnl = buf.find(b"\n", pos)
         if buf[pos : pos + 5] != b"FRAME" or fnl < 0 or fnl + 1 + frame_bytes > len(buf):
-            raise ValueError(f"malformed Y4M frame record at byte {pos}")
-        yield f, np.frombuffer(buf, dtype=np.uint8, count=w * h, offset=fnl + 1)
-        f += 1
+            return None
+        planes.append(np.frombuffer(buf, dtype=np.uint8, count=w * h, offset=fnl + 1))
         pos = fnl + 1 + frame_bytes
+    return hdr, planes
+
+
+def parse_y4m(payload) -> tuple:
+    """VENDORED pure-stdlib Y4M parser: (width, height, fps_num, fps_den,
+    n_frames, luma_sum) — the total Σ of all frames' luma bytes as int64.
+    Handles any token order on the parameter line, FRAME lines carrying
+    their own parameters (``FRAME<params>\\n`` is legal Y4M), and C420
+    colorspace variants (see :func:`_y4m_header`). Odd dimensions under
+    420 subsampling, non-420 colorspaces, truncated frames, or a malformed
+    header yield all-None — NULL metadata, never a job abort."""
+    import numpy as np
+
+    try:
+        walked = _y4m_frames(payload)
+    except Exception:
+        walked = None
+    if walked is None or not walked[1]:
+        return (None, None, None, None, None, None)
+    hdr, planes = walked
+    luma = sum(int(y.sum(dtype=np.int64)) for y in planes)
+    return (*hdr, len(planes), luma)
 
 
 def sample_video_frames(
@@ -154,13 +168,11 @@ def sample_video_frames(
         for pdf in it:
             ids, fidx, lsum, lmean = [], [], [], []
             for d, p in zip(pdf[id_col], pdf["payload"]):
-                if p is None:
+                walked = _y4m_frames(p)
+                if walked is None:
                     continue
-                buf = bytes(p)
-                w, h = parse_y4m(buf)[:2]
-                if w is None:
-                    continue
-                for f, y in _y4m_luma_planes(buf, w, h):
+                (w, h, _, _), planes = walked
+                for f, y in enumerate(planes):
                     if f % stride == 0:
                         s = int(y.sum(dtype=np.int64))
                         ids.append(d)
@@ -208,14 +220,12 @@ def video_scene_cuts(
         for pdf in it:
             ids, fa, sads, mads, cuts = [], [], [], [], []
             for d, p in zip(pdf[id_col], pdf["payload"]):
-                if p is None:
+                walked = _y4m_frames(p)
+                if walked is None:
                     continue
-                buf = bytes(p)
-                w, h = parse_y4m(buf)[:2]
-                if w is None:
-                    continue
+                (w, h, _, _), planes = walked
                 prev = None
-                for f, plane in _y4m_luma_planes(buf, w, h):
+                for f, plane in enumerate(planes):
                     y = plane.astype(np.int64)
                     if prev is not None:
                         sad = int(np.abs(y - prev).sum())

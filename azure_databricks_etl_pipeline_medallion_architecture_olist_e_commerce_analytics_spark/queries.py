@@ -660,24 +660,24 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, md5 hash family — the full LSH output
-    (signature → banding → exactly-once candidates → exact-Jaccard verify)
-    is value-verified against a DuckDB oracle that replicates the signature
-    byte-for-byte. Same plan shape as the murmur3 scale path."""
+    """MinHash+LSH near-dup pairs — the full LSH output (signature →
+    banding → exactly-once candidates → exact-Jaccard verify) is
+    value-verified against a DuckDB oracle that replicates the md5
+    signature byte-for-byte."""
     from .operators.dedup import minhash_lsh_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs, threshold=0.8, hash_family="md5")
+    return minhash_lsh_pairs(docs, threshold=0.8)
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash banded near-dup pairs, md5 hash family — 60-bit fingerprints
-    a DuckDB oracle reproduces bit-for-bit, so banding + hamming verify are
-    value-checked end-to-end. Same plan shape as the xxhash64 scale path."""
+    """SimHash banded near-dup pairs — 60-bit md5 fingerprints a DuckDB
+    oracle reproduces bit-for-bit, so banding + hamming verify are
+    value-checked end-to-end."""
     from .operators.dedup import simhash_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_pairs(docs, max_hamming=8, hash_family="md5")
+    return simhash_pairs(docs, max_hamming=8)
 
 
 def q_text_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1032,10 +1032,10 @@ def q_bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes, true matches (exact broadcast semi-check), false positives,
     and the FP share of passed rows in integer ppm. The no-false-negative
     contract is value-pinned: n_false_pos = n_pass − n_true only equals
-    the oracle's count if the bloom admitted every true match. The md5
-    hash family is exactly replayable in DuckDB (``('0x' ||
-    substr(md5(k || '#i'), 1, 15))::BIGINT % 8192``) — production swaps
-    in xxhash64, same plan (the documented md5-vs-xxhash trade).
+    the oracle's count if the bloom admitted every true match. The hash
+    family is md5 because DuckDB replays it exactly (``('0x' ||
+    substr(md5(k || '#i'), 1, 15))::BIGINT % 8192``), so the oracle
+    recomputes every bit.
 
     Scale: build aggregates to ≤ m distinct positions map-side and
     collects BOUNDED BY m (codebook discipline); probe cost is two md5s
@@ -1162,10 +1162,10 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: one tokenize pass → rolling-window explode (sequence/slice —
     zero Python), ONE map-side-combined count per distinct window string,
     one equi-join back on the window, one per-doc aggregate. At 100 TB
-    the window strings would hash to int64 (xxhash64) before the shuffle
-    to cut exchange bytes ~8×; the value-oracled form keeps the strings
-    so DuckDB can replay them (the md5-vs-xxhash trade the minhash family
-    documents). Output is O(docs); dup share in exact integer ppm."""
+    the window strings hash to int64 (xxhash64) before the shuffle to cut
+    exchange bytes ~8× — :func:`q_substring_dedup_hashed`; this form keeps
+    the strings, which DuckDB replays directly. Output is O(docs); dup
+    share in exact integer ppm."""
     docs = spread_partitions(load_table(spark, sf_dir, "documents"))
     toks = docs.select(
         "doc_id", F.split(F.trim("text"), r"\s+").alias("w")
@@ -1208,8 +1208,8 @@ def q_substring_dedup_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode and shuffle, so the exchange carries 8 bytes per window
     instead of the ~60-byte gram string (~8× fewer exchange bytes — the
     dominant linear cost of the string form, whose 10× ratio sits at 3.2×
-    in the text explode+join band). Same md5-vs-xxhash trade the minhash
-    family records: the hash is not SQL-replayable, but the OUTPUT is —
+    in the text explode+join band). DuckDB cannot replay xxhash64, but
+    the OUTPUT does not depend on it —
     (doc_id, n_windows, n_dup_windows, dup_ppm) equals the string form
     exactly unless two distinct grams collide at 64 bits (probability
     ~n²/2⁶⁵; empirically zero on the testdata, pinned by a unit asserting
@@ -1454,7 +1454,6 @@ def q_embedding_dup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         bits_per_band=4,
         num_bands=24,
         query_filter=F.col("vec_id") < 200,
-        plane_family="md5",
     )
 
 
@@ -1655,13 +1654,13 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing (rolling k-gram hash + window-min) document fingerprints,
-    md5 hash family — gram hashes and window selection value-verified
-    against a DuckDB oracle. Same plan shape as the xxhash64 scale path."""
+    """Winnowing (rolling k-gram hash + window-min) document fingerprints —
+    md5 gram hashes and window selection value-verified against a DuckDB
+    oracle, which replays md5."""
     from .operators.textops import winnow_fingerprints
 
     docs = load_table(spark, sf_dir, "documents")
-    return winnow_fingerprints(docs, k=5, w=4, hash_family="md5")
+    return winnow_fingerprints(docs, k=5, w=4)
 
 
 def q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1730,16 +1729,14 @@ def q_containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directional near-containment dedup (round-7): doc A mostly-inside
     doc B via the winnowing fingerprint inverted index — the superset/
     subset pass symmetric Jaccard misses (a short doc quoted inside a long
-    one has low Jaccard but containment ≈ 1). md5 hash family so the
-    fingerprints are value-oracle-able; containment emitted as exact
+    one has low Jaccard but containment ≈ 1). The fingerprints are md5
+    gram hashes, which DuckDB replays, so they are value-oracle-able; containment emitted as exact
     integer ppm. Stop-fingerprints (df > 256) are dropped BEFORE the
     self-join (the inverted-index twin of the LSH bucket cap)."""
     from .operators.textops import containment_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    return containment_pairs(
-        docs, k=5, w=4, threshold_ppm=600_000, max_df=256, hash_family="md5"
-    )
+    return containment_pairs(docs, k=5, w=4, threshold_ppm=600_000, max_df=256)
 
 
 def q_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4483,14 +4480,9 @@ def q_kcore_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Deterministic by construction (synchronous rounds, integer degrees —
     no tie-breaking needed at all), so the oracle is the same 3 rounds
-    unrolled as chained CTEs in DuckDB: exact integer equality. MODE:
-    this catalog query deliberately runs the FIXED-ROUNDS form
-    (``until_fixpoint=False``) — a static SQL oracle cannot unroll a
-    data-dependent convergence depth; the engine's
-    ``until_fixpoint=True`` mode (early-exit on a zero-removal round,
-    at which point survivors are the exact Seidman k-core) is pinned
-    against a run-to-convergence reference in
-    tests/test_operators.py / test_properties.py instead.
+    unrolled as chained CTEs in DuckDB: exact integer equality (the
+    round count is fixed because a static SQL oracle cannot unroll a
+    data-dependent convergence depth).
 
     Scale shape: one map-side-combined degree aggregate + two left-semi
     survivor joins per round against the localCheckpoint-ed edge list;
@@ -6017,7 +6009,7 @@ def q_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_target = docs.agg(F.floor(F.count(F.lit(1)) / 2).cast("long").alias("n_target"))
     w = weights.crossJoin(F.broadcast(tot)).crossJoin(F.broadcast(n_target))
     # multiplicative integer hash -> bucket in [0, 2^31); exact in int64 at
-    # test-scale ids (production swaps in xxhash64 — same plan, seeded)
+    # test-scale ids, and DuckDB replays it (it could not replay xxhash64)
     bucket = F.pmod(F.col("doc_id") * F.lit(2654435761), F.lit(2147483648))
     # keep probability p_s = min(1, N * u_s / (U * c_s)); decided as the
     # division-free integer comparison  bucket·U·c_s < N·u_s·2^31
@@ -6232,8 +6224,8 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: everything before the final hash aggregate is map-side — the
     slice filter pushes to the scan, tokens explode and hash per row
-    (md5 here for cross-engine verifiability; production swaps xxhash64,
-    same plan), and the (doc, bucket) aggregate is the only shuffle.
+    (md5, because DuckDB replays it and so verifies every bucket), and
+    the (doc, bucket) aggregate is the only shuffle.
     The 64-bucket width is a parameter, not a plan property.
     """
     docs = load_table(spark, sf_dir, "documents").filter(

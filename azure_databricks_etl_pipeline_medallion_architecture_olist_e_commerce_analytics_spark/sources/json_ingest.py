@@ -64,13 +64,3 @@ class JsonlIngestor(CsvIngestor):
             .schema(read_schema)
             .json(new)
         )
-
-
-def ingest_jsonl_append(
-    spark: SparkSession,
-    source_dir: str,
-    state_dir: str,
-    target_path: str,
-) -> int:
-    """One bronze-ingestion run over a JSONL landing directory."""
-    return JsonlIngestor(source_dir, state_dir).append(spark, target_path)

@@ -838,6 +838,61 @@ def test_tool_imports_resolve():
     assert not missing, missing
 
 
+def test_tool_calls_pass_accepted_keywords():
+    """Every call in ``tools/*.py`` and ``bench.py`` to a function or class
+    imported from the package (or from ``bench``) binds to its
+    ``inspect.signature``: only keyword names it accepts, no more
+    positional arguments than it takes. Removing an option then breaks
+    this test rather than a tool run. Parses with ``ast``; starts no
+    Spark."""
+    import ast
+    import glob
+    import importlib
+    import inspect
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = Pipeline.__module__.split(".")[0]
+    paths = sorted(glob.glob(os.path.join(root, "tools", "*.py")))
+    paths.append(os.path.join(root, "bench.py"))
+    checked, stale = 0, []
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        imported: dict[str, list] = {}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.ImportFrom) or node.level:
+                continue
+            if node.module.split(".")[0] not in (pkg, "bench"):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                obj = getattr(mod, alias.name, None)
+                if callable(obj):
+                    imported.setdefault(alias.asname or alias.name, []).append(obj)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or not isinstance(node.func, ast.Name):
+                continue
+            if node.func.id not in imported:
+                continue
+            if any(isinstance(a, ast.Starred) for a in node.args):
+                continue
+            args = [None] * len(node.args)
+            kwargs = {k.arg: None for k in node.keywords if k.arg is not None}
+            checked += 1
+            errors = []
+            for obj in imported[node.func.id]:
+                try:
+                    inspect.signature(obj).bind_partial(*args, **kwargs)
+                    break
+                except TypeError as e:
+                    errors.append(str(e))
+            else:
+                where = f"{os.path.relpath(path, root)}:{node.lineno}"
+                stale.append(f"{where} {node.func.id}: {'; '.join(errors)}")
+    assert checked > 20
+    assert not stale, stale
+
+
 def test_kernel_queries_run_from_outside_the_repository(spark, tmp_path):
     """Python-worker kernels ship by value: a driver started in another
     working directory, with ``PYTHONPATH`` unset and the repository only

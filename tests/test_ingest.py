@@ -178,18 +178,22 @@ def test_jsonl_incremental_ingest_with_rescue(spark, tmp_path):
 
 def test_jsonl_append_run(spark, tmp_path):
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.sources.json_ingest import (
-        ingest_jsonl_append,
+        JsonlIngestor,
     )
 
     src = tmp_path / "landing"
     state = tmp_path / "state"
     tgt = tmp_path / "bronze_tbl"
     src.mkdir()
+
+    def run():
+        return JsonlIngestor(str(src), str(state)).append(spark, str(tgt))
+
     (src / "a.jsonl").write_text('{"k": 1}\n{"k": 2}\n')
-    assert ingest_jsonl_append(spark, str(src), str(state), str(tgt)) == 1
+    assert run() == 1
     (src / "b.jsonl").write_text('{"k": 3}\n')
-    assert ingest_jsonl_append(spark, str(src), str(state), str(tgt)) == 1
-    assert ingest_jsonl_append(spark, str(src), str(state), str(tgt)) == 0
+    assert run() == 1
+    assert run() == 0
     df = spark.read.parquet(str(tgt))
     assert sorted(r.k for r in df.collect()) == [1, 2, 3]
     assert "_ingested_at" in df.columns

@@ -147,10 +147,16 @@ def test_ivf_nprobe_recall_monotone_and_exact_at_full(spark):
 
 
 def test_ivf_nprobe_rejects_out_of_range(spark):
+    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.similarity import (
+        ivfpq_residual_topk,
+        ivfpq_topk,
+    )
+
     emb = load_table(spark, SF_SMALL, "embeddings")
-    for bad in (0, 9):
-        with pytest.raises(ValueError, match="nprobe"):
-            ivf_topk(emb, k=3, n_centroids=8, nprobe=bad)
+    for op in (ivf_topk, ivfpq_topk, ivfpq_residual_topk):
+        for bad in (0, 9):
+            with pytest.raises(ValueError, match="nprobe"):
+                op(emb, k=3, n_centroids=8, nprobe=bad)
 
 
 def _planted_cluster_frame(spark, n_clusters=4, per_cluster=40, dim=64):
@@ -635,42 +641,6 @@ def test_multimodal_frames_fanout(spark):
         assert len(g) == n_frames
         assert sorted(g["frame_index"]) == list(range(n_frames))
         assert (g["frame_offset"] == g["frame_index"] * 1024).all()
-
-
-def test_kmeans_centroids_shape_and_determinism(spark):
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.similarity import (
-        kmeans_centroids,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    c1 = kmeans_centroids(emb, k=8, iterations=2).collect()
-    c2 = kmeans_centroids(emb, k=8, iterations=2).collect()
-    assert len(c1) == 8
-    assert all(len(r.centroid_vec) == 64 for r in c1)
-    assert [r.centroid_vec for r in sorted(c1, key=lambda r: r.centroid_id)] == [
-        r.centroid_vec for r in sorted(c2, key=lambda r: r.centroid_id)
-    ]
-
-
-def test_ivf_with_kmeans_refinement_recall(spark):
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-    )
-
-    emb = load_table(spark, SF_SMALL, "embeddings")
-    flt = F.col("vec_id") < 50
-    exact = {(r.query_id, r.nbr_id) for r in brute_force_topk(emb, k=3, query_filter=flt).collect()}
-    approx = {
-        (r.query_id, r.nbr_id)
-        for r in ivf_topk(
-            emb, k=3, n_centroids=8, query_filter=flt, kmeans_iterations=2
-        ).collect()
-    }
-    # single-probe IVF: every hit must be a true pair's id (precision on the
-    # candidate set), recall bounded below loosely
-    recall = len(approx & exact) / len(exact)
-    assert recall >= 0.2, f"kmeans-IVF recall collapsed: {recall:.2f}"
 
 
 def test_sketch_distinct_error_bound(spark):
@@ -2127,7 +2097,7 @@ def test_ivfpq_topk_contract_and_cell_consistency(spark):
     no self-pairs, and the neighbor set is a subset of what PQ-exhaustive
     would emit for pairs within the same cell."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.similarity import (
-        ivf_assign,
+        ivf_assign_ranked,
         ivfpq_topk,
     )
 
@@ -2137,9 +2107,15 @@ def test_ivfpq_topk_contract_and_cell_consistency(spark):
     assert rows
     cells = {
         r.vec_id: r.centroid_id
-        for r in ivf_assign(
-            emb.filter(F.col("embedding").isNotNull()), "vec_id", "embedding", 16
-        ).collect()
+        for r in ivf_assign_ranked(
+            emb.filter(F.col("embedding").isNotNull()),
+            "vec_id",
+            "embedding",
+            16,
+            max_rank=1,
+        )
+        .drop("probe_rank")
+        .collect()
     }
     per_q = {}
     for r in rows:
@@ -2289,11 +2265,14 @@ def test_brute_force_topk_exclude_group_mines_hard_negatives(spark):
 def test_ivf_assign_shared_centroids_match_own_seeding(spark):
     """ivfpq_topk rebuilds the coarse centroids from the collected PQ seed
     rows instead of re-scanning the corpus; the cell assignment must be
-    IDENTICAL to ivf_assign's own first-n-by-id seeding (float32 values
-    round-trip bit-exactly through Python doubles)."""
+    IDENTICAL to ivf_assign_ranked's own first-n-by-id seeding (float32
+    values round-trip bit-exactly through Python doubles)."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.similarity import (
-        ivf_assign,
+        ivf_assign_ranked,
     )
+
+    def ivf_assign(df, **kw):
+        return ivf_assign_ranked(df, max_rank=1, **kw).drop("probe_rank")
 
     rows = [
         (i, [float(((i * 37 + d * 11) % 97) - 48) / 7.0 for d in range(8)])
@@ -2723,64 +2702,6 @@ def test_kcore_peel_invalid_args_raise(spark):
         kcore_peel(edges, k=2, rounds=0)
 
 
-def test_kcore_peel_nonsymmetric_mode_keeps_dst_only_nodes(spark):
-    """symmetric=False on a directed (non-symmetrized) edge list: nodes
-    appearing only as dst must surface with degree 0 (peeled round 1 for
-    k>=1) instead of silently vanishing — the failure mode the default
-    symmetric contract would hit on this input."""
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.graph import (
-        kcore_peel,
-    )
-
-    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    got = {
-        r["node"]: (r["peeled_round"], r["degree"])
-        for r in kcore_peel(edges, k=1, rounds=2, symmetric=False).collect()
-    }
-    # node 3 is dst-only: degree 0, peeled round 1. Node 2 then loses its
-    # (2,3) edge and peels in round 2; node 1 survives with degree 1.
-    assert got == {1: (0, 1), 2: (2, 0), 3: (1, 0)}
-    # the symmetric default on the same input drops node 3 entirely (the
-    # documented contract violation this parameter exists to avoid)
-    sym = {
-        r["node"]
-        for r in kcore_peel(edges, k=1, rounds=2).collect()
-    }
-    assert 3 not in sym
-
-
-def test_kcore_peel_fixpoint_cap_falls_back_to_fixed_semantics(spark):
-    """until_fixpoint=True whose cap fires BEFORE convergence must equal
-    the fixed-rounds output (survivors = "not yet peeled" approximation):
-    a 6-chain at k=2 peels endpoints inward one layer per round, so
-    rounds=2 under the cap is still mid-peel (3 and 4 wrongly "survive")
-    and both modes must agree on that approximation."""
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.graph import (
-        kcore_peel,
-    )
-
-    half = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6)]
-    e = half + [(y, x) for x, y in half]
-    edges = spark.createDataFrame(e, "src long, dst long")
-    fixed = {
-        r["node"]: (r["peeled_round"], r["degree"])
-        for r in kcore_peel(edges, k=2, rounds=2).collect()
-    }
-    capped = {
-        r["node"]: (r["peeled_round"], r["degree"])
-        for r in kcore_peel(edges, k=2, rounds=2, until_fixpoint=True).collect()
-    }
-    assert capped == fixed
-    # the capped approximation leaves 3 and 4 as unpeeled survivors
-    assert capped[3][0] == 0 and capped[4][0] == 0
-    # and with the cap lifted, fixpoint mode peels the whole chain
-    converged = {
-        r["node"]: (r["peeled_round"], r["degree"])
-        for r in kcore_peel(edges, k=2, rounds=10, until_fixpoint=True).collect()
-    }
-    assert all(pr > 0 for pr, _ in converged.values())
-
-
 def test_kcore_peel_k_zero_keeps_everything(spark):
     """k=0 peels nothing: every node survives with its true degree."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.graph import (
@@ -2900,6 +2821,7 @@ def test_bloom_bit63_word_wraparound(spark):
     int64 word literal and still test positive (the unsigned→signed
     wrap), and positions in other words must not leak across words."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.bloom import (
+        BloomFilter,
         bloom_prune,
     )
 
@@ -2916,10 +2838,8 @@ def test_bloom_bit63_word_wraparound(spark):
         r["k"]: r["passes_bloom"]
         for r in bloom_prune(
             probe.filter(F.col("k").isin([hit63, miss])),
-            [63],
+            BloomFilter((63,), m_bits=128, k_hashes=1),
             "k",
-            m_bits=128,
-            k_hashes=1,
         ).collect()
     }
     assert got[hit63] is True and got[miss] is False
@@ -2930,6 +2850,7 @@ def test_bloom_fp_rate_sane_and_invalid_args(spark):
     be far below saturation; invalid parameters raise."""
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.bloom import (
         MAX_LITERAL_BITS,
+        BloomFilter,
         bloom_build_positions,
         bloom_prune,
     )
@@ -2943,8 +2864,6 @@ def test_bloom_fp_rate_sane_and_invalid_args(spark):
         .count()
     )
     assert n_fp < 25  # expected ~0.06% of 500; generous bound
-    # redundant overrides are allowed only when they MATCH the build
-    bloom_prune(probe, bloom, "k", m_bits=4096, k_hashes=2)
     with pytest.raises(ValueError):
         bloom_build_positions(build, "k", m_bits=100)  # not multiple of 64
     with pytest.raises(ValueError):
@@ -2952,24 +2871,20 @@ def test_bloom_fp_rate_sane_and_invalid_args(spark):
     with pytest.raises(ValueError):
         bloom_build_positions(build, "k", m_bits=4096, k_hashes=0)
     with pytest.raises(ValueError):
-        bloom_prune(probe, [4096], "k", m_bits=4096)  # position out of range
-    # the build/probe lockstep contract is now ENFORCED, not documented:
-    # a probe-side k_hashes or m_bits differing from the build's raises
-    # instead of silently manufacturing false negatives
-    with pytest.raises(ValueError, match="k_hashes"):
-        bloom_prune(probe, bloom, "k", k_hashes=3)
-    with pytest.raises(ValueError, match="m_bits"):
-        bloom_prune(probe, bloom, "k", m_bits=8192)
+        # position out of range
+        bloom_prune(probe, BloomFilter((4096,), m_bits=4096, k_hashes=2), "k")
 
 
 def test_video_scene_cuts_planted_cut_and_corrupt(spark):
     """A hand-assembled 3-frame Y4M — frame 0 ≈ frame 1 (SAD w·h, every
     pixel off by one) and frame 2 a hard cut (|Δ|=200 everywhere) — must
     yield exactly two pair rows with the planted SAD/MAD and only the
-    second flagged; corrupt payloads emit zero rows."""
+    second flagged; corrupt payloads emit zero rows, including one cut
+    off mid-way through its third frame (from both video kernels)."""
     import numpy as np
 
     from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.video import (
+        sample_video_frames,
         video_scene_cuts,
     )
 
@@ -2984,14 +2899,15 @@ def test_video_scene_cuts_planted_cut_and_corrupt(spark):
             + bytes([20]) * c
         )
 
-    buf = (
-        f"YUV4MPEG2 W{w} H{h} F24:1 Ip A1:1 C420jpeg\n".encode()
-        + frame(50)
-        + frame(51)
-        + frame(251)
-    )
+    header = f"YUV4MPEG2 W{w} H{h} F24:1 Ip A1:1 C420jpeg\n".encode()
+    buf = header + frame(50) + frame(51) + frame(251)
+    truncated = header + frame(50) + frame(51) + frame(251)[: 6 + wh // 2]
     df = spark.createDataFrame(
-        [(1, bytearray(buf)), (2, bytearray(b"not a video"))],
+        [
+            (1, bytearray(buf)),
+            (2, bytearray(b"not a video")),
+            (3, bytearray(truncated)),
+        ],
         "doc_id long, payload binary",
     )
     rows = sorted(
@@ -3003,6 +2919,10 @@ def test_video_scene_cuts_planted_cut_and_corrupt(spark):
     assert rows[0].mad_milli == 1000 and rows[0].is_cut is False
     assert rows[1].frame_a == 1 and rows[1].sad == 200 * wh
     assert rows[1].mad_milli == 200000 and rows[1].is_cut is True
+    sampled = sample_video_frames(df, stride=1).collect()
+    assert sorted((r.doc_id, r.frame_index) for r in sampled) == [
+        (1, 0), (1, 1), (1, 2)
+    ]
 
 
 def test_video_scene_cuts_matches_plane_formula(spark):

@@ -537,73 +537,6 @@ def test_kcore_peel_matches_reference_on_random_graphs(
 
 @given(
     seed=st.integers(min_value=0, max_value=10**9),
-    n_nodes=st.integers(min_value=2, max_value=12),
-    k=st.integers(min_value=1, max_value=4),
-)
-@settings(max_examples=8, deadline=None)
-def test_kcore_peel_fixpoint_matches_converged_reference(spark, seed, n_nodes, k):
-    """until_fixpoint=True with a generous cap equals a run-to-convergence
-    synchronous-peeling reference: every peeled node carries its true
-    peel round, and the peeled_round=0 survivors are the EXACT Seidman
-    k-core (not the fixed-budget "not yet peeled" approximation). On an
-    n-node graph convergence needs < n rounds, so cap=n_nodes+2 always
-    converges and the early-exit path is the one exercised."""
-    import random
-
-    from azure_databricks_etl_pipeline_medallion_architecture_olist_e_commerce_analytics_spark.operators.graph import (
-        kcore_peel,
-    )
-
-    rng = random.Random(seed)
-    half = sorted(
-        {
-            (a, b)
-            for a in range(n_nodes)
-            for b in range(a + 1, n_nodes)
-            if rng.random() < 0.45
-        }
-    )
-    if not half:
-        half = [(0, 1)]
-    e = half + [(b, a) for a, b in half]
-
-    # reference: synchronous peel RUN TO CONVERGENCE (no round cap)
-    edges = set(e)
-    alive = {a for a, _ in edges}
-    expect = {}
-    r = 0
-    while True:
-        r += 1
-        deg = {n: 0 for n in alive}
-        for a, b in edges:
-            deg[a] += 1
-        dead = {n for n in alive if deg[n] < k}
-        if not dead:
-            for n in alive:
-                expect[n] = (0, deg[n])
-            break
-        for n in dead:
-            expect[n] = (r, deg[n])
-        alive -= dead
-        edges = {(a, b) for a, b in edges if a in alive and b in alive}
-        if not alive:
-            break
-
-    df = spark.createDataFrame(e, "src long, dst long")
-    got = {
-        row["node"]: (row["peeled_round"], row["degree"])
-        for row in kcore_peel(
-            df, k=k, rounds=n_nodes + 2, until_fixpoint=True
-        ).collect()
-    }
-    assert got == expect
-    # survivors form the true k-core: every survivor's reported degree
-    # (its degree within the survivor-induced subgraph) is >= k
-    assert all(d >= k for n, (pr, d) in got.items() if pr == 0)
-
-
-@given(
-    seed=st.integers(min_value=0, max_value=10**9),
     n_keys=st.integers(min_value=1, max_value=30),
     depth=st.sampled_from([1, 2, 4]),
     width=st.sampled_from([16, 64, 256]),
